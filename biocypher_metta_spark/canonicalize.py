@@ -10,7 +10,8 @@ Implementation: iterative label propagation with plain DataFrame joins
 (no GraphFrames dependency). Alias chains are short (id systems form
 star-shaped components around one canonical accession), so the loop
 converges in <= `max_iter` rounds; each round is one shuffle on the node
-key. Deterministic canonical pick = lexicographic min id in the
+key; a component it cannot cover raises instead of returning partial
+labels. Deterministic canonical pick = lexicographic min id in the
 component. Hub safety: membership is keyed by node id (unique), so the
 join keys are skew-free; the final groupBy aggregates componet sizes with
 map-side partial aggregation.
@@ -30,7 +31,9 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
 
     Label propagation: every node starts labeled with itself; each round
     adopts the min label among itself and its neighbors; stop when no
-    label changes (checked with a cheap agg) or max_iter.
+    label changes (checked with a cheap agg). Raises RuntimeError if
+    labels still change in round `max_iter`: a component whose diameter
+    exceeds the rounds would otherwise get split canonical ids.
     """
     sym = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
            .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
@@ -45,6 +48,7 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
               .union(sym.select(F.col("b").alias("id")))
               .distinct()
               .withColumn("component", F.col("id")))
+    converged = False
     for _ in range(max_iter):
         neigh = (sym.join(labels, sym["b"] == labels["id"])
                  .select(F.col("a").alias("id"),
@@ -63,7 +67,12 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
         labels = new_labels.select(
             "id", F.coalesce("newc", "component").alias("component"))
         if changed == 0:
+            converged = True
             break
+    if not converged:
+        raise RuntimeError(
+            f"connected_components did not converge within {max_iter} "
+            "label-propagation rounds (one hop per round); raise max_iter")
     return labels
 
 

@@ -8,6 +8,13 @@ F.broadcast — same semantics, but the big side streams instead of
 pulling rows through Python. For dimensions that outgrow broadcast
 (dbsnp rsid<->pos at ~38M rows), pass broadcast=False and the join
 falls back to shuffle with AQE deciding the physical strategy.
+
+Every driver-side frame (these maps and the linking dictionaries) is
+built by `local_frame` from an Arrow table. Below
+`spark.sql.execution.arrow.localRelationThreshold` (48 MB by default)
+it plans as a `LocalTableScan` held in the plan itself, so a join
+against it runs no job to rebuild the rows; above it, as an
+Arrow-backed scan. Neither carries pickled Python rows.
 """
 
 from __future__ import annotations
@@ -15,6 +22,7 @@ from __future__ import annotations
 import pickle
 from pathlib import Path
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -24,17 +32,28 @@ def load_pickle_map(path: str | Path) -> dict:
         return pickle.load(f)
 
 
+def local_frame(spark: SparkSession, columns: dict[str, list],
+                schema: str | None = None) -> DataFrame:
+    """Driver-side columns -> DataFrame through one Arrow table.
+
+    `schema` (DDL, same column names) pins the types; without it they
+    are inferred per column the way row inference does it. Arrow keeps
+    ints with None as int64 (a pandas route turns them into float64)."""
+    return spark.createDataFrame(pa.table(columns), schema)
+
+
 def dim_from_map(spark: SparkSession, mapping: dict,
                  key_col: str = "key", val_col: str = "value") -> DataFrame:
     """dict -> 2-col DataFrame (values stringified; nested dicts preserved
     as columns when the values are {chr,pos} style)."""
     items = sorted(mapping.items())
+    keys = [str(k) for k, _ in items]
     if items and isinstance(items[0][1], dict):
         sub_keys = sorted(items[0][1].keys())
-        rows = [(str(k), *[v.get(sk) for sk in sub_keys]) for k, v in items]
-        return spark.createDataFrame(rows, [key_col, *sub_keys])
-    rows = [(str(k), str(v)) for k, v in items]
-    return spark.createDataFrame(rows, [key_col, val_col])
+        return local_frame(spark, {
+            key_col: keys, **{sk: [v.get(sk) for _, v in items] for sk in sub_keys}})
+    return local_frame(spark, {key_col: keys, val_col: [str(v) for _, v in items]},
+                       f"`{key_col}` string, `{val_col}` string")
 
 
 def dim_from_pickle(spark: SparkSession, path: str | Path,

@@ -36,17 +36,24 @@ def write_partitioned(df: DataFrame, path: str,
 def partition_manifest(df: DataFrame, partition_by: list[str],
                        content_cols: list[str] | None = None) -> list[dict]:
     """Per-partition lineage rows: key -> row count + order-insensitive
-    content hash (xor of row xxhashes — distributed, no sort)."""
+    content hash (sum of row xxhashes mod 2^64 — distributed, no sort)."""
     cols = content_cols or [c for c in df.columns if c not in partition_by]
     row_hash = F.xxhash64(*[F.coalesce(F.col(c).cast("string"), F.lit("\x00"))
                             for c in cols])
-    # BIT_XOR of row hashes is order-insensitive and associative -> a
-    # stable distributed content fingerprint with map-side partial agg
+    # A sum, unlike a xor, does not cancel equal rows in pairs. It runs as
+    # two long sums of the hash's 32-bit halves, which ANSI mode cannot
+    # overflow below 2^31 rows per partition; the halves recombine below.
     agg = (df.withColumn("_rh", row_hash)
            .groupBy(*partition_by)
            .agg(F.count("*").alias("n_rows"),
-                F.expr("bit_xor(_rh)").alias("content_hash")))
-    return [r.asDict() for r in agg.collect()]
+                F.sum(F.col("_rh").bitwiseAND(0xFFFFFFFF)).alias("_lo"),
+                F.sum(F.shiftright("_rh", 32)).alias("_hi")))
+    rows = []
+    for r in agg.collect():
+        d = r.asDict()
+        d["content_hash"] = ((d.pop("_hi") << 32) + d.pop("_lo")) % 2**64
+        rows.append(d)
+    return rows
 
 
 def write_manifest(manifest_rows: list[dict], path: str,

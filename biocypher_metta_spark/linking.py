@@ -5,7 +5,11 @@ lookups from exact keys to free-text mentions.
 
 Design (A+B axes):
 * the dictionary (alias/symbol -> canonical entity id) is a driver-side
-  dict broadcast to executors once (SURVEY §2.3 S11 pattern);
+  dict (SURVEY §2.3 S11 pattern). The UDF path ships it in a Spark
+  broadcast variable; the join path builds it as two frames through
+  `dims.local_frame` — a local relation below Arrow's
+  localRelationThreshold, an Arrow-backed scan above it — that the
+  broadcast joins read without a job to rebuild them;
 * mention detection + scoring runs as ONE Arrow-batched pandas UDF over
   text batches — per-batch an Aho-Corasick-style scan via a token-index
   dict (pure Python over the batch, vectorized at the Spark level; no
@@ -31,6 +35,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from biocypher_metta_spark.dims import local_frame
 
 MENTION_SCHEMA = ArrayType(StructType([
     StructField("mention", StringType()),
@@ -112,10 +118,12 @@ def build_mention_join(spark: SparkSession, dictionary: dict[str, str],
     folded: dict[str, str] = {}
     for k, v in dictionary.items():
         folded.setdefault(k.casefold(), v)
-    edim = spark.createDataFrame(list(exact.items()),
-                                 "surface string, entity_e string")
-    fdim = spark.createDataFrame(list(folded.items()),
-                                 "surface_f string, entity_f string")
+    edim = local_frame(spark, {"surface": list(exact),
+                               "entity_e": list(exact.values())},
+                       "surface string, entity_e string")
+    fdim = local_frame(spark, {"surface_f": list(folded),
+                               "entity_f": list(folded.values())},
+                       "surface_f string, entity_f string")
 
     gram_exprs = []
     for n in range(1, max_ngram + 1):

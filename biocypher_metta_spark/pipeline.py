@@ -92,7 +92,6 @@ def _gencode_transcript(ctx: PipelineContext, **args):
 
 def _gencode_exon(ctx: PipelineContext, **args):
     from biocypher_metta_spark.adapters import gencode
-    from biocypher_metta_spark.sources.gtf import EXON_KEYS
 
     typed, atoms = gencode.exon_nodes(
         ctx.gtf(keys=GENE_KEYS + ["exon_number", "exon_id"]), **args)

@@ -3,11 +3,12 @@ lineage/resume, linking, sinks, dedup/similarity operators."""
 
 from __future__ import annotations
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from biocypher_metta_spark import canonicalize as canon
-from biocypher_metta_spark import lineage, linking, sinks
+from biocypher_metta_spark import dims, lineage, linking, sinks
 from biocypher_metta_spark.adapters import ontology as onto
 from biocypher_metta_spark.operators import dedup as dd
 from biocypher_metta_spark.operators import similarity as sim
@@ -144,6 +145,30 @@ def test_ontology_edges_parity(spark):
 
 
 # --------------------------------------------------------------------------
+# dimensions
+# --------------------------------------------------------------------------
+
+
+def test_dim_from_map_schema_and_rows(spark):
+    """Arrow-built dimensions keep the row-inferred schema and rows: keys
+    and values nullable strings, and an int `pos` with a None stays
+    long (a pandas route would make it double)."""
+    flat = {"ENSP2": "P2", "ENSP1": "P1", "ENSP3": 3}
+    nested = {"rs2": {"chr": "chr1", "pos": 5}, "rs1": {"chr": "chr2", "pos": None},
+              "rs3": {"chr": None, "pos": 2**40}}
+    for mapping, rows, names in [
+        (flat, [("ENSP1", "P1"), ("ENSP2", "P2"), ("ENSP3", "3")], ["key", "value"]),
+        (nested, [("rs1", "chr2", None), ("rs2", "chr1", 5), ("rs3", None, 2**40)],
+         ["key", "chr", "pos"]),
+    ]:
+        got = dims.dim_from_map(spark, mapping)
+        want = spark.createDataFrame(rows, names)
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
+    assert got.schema["pos"].dataType.typeName() == "long"
+
+
+# --------------------------------------------------------------------------
 # canonicalization
 # --------------------------------------------------------------------------
 
@@ -156,6 +181,17 @@ def test_connected_components(spark):
          for r in canon.connected_components(edges).collect()}
     assert m["a"] == m["b"] == m["c"] == "a"
     assert m["d"] == m["e"] == "d"
+
+
+def test_connected_components_raises_when_unconverged(spark):
+    """A chain n0-...-n6 needs 6 label-propagation rounds plus one that
+    changes nothing; 3 rounds must raise, not return split components."""
+    edges = spark.createDataFrame(
+        [(f"n{i}", f"n{i + 1}") for i in range(6)], "src string, dst string")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        canon.connected_components(edges, max_iter=3)
+    comps = {r.component for r in canon.connected_components(edges).collect()}
+    assert comps == {"n0"}
 
 
 def test_canonicalize_nodes(spark):
@@ -213,6 +249,20 @@ def test_manifest_roundtrip(tmp_path, spark):
     assert lineage.failed_partitions(back, {"partitions": rows}) == []
 
 
+def test_manifest_hash_sees_duplicate_rows(spark):
+    """Equal rows must not cancel: {A,A} and {B,B} (equal counts) once
+    both hashed to 0 under a xor of row hashes."""
+    df = spark.createDataFrame(
+        [("p1", "A"), ("p1", "A"), ("p2", "B"), ("p2", "B"), ("p3", "A")],
+        "part string, id string")
+    h = {r["part"]: r for r in lineage.partition_manifest(df, ["part"])}
+    assert h["p1"]["n_rows"] == h["p2"]["n_rows"] == 2
+    assert h["p1"]["content_hash"] != h["p2"]["content_hash"]
+    assert h["p1"]["content_hash"] != 0
+    # the hash is the sum of row hashes mod 2^64: {A,A} is twice {A}
+    assert h["p1"]["content_hash"] == 2 * h["p3"]["content_hash"] % 2**64
+
+
 # --------------------------------------------------------------------------
 # linking
 # --------------------------------------------------------------------------
@@ -247,22 +297,26 @@ def test_mention_join_path_parity(spark):
     multi-word mentions, casefold hits, repeats, and empty strings."""
     dictionary = {"PAK5": "ENSG1", "p21 activated kinase 5": "ENSG1",
                   "SNAP25": "ENSG2", "kinase": "FAM1"}
-    docs = spark.createDataFrame(
-        [("d1", "the PAK5 kinase aka p21 activated kinase 5"),
-         ("d2", "snap25 lowercase mention snap25 repeated"),
-         ("d3", "nothing here"),
-         ("d4", ""),
-         ("d5", "Kinase KINASE kinase")],
-        "doc_id string, value string")
+    docs = spark.createDataFrame(pa.table({
+        "doc_id": ["d1", "d2", "d3", "d4", "d5"],
+        "value": ["the PAK5 kinase aka p21 activated kinase 5",
+                  "snap25 lowercase mention snap25 repeated",
+                  "nothing here", "", "Kinase KINASE kinase"]}))
     detect = linking.build_mention_udf(spark, dictionary, max_ngram=5)
     udf_rows = sorted((r.doc_id, r.mention, r.entity, r.score)
                       for r in linking.link_documents(
                           docs, detect, min_score=0.0).collect())
-    link = linking.build_mention_join(spark, dictionary, max_ngram=5)
+    linked = linking.build_mention_join(spark, dictionary, max_ngram=5)(docs)
     join_rows = sorted((r.doc_id, r.mention, r.entity, r.score)
-                       for r in link(docs).collect())
+                       for r in linked.collect())
     assert join_rows == udf_rows
     assert any(m == "p21 activated kinase 5" for _, m, _, _ in join_rows)
+    # the dictionaries are local relations: no Python-row scan in the plan
+    # (docs is built through Arrow too, so any such scan is a dictionary's)
+    plan = linked._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert not [ln for ln in plan.splitlines()
+                if "Scan ExistingRDD" in ln and "arrow" not in ln], plan
 
 
 # --------------------------------------------------------------------------

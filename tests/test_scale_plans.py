@@ -58,6 +58,10 @@ def test_dimension_join_broadcasts(spark):
     out = dims.lookup_join(big, d, F.col("key2"))
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
+    # the dimension is a local relation: no job rebuilds pickled Python rows
+    assert "LocalTableScan" in plan
+    assert not [ln for ln in plan.splitlines()
+                if "Scan ExistingRDD" in ln and "arrow" not in ln], plan
 
 
 def test_triple_table_partition_pruning(spark, tmp_path):
