@@ -100,25 +100,19 @@ def dedup_nodes(nodes: DataFrame, id_col: str = "id",
 
 
 def canonicalize_nodes(nodes: DataFrame, id_map: DataFrame,
-                       id_col: str = "id", label_col: str = "label",
-                       salt_buckets: int = 0) -> DataFrame:
+                       id_col: str = "id",
+                       label_col: str = "label") -> DataFrame:
     """Rewrite node ids to their canonical representative, then dedup.
 
-    `salt_buckets > 0` pre-aggregates within salted sub-keys before the
-    global dedup — use when a handful of hub ids dominate (north-rule
-    salted aggregation): stage 1 dedups (id, label, salt) partitions,
-    stage 2 merges the few survivors per (id, label).
+    A hub id needs no salting here: the dedup's map-side partial
+    aggregate already collapses its rows to one per map task before
+    the shuffle.
     """
     m = id_map.select(F.col("id").alias("_aid"),
                       F.col("canonical_id").alias("_cid"))
     out = (nodes.join(m, nodes[id_col] == m["_aid"], "left")
            .withColumn(id_col, F.coalesce(F.col("_cid"), F.col(id_col)))
            .drop("_aid", "_cid"))
-    if salt_buckets > 0:
-        salted = out.withColumn("_salt", F.pmod(F.xxhash64(F.col(id_col)),
-                                                F.lit(salt_buckets)))
-        stage1 = salted.dropDuplicates([label_col, id_col, "_salt"]).drop("_salt")
-        return stage1.dropDuplicates([label_col, id_col])
     return dedup_nodes(out, id_col, label_col)
 
 

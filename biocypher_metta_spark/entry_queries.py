@@ -963,10 +963,9 @@ def kg_mention_link_counts(spark, sf_dir):
     the documents text via the fully-JVM join path (linking.
     build_mention_join — n-gram explode + broadcast dictionary join; the
     pandas-UDF path is parity-tested against it in tests), aggregated per
-    entity with salted partial aggregation. The oracle reproduces the
-    1-gram exact-match subset in pure SQL (scoring for unigrams is
-    deterministic: distinct mentions per doc, so counts == docs whose
-    token set contains the surface form)."""
+    entity. The oracle reproduces the 1-gram exact-match subset in pure
+    SQL (scoring for unigrams is deterministic: distinct mentions per
+    doc, so counts == docs whose token set contains the surface form)."""
     from biocypher_metta_spark import linking
 
     d = _docs_par(spark, sf_dir).select(
@@ -974,7 +973,7 @@ def kg_mention_link_counts(spark, sf_dir):
         F.col("text").alias("value"))
     link = linking.build_mention_join(spark, LINK_DICT, max_ngram=1)
     linked = link(d)
-    counts = linking.entity_mention_counts(linked, salt_buckets=8)
+    counts = linking.entity_mention_counts(linked)
     return counts.select("entity", "n_mentions")
 
 

@@ -181,15 +181,11 @@ def link_documents(docs_lines: DataFrame, detect,
     return out.filter(F.col("score") >= min_score)
 
 
-def entity_mention_counts(linked: DataFrame, salt_buckets: int = 16) -> DataFrame:
-    """groupBy(entity) with salted partial aggregation: hub entities
-    (TP53-class) are pre-aggregated within salt buckets before the global
-    combine (north-rule skew handling)."""
-    salted = linked.withColumn(
-        "_salt", F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets)))
-    partial = (salted.groupBy("entity", "_salt")
-               .agg(F.count("*").alias("c"),
-                    F.sum("score").alias("s")))
-    return (partial.groupBy("entity")
-            .agg(F.sum("c").alias("n_mentions"),
-                 F.sum("s").alias("score_sum")))
+def entity_mention_counts(linked: DataFrame) -> DataFrame:
+    """entity, n_mentions, score_sum — one groupBy(entity). Both
+    aggregates are count/sum, so Spark's map-side partial aggregation
+    already collapses a hub entity (TP53-class) to one row per map task
+    before the single shuffle; salting would only add a second one."""
+    return (linked.groupBy("entity")
+            .agg(F.count("*").alias("n_mentions"),
+                 F.sum("score").alias("score_sum")))

@@ -6,6 +6,7 @@ the live Spark schemas they wrap (the SQL wrapper is generated from
 CK_COLUMNS, the Spark wrapper from df.columns — drift = hash mismatch
 the driver would misattribute to the operator)."""
 
+import re
 import sys
 from pathlib import Path
 
@@ -37,6 +38,22 @@ def test_composite_subops_exist_with_columns():
             assert s in eq.QUERIES, (cname, s)
             assert s in eq.CK_COLUMNS, (cname, s)
             assert eq.CK_COLUMNS[s] == sorted(eq.CK_COLUMNS[s])
+
+
+def test_coverage_fold_table_names_registered_gates():
+    """Every name in COVERAGE.md's "fine gate(s) | driver gate" table is
+    a gate in entry_queries.QUERIES, so the doc cannot outlive a gate."""
+    text = (Path(__file__).resolve().parent.parent / "COVERAGE.md").read_text()
+    table = text.split("| fine gate(s) | driver gate |", 1)[1]
+    names = []
+    for line in table.split("\n")[2:]:
+        if not line.startswith("| "):
+            break
+        fine, driver = line[2:].split(" | ")[:2]
+        names += [n.strip() for n in fine.split(",")]
+        names += re.findall(r"`([a-z0-9_]+)`", driver)
+    assert len(names) > 20
+    assert [n for n in names if n not in eq.QUERIES] == []
 
 
 @pytest.mark.parametrize("subname", sorted(eq.CK_COLUMNS))

@@ -206,8 +206,6 @@ def test_canonicalize_nodes(spark):
     out = canon.canonicalize_nodes(nodes, id_map)
     got = sorted(r.id for r in out.collect())
     assert got == ["ENSG1", "ENSG2", "ENSG3"]
-    out_salted = canon.canonicalize_nodes(nodes, id_map, salt_buckets=4)
-    assert sorted(r.id for r in out_salted.collect()) == got
 
 
 # --------------------------------------------------------------------------

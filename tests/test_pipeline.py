@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import subprocess
+import sys
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from biocypher_metta_spark import pipeline
@@ -170,3 +174,33 @@ def test_materialize_empty_result(spark, tmp_path):
                                 "args": {"chr": "chrNOPE"}}])
     m = pipeline.materialize(res, str(tmp_path / "kg"), load_default_registry())
     assert m["nodes"] == []
+
+
+# Imports everything the KG build path uses, in a fresh interpreter so no
+# other test's imports leak in, then prints every loaded module that lies
+# outside that path: the operator library and the driver gate registry.
+_KG_PATH_IMPORTS = """
+import importlib, importlib.util, pkgutil, sys
+sys.path.insert(0, sys.argv[1])
+spec = importlib.util.spec_from_file_location(
+    "build_kg", sys.argv[1] + "/jobs/build_kg.py")
+spec.loader.exec_module(importlib.util.module_from_spec(spec))
+for sub in ("adapters", "sources", "functions"):
+    mod = importlib.import_module("biocypher_metta_spark." + sub)
+    for info in pkgutil.iter_modules(mod.__path__):
+        importlib.import_module(mod.__name__ + "." + info.name)
+for name in ("pipeline", "sinks", "serializer", "lineage", "canonicalize",
+             "linking", "dims", "query"):
+    importlib.import_module("biocypher_metta_spark." + name)
+print("\\n".join(m for m in sorted(sys.modules)
+                if m.startswith("biocypher_metta_spark.operators")
+                or "entry_queries" in m))
+"""
+
+
+def test_kg_path_loads_no_operator_or_gate_module():
+    repo = Path(__file__).resolve().parent.parent
+    out = subprocess.run(
+        [sys.executable, "-c", _KG_PATH_IMPORTS, str(repo)],
+        capture_output=True, text=True, check=True, timeout=300)
+    assert out.stdout.split() == []

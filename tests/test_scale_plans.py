@@ -82,22 +82,28 @@ def test_triple_table_partition_pruning(spark, tmp_path):
     assert q.count() == 500
 
 
-def test_salted_agg_equals_plain(spark):
-    """Salted two-stage aggregation (hub-entity pattern) must equal the
-    direct groupBy."""
+def test_entity_mention_counts_one_shuffle(spark):
+    """Hub-skewed mention counts: the values are the hand-computed count
+    and sum per entity, and the executed plan shuffles exactly once (the
+    map-side partial aggregate absorbs the hub, no salt stage)."""
     from biocypher_metta_spark import linking
 
-    linked = spark.range(50_000).select(
-        F.when(F.col("id") < 45_000, F.lit("TP53")).otherwise(
+    # 9,000 TP53 mentions scoring 0.5 each; 1,000 singletons scoring 0.25
+    linked = spark.range(10_000).select(
+        F.when(F.col("id") < 9_000, F.lit("TP53")).otherwise(
             F.concat(F.lit("G"), F.col("id"))).alias("entity"),
         F.col("id").cast("string").alias("doc_id"),
-        F.lit(1.0).alias("score"))
-    salted = {r.entity: (r.n_mentions, r.score_sum) for r in
-              linking.entity_mention_counts(linked, salt_buckets=16).collect()}
-    plain = {r.entity: (r.n, r.s) for r in
-             linked.groupBy("entity").agg(F.count("*").alias("n"),
-                                          F.sum("score").alias("s")).collect()}
-    assert salted == plain
+        F.when(F.col("id") < 9_000, F.lit(0.5)).otherwise(F.lit(0.25))
+        .alias("score"))
+    counts = linking.entity_mention_counts(linked)
+    # read before any action: once AQE finalizes, the string holds both
+    # the final and the initial plan
+    plan = counts._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    got = {r.entity: (r.n_mentions, r.score_sum) for r in counts.collect()}
+    expected = {"TP53": (9_000, 4_500.0)}
+    expected.update({f"G{i}": (1, 0.25) for i in range(9_000, 10_000)})
+    assert got == expected
 
 
 def test_ann_bucket_layout_prunes_partitions(spark, tmp_path):
