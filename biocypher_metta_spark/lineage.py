@@ -28,9 +28,11 @@ def write_partitioned(df: DataFrame, path: str,
                       partition_by: list[str],
                       mode: str = "overwrite") -> None:
     """Dynamic partition overwrite: only partitions present in `df` are
-    replaced (resume = re-run the failed partitions' input slice)."""
-    (df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic"))
-    df.write.mode(mode).partitionBy(*partition_by).parquet(path)
+    replaced (resume = re-run the failed partitions' input slice). The
+    mode is a writer option, so the session conf is left alone and
+    concurrent writers do not race on it."""
+    (df.write.mode(mode).option("partitionOverwriteMode", "dynamic")
+     .partitionBy(*partition_by).parquet(path))
 
 
 def partition_manifest(df: DataFrame, partition_by: list[str],

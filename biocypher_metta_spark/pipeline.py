@@ -6,11 +6,16 @@ their generators through the writer one at a time, re-reading shared
 files per entry (e.g. the GENCODE GTF 3-5x). Here each config entry
 contributes a DataFrame fragment to ONE logical plan:
 
-    documents spans ──┬─ span_lines(kind) ─ parse ─ extract ─┐
-    dimensions ───────┴────── broadcast joins ───────────────┤
-                                                   union ────┴─ canonicalize
-                                                         ├─ triple table (partitioned, manifest)
-                                                         └─ .metta shards + type_defs
+    documents spans ──┬─ span_lines(kind) ─ parse (cached) ─ extract ─┐
+    dimensions ───────┴────── broadcast joins ────────────────────────┤
+                                   union of nodes (deduped), edges, atoms
+
+`materialize` then writes three independent branches as concurrent Spark
+jobs, each from its own thread:
+
+    nodes ─ partitioned write ─ manifest read-back ─┐
+    edges ─ partitioned write ─ manifest read-back ─┼─ all succeeded ─ type_defs.metta
+    atoms ─ .metta shards ──────────────────────────┘                  + _lineage/*.json
 
 Shared scans are cached once; Catalyst dedups the rest. Outputs are
 written with dynamic partition overwrite + lineage manifests (resume).
@@ -18,17 +23,24 @@ written with dynamic partition overwrite + lineage manifests (resume).
 
 from __future__ import annotations
 
+import uuid
+from concurrent.futures import ThreadPoolExecutor, as_completed
 from dataclasses import dataclass, field
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from biocypher_metta_spark import lineage, sinks
 from biocypher_metta_spark.canonicalize import dedup_nodes
 from biocypher_metta_spark.schema import SchemaRegistry, load_default_registry
 from biocypher_metta_spark.sources.documents import span_lines
 from biocypher_metta_spark.sources.gtf import GENE_KEYS, parse_gtf
+
+# the attribute keys every cached GTF parse extracts: the gene/transcript
+# adapters' keys plus the exon adapter's
+GTF_KEYS = GENE_KEYS + ["exon_number", "exon_id"]
 
 
 @dataclass
@@ -41,13 +53,15 @@ class PipelineContext:
 
     def gtf(self, kind: str = "gtf", keys=None) -> DataFrame:
         """Parsed GTF lines for a span kind — cached so gene/transcript/
-        exon/edge outputs share ONE scan (the reference re-reads the file
-        per config entry; SURVEY §4)."""
-        k = (kind, tuple(keys or GENE_KEYS))
-        if k not in self._cache:
-            df = parse_gtf(span_lines(self.docs, kind), keys=list(k[1])).cache()
-            self._cache[k] = df
-        return self._cache[k]
+        exon/edge outputs share ONE scan and ONE parse (the reference
+        re-reads the file per config entry; SURVEY §4). Every kind is
+        parsed with GTF_KEYS; `keys` names the attribute columns the
+        caller needs, and one outside that set is a KeyError."""
+        missing = [k for k in keys or () if k not in GTF_KEYS]
+        if missing:
+            raise KeyError(f"GTF keys {missing} are not parsed; parsed: {GTF_KEYS}")
+        return self.cached(("gtf", kind), lambda: parse_gtf(
+            span_lines(self.docs, kind), keys=GTF_KEYS))
 
     def lines(self, kind: str) -> DataFrame:
         return span_lines(self.docs, kind)
@@ -93,8 +107,7 @@ def _gencode_transcript(ctx: PipelineContext, **args):
 def _gencode_exon(ctx: PipelineContext, **args):
     from biocypher_metta_spark.adapters import gencode
 
-    typed, atoms = gencode.exon_nodes(
-        ctx.gtf(keys=GENE_KEYS + ["exon_number", "exon_id"]), **args)
+    typed, atoms = gencode.exon_nodes(ctx.gtf(keys=GTF_KEYS), **args)
     return typed, atoms, False
 
 
@@ -384,25 +397,72 @@ def _written_manifest(spark, path: str, partition_by: list[str]) -> list[dict]:
     return lineage.partition_manifest(df, partition_by)
 
 
+def _write_table(df: DataFrame, path: str, partition_by: list[str]) -> list[dict]:
+    """One table branch: the partitioned write, then the manifest of what
+    landed. Both are looked up on their modules at call time, where a
+    caller (the benchmark's tracer) may have wrapped them."""
+    lineage.write_partitioned(df, path, partition_by)
+    return _written_manifest(df.sparkSession, path, partition_by)
+
+
+def _run_branches(spark: SparkSession, branches: dict) -> dict:
+    """Run each branch (name -> no-argument callable) in its own thread,
+    so their Spark jobs run concurrently; returns name -> result once all
+    have finished. Each thread inherits the caller's local properties
+    (job description, group, scheduler pool) and tags its jobs with a tag
+    unique to this call: when a branch fails, the other branches' running
+    jobs are cancelled by that tag, which leaves the caller's job group
+    alone, and the first error is raised after every branch has ended."""
+    sc = spark.sparkContext
+    tag = f"materialize-{uuid.uuid4().hex}"
+
+    def tagged(fn):
+        def run():
+            sc.addJobTag(tag)
+            try:
+                return fn()
+            finally:
+                sc.removeJobTag(tag)
+        return inheritable_thread_target(spark)(run)
+
+    with ThreadPoolExecutor(max_workers=len(branches)) as pool:
+        futures = {pool.submit(tagged(fn)): name for name, fn in branches.items()}
+        first = None
+        for f in as_completed(futures):
+            if f.exception() is not None and first is None:
+                first = f.exception()
+                sc.cancelJobsWithTag(tag)
+    if first is not None:
+        raise first
+    return {name: f.result() for f, name in futures.items()}
+
+
 def materialize(result: PipelineResult, out_dir: str, registry: SchemaRegistry,
                 run_id: str = "run") -> dict:
-    """Write all outputs + lineage manifests; returns the manifest dict."""
+    """Write all outputs + lineage manifests; returns the manifest dict.
+
+    The three outputs are independent branches whose Spark jobs run
+    concurrently: nodes (partitioned write, then its manifest read-back),
+    edges (the same) and the `.metta` shards. They share the context's
+    cached parse, which Spark's block locks compute once. `type_defs.metta`
+    and the `_lineage/*.json` manifests are written only after every
+    branch has succeeded; if one fails, the others' jobs are cancelled and
+    its error is raised with neither written."""
     out = Path(out_dir)
-    manifests = {}
+    branches = {}
     if result.nodes is not None:
         ndf = result.nodes.withColumn(
             "chr_part", F.coalesce(F.col("chr"), F.lit("none"))) \
             if "chr" in result.nodes.columns else \
             result.nodes.withColumn("chr_part", F.lit("none"))
-        lineage.write_partitioned(ndf, str(out / "nodes"), ["label", "chr_part"])
-        manifests["nodes"] = _written_manifest(
-            result.nodes.sparkSession, str(out / "nodes"), ["label", "chr_part"])
+        branches["nodes"] = lambda: _write_table(
+            ndf, str(out / "nodes"), ["label", "chr_part"])
     if result.edges is not None:
-        lineage.write_partitioned(result.edges.withColumn("label_part", F.col("label")),
-                                  str(out / "edges"), ["label_part"])
-        manifests["edges"] = _written_manifest(
-            result.edges.sparkSession, str(out / "edges"), ["label_part"])
-    sinks.write_metta_text(result.atoms, str(out / "metta"))
+        edf = result.edges.withColumn("label_part", F.col("label"))
+        branches["edges"] = lambda: _write_table(edf, str(out / "edges"), ["label_part"])
+    branches["metta"] = lambda: sinks.write_metta_text(result.atoms, str(out / "metta"))
+    manifests = _run_branches(result.atoms.sparkSession, branches)
+    del manifests["metta"]
     (out / "type_defs.metta").parent.mkdir(parents=True, exist_ok=True)
     (out / "type_defs.metta").write_text(registry.type_defs_text())
     for name, rows in manifests.items():

@@ -36,7 +36,6 @@ def write_triple_table(nodes: DataFrame | None, edges: DataFrame | None,
     """Unified queryable triple table, partitioned by kind+label —
     partition pruning serves both probe patterns (subject-centric fetch
     and label+range scans, scripts/metta_space_import.py:73-92)."""
-    spark_conf_key = "spark.sql.sources.partitionOverwriteMode"
     parts = []
     if nodes is not None:
         parts.append(nodes.select(
@@ -49,8 +48,8 @@ def write_triple_table(nodes: DataFrame | None, edges: DataFrame | None,
     df = parts[0]
     for p in parts[1:]:
         df = df.unionByName(p)
-    df.sparkSession.conf.set(spark_conf_key, "dynamic")
-    df.write.mode(mode).partitionBy("kind", "label").parquet(path)
+    (df.write.mode(mode).option("partitionOverwriteMode", "dynamic")
+     .partitionBy("kind", "label").parquet(path))
 
 
 # ---------------------------------------------------------------------------

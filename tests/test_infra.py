@@ -215,16 +215,26 @@ def test_canonicalize_nodes(spark):
 
 def test_partition_overwrite_resume(spark, tmp_path):
     path = str(tmp_path / "triples")
-    df1 = spark.createDataFrame(
-        [("chr1", "a", 1), ("chr1", "b", 2), ("chr2", "c", 3)],
-        "chr string, id string, v long")
-    lineage.write_partitioned(df1, path, ["chr"])
-    m1 = lineage.partition_manifest(df1, ["chr"])
-    # re-derive ONLY chr1 (simulated failed-partition rerun) — chr2 intact
-    df_fix = spark.createDataFrame([("chr1", "a", 1), ("chr1", "b", 2)],
-                                   "chr string, id string, v long")
-    lineage.write_partitioned(df_fix, path, ["chr"])
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    # the writer asks for dynamic overwrite itself: a static session
+    # setting must neither wipe untouched partitions nor be changed
+    spark.conf.set(key, "static")
+    try:
+        df1 = spark.createDataFrame(
+            [("chr1", "a", 1), ("chr1", "b", 2), ("chr2", "c", 3)],
+            "chr string, id string, v long")
+        lineage.write_partitioned(df1, path, ["chr"])
+        m1 = lineage.partition_manifest(df1, ["chr"])
+        # re-derive ONLY chr1 (simulated failed-partition rerun) — chr2 intact
+        df_fix = spark.createDataFrame([("chr1", "a", 1), ("chr1", "b", 2)],
+                                       "chr string, id string, v long")
+        lineage.write_partitioned(df_fix, path, ["chr"])
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, prev)
     back = spark.read.parquet(path)
+    assert back.filter("chr = 'chr2'").select("id", "v").collect() == [("c", 3)]
     assert back.count() == 3
     m2 = lineage.partition_manifest(back.select("chr", "id", "v"), ["chr"])
     exp = {"partitions": m1}

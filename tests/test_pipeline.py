@@ -2,13 +2,16 @@
 
 from __future__ import annotations
 
+import json
 import subprocess
 import sys
+import time
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
-from biocypher_metta_spark import pipeline
+from biocypher_metta_spark import lineage, pipeline, sinks
 from biocypher_metta_spark.schema import load_default_registry
 from biocypher_metta_spark.sources.documents import span_lines
 from biocypher_metta_spark.sources.gtf import GENE_KEYS, parse_gtf
@@ -174,6 +177,80 @@ def test_materialize_empty_result(spark, tmp_path):
                                 "args": {"chr": "chrNOPE"}}])
     m = pipeline.materialize(res, str(tmp_path / "kg"), load_default_registry())
     assert m["nodes"] == []
+
+
+def test_gtf_parsed_once_per_kind(spark):
+    """The gene, transcript, exon and edge adapters share ONE cached
+    parse of the gtf spans; a key outside the parsed set is an error."""
+    ctx = pipeline.PipelineContext(spark, synth_gtf_documents(spark, 20), REGISTRY)
+    pipeline.build(ctx, CONFIG)
+    assert len(ctx._cache) == 1
+    assert ctx.gtf(keys=["gene_id", "exon_id"]) is ctx.gtf()
+    with pytest.raises(KeyError):
+        ctx.gtf(keys=["protein_id"])
+
+
+def _sorted_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_materialize_matches_sequential_writers(spark, tmp_path):
+    """The concurrent branches write what the three writers and the
+    manifest read-back write when called one after another."""
+    ctx = pipeline.PipelineContext(
+        spark, synth_gtf_documents(spark, 300, partitions=3), REGISTRY)
+    result = pipeline.build(ctx, CONFIG)
+    got_dir, want_dir = tmp_path / "concurrent", tmp_path / "sequential"
+    got = pipeline.materialize(result, str(got_dir), REGISTRY)
+
+    nodes = result.nodes.withColumn("chr_part", F.coalesce("chr", F.lit("none")))
+    lineage.write_partitioned(nodes, str(want_dir / "nodes"), ["label", "chr_part"])
+    want = {"nodes": pipeline._written_manifest(spark, str(want_dir / "nodes"),
+                                                ["label", "chr_part"])}
+    edges = result.edges.withColumn("label_part", F.col("label"))
+    lineage.write_partitioned(edges, str(want_dir / "edges"), ["label_part"])
+    want["edges"] = pipeline._written_manifest(spark, str(want_dir / "edges"),
+                                               ["label_part"])
+    sinks.write_metta_text(result.atoms, str(want_dir / "metta"))
+
+    def key(r):
+        return json.dumps(r, sort_keys=True, default=str)
+
+    assert sorted(got) == ["edges", "nodes"]
+    for name in ("nodes", "edges"):
+        assert want[name]
+        assert sorted(got[name], key=key) == sorted(want[name], key=key)
+        written = lineage.read_manifest(str(got_dir / f"_lineage/{name}.json"))
+        assert written["partitions"] == sorted(want[name], key=key)
+        assert (_sorted_rows(spark.read.parquet(str(got_dir / name)))
+                == _sorted_rows(spark.read.parquet(str(want_dir / name))))
+    got_atoms = _sorted_rows(spark.read.text(str(got_dir / "metta")))
+    assert got_atoms and got_atoms == _sorted_rows(spark.read.text(str(want_dir / "metta")))
+    assert (got_dir / "type_defs.metta").read_text() == REGISTRY.type_defs_text()
+
+
+def test_materialize_branch_failure_cancels_siblings(spark, tmp_path):
+    """An atom frame that fails to evaluate: its error propagates, the
+    node branch's long job is cancelled rather than awaited, no manifest
+    or type_defs is written and no job is left running."""
+    ctx = pipeline.PipelineContext(spark, synth_gtf_documents(spark, 20), REGISTRY)
+    result = pipeline.build(ctx, CONFIG)
+    atoms = result.atoms.withColumn("atom", F.when(
+        F.col("atom").isNotNull(), F.raise_error(F.lit("atom render failed")))
+        .otherwise(F.col("atom")))
+    # a node scan that runs for minutes unless cancelled, and writes nothing
+    slow = (spark.range(0, 1 << 40, 1, 4).filter(F.col("id") < 0)
+            .select(F.col("id").cast("string").alias("id"),
+                    F.lit("gene").alias("label"), F.lit("chr1").alias("chr")))
+    out = tmp_path / "kg"
+    t0 = time.perf_counter()
+    with pytest.raises(Exception, match="atom render failed"):
+        pipeline.materialize(pipeline.PipelineResult(slow, result.edges, atoms),
+                             str(out), REGISTRY)
+    assert time.perf_counter() - t0 < 120
+    assert not (out / "_lineage").exists()
+    assert not (out / "type_defs.metta").exists()
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
 
 
 # Imports everything the KG build path uses, in a fresh interpreter so no
