@@ -8,10 +8,9 @@ topld_adapter.py:35-70, gtex_eqtl_adapter.py:57-95.
 
 Scale note (SURVEY §2.4 J5/J6): the reference holds dbsnp rsid->pos as a
 driver dict; at production scale that dimension is ~38M rows, so these
-joins take a DataFrame `rsid_dim(rsid, chr, pos)` and let AQE pick
-broadcast vs sort-merge (pass pre-broadcast hint only when the dim is a
-window-restricted subset). Hub rsids are uniform (primary key) so no
-salting is needed on the dim side.
+joins take a DataFrame `rsid_dim(rsid, chr, pos)` and always hint it
+for broadcast, so pass a window-restricted subset at that scale. Hub
+rsids are uniform (primary key) so no salting is needed on the dim side.
 """
 
 from __future__ import annotations
@@ -44,13 +43,10 @@ TOPLD_SOURCE = ("TopLD", "http://topld.genetics.unc.edu/")
 GTEX_SOURCE = ("GTEx", "https://www.gtexportal.org/home/datasets")
 
 
-def _join_rsid(d: DataFrame, rsid_dim: DataFrame, on: str = "rsid",
-               broadcast: bool = True) -> DataFrame:
-    dim = rsid_dim.select(F.col("rsid").alias("__rsid"),
-                          F.col("chr").alias("__chr"),
-                          F.col("pos").alias("__pos"))
-    if broadcast:
-        dim = F.broadcast(dim)
+def _join_rsid(d: DataFrame, rsid_dim: DataFrame, on: str = "rsid") -> DataFrame:
+    dim = F.broadcast(rsid_dim.select(F.col("rsid").alias("__rsid"),
+                                      F.col("chr").alias("__chr"),
+                                      F.col("pos").alias("__pos")))
     return d.join(dim, d[on] == dim["__rsid"])
 
 
@@ -63,7 +59,7 @@ ROADMAP_COLS = {"rsid": 0, "dataset": 1, "cell": 2, "tissue": 3, "datatype": 4}
 
 def roadmap_nodes(lines: DataFrame, tissue_map: DataFrame, rsid_dim: DataFrame,
                   chr: str | None = None, start: int | None = None,
-                  end: int | None = None, broadcast_rsid: bool = True,
+                  end: int | None = None,
                   write_properties: bool = True, add_provenance: bool = True,
                   ) -> tuple[DataFrame, DataFrame]:
     """regulatory_region nodes (roadmap_adapter.py:48-81): rsid -> chr/pos
@@ -75,7 +71,7 @@ def roadmap_nodes(lines: DataFrame, tissue_map: DataFrame, rsid_dim: DataFrame,
     # reference strips '"' and "'" from tissue beyond csv unquoting (:59)
     tissue = F.translate(F.col("tissue"), "\"'", "")
     d = d.withColumn("_tissue", tissue)
-    d = _join_rsid(d, rsid_dim, broadcast=broadcast_rsid)
+    d = _join_rsid(d, rsid_dim)
     m = tissue_map.select(F.col("key").alias("_k"), F.col("value").alias("_ctx"))
     d = d.join(F.broadcast(m), F.col("_tissue") == m["_k"])
     d = d.filter(genomic_window(F.col("__chr"), F.col("__pos"), F.col("__pos"),
@@ -107,7 +103,7 @@ ABC_COLS = {"rsid": 0, "chromosome": 1, "target_gene": 10, "abc_score": 24,
 
 def abc_nodes(lines: DataFrame, tissue_map: DataFrame, rsid_dim: DataFrame,
               chr: str | None = None, start: int | None = None,
-              end: int | None = None, broadcast_rsid: bool = True,
+              end: int | None = None,
               write_properties: bool = True, add_provenance: bool = True,
               ) -> tuple[DataFrame, DataFrame]:
     """ABC regulatory_region nodes (abc_adapter.py:42-62). Quirk parity:
@@ -117,7 +113,7 @@ def abc_nodes(lines: DataFrame, tissue_map: DataFrame, rsid_dim: DataFrame,
     try)."""
     d = quoted_csv_cols(lines, 29, ABC_COLS, ",")
     d = d.filter(F.col("rsid") != "rsid")
-    d = _join_rsid(d, rsid_dim, broadcast=broadcast_rsid)
+    d = _join_rsid(d, rsid_dim)
     m = tissue_map.select(F.col("key").alias("_k"), F.col("value").alias("_ctx"))
     d = d.join(F.broadcast(m), F.col("cell_type") == m["_k"])
     d = d.filter(genomic_window(F.col("chromosome"), F.col("__pos"), F.col("__pos"),
@@ -139,9 +135,9 @@ def abc_nodes(lines: DataFrame, tissue_map: DataFrame, rsid_dim: DataFrame,
 
 
 def abc_edges(lines: DataFrame, hgnc2ensembl: DataFrame, tissue_map: DataFrame,
-              rsid_dim: DataFrame,
+              rsid_dim: DataFrame, registry,
               chr: str | None = None, start: int | None = None,
-              end: int | None = None, broadcast_rsid: bool = True,
+              end: int | None = None,
               write_properties: bool = True, add_provenance: bool = True,
               ) -> tuple[DataFrame, DataFrame]:
     """regulatory_region_gene edges (abc_adapter.py:66-90). Quirks: the
@@ -152,7 +148,7 @@ def abc_edges(lines: DataFrame, hgnc2ensembl: DataFrame, tissue_map: DataFrame,
     provenance (reference builds its own dict)."""
     d = quoted_csv_cols(lines, 29, ABC_COLS, ",")
     d = d.filter(F.col("rsid") != "rsid")
-    d = _join_rsid(d, rsid_dim, broadcast=broadcast_rsid)
+    d = _join_rsid(d, rsid_dim)
     if chr is not None:
         # reference would TypeError on int(dict) with a window configured;
         # the usable semantics are pos-window filtering
@@ -171,16 +167,9 @@ def abc_edges(lines: DataFrame, hgnc2ensembl: DataFrame, tissue_map: DataFrame,
         Prop("score", F.col("abc_score"), "str"),
         Prop("biological_context", F.col("_ctx"), "str"),
     ]
-    atoms = atoms_for_edge(d, "regulatory_region_gene",
-                           F.col("rsid"), F.col("tgt"), props)
+    atoms = atoms_df(d, edge_def_out("regulatory_region_gene", registry,
+                                     F.col("rsid"), F.col("tgt")), props)
     return typed, atoms
-
-
-def atoms_for_edge(d, label, src, tgt, props):
-    from biocypher_metta_spark.schema import load_default_registry
-
-    reg = load_default_registry()
-    return atoms_df(d, edge_def_out(label, reg, src, tgt), props)
 
 
 # --------------------------------------------------------------------------
@@ -193,14 +182,14 @@ CADD_COLS = {"rsid": 0, "chromosome": 1, "position": 2, "ref": 3, "alt": 4,
 
 def cadd_nodes(lines: DataFrame, rsid_dim: DataFrame,
                chr: str | None = None, start: int | None = None,
-               end: int | None = None, broadcast_rsid: bool = True,
+               end: int | None = None,
                write_properties: bool = True, add_provenance: bool = True,
                ) -> tuple[DataFrame, DataFrame]:
     """sequence_variant nodes (cadd_adapter.py:35-65): pos from the dbsnp
     dim (not the file), float CADD scores."""
     d = quoted_csv_cols(lines, 7, CADD_COLS, ",")
     d = d.filter(F.col("rsid") != "rsid")
-    d = _join_rsid(d, rsid_dim, broadcast=broadcast_rsid)
+    d = _join_rsid(d, rsid_dim)
     d = d.filter(genomic_window(F.col("chromosome"), F.col("__pos"), F.col("__pos"),
                                 chr, start, end))
     raw = F.col("raw").cast("double")
@@ -235,9 +224,9 @@ REFSEQ_COLS = {"rsid": 0, "chromosome": 1, "gene_start": 5, "gene_symbol": 7}
 
 
 def refseq_closest_gene_edges(lines: DataFrame, hgnc2ensembl: DataFrame,
-                              rsid_dim: DataFrame,
+                              rsid_dim: DataFrame, registry,
                               chr: str | None = None, start: int | None = None,
-                              end: int | None = None, broadcast_rsid: bool = True,
+                              end: int | None = None,
                               write_properties: bool = True,
                               add_provenance: bool = True,
                               ) -> tuple[DataFrame, DataFrame]:
@@ -245,7 +234,7 @@ def refseq_closest_gene_edges(lines: DataFrame, hgnc2ensembl: DataFrame,
     distance = gene_start + 1 - pos (pos from the dbsnp dim)."""
     d = quoted_csv_cols(lines, 8, REFSEQ_COLS, ",")
     d = d.filter(F.col("rsid") != "rsid")
-    d = _join_rsid(d, rsid_dim, broadcast=broadcast_rsid)
+    d = _join_rsid(d, rsid_dim)
     d = d.filter(genomic_window(F.col("chromosome"), F.col("__pos"), F.col("__pos"),
                                 chr, start, end))
     g = hgnc2ensembl.select(F.col("key").alias("_g"), F.col("value").alias("tgt"))
@@ -262,7 +251,8 @@ def refseq_closest_gene_edges(lines: DataFrame, hgnc2ensembl: DataFrame,
             Prop("pos", F.col("__pos"), "int"),
             Prop("distance", dist, "int"),
         ] + provenance_props(*REFSEQ_SOURCE, write_properties, add_provenance)
-    atoms = atoms_for_edge(d, "closest_gene", F.col("rsid"), F.col("tgt"), props)
+    atoms = atoms_df(d, edge_def_out("closest_gene", registry,
+                                     F.col("rsid"), F.col("tgt")), props)
     return typed, atoms
 
 
@@ -276,7 +266,7 @@ TOPLD_COLS = {"snp1": 0, "snp2": 1, "r2": 4, "dprime": 5, "corr": 6}
 def topld_edges(lines: DataFrame, pos_rsid_dim: DataFrame, chr: str,
                 ancestry: str, registry,
                 start: int | None = None, end: int | None = None,
-                cutoff: float = 0.5, broadcast_rsid: bool = True,
+                cutoff: float = 0.5,
                 write_properties: bool = True, add_provenance: bool = True,
                 ) -> tuple[DataFrame, DataFrame]:
     """in_ld_with edges (topld_adapter.py:35-70): both SNP positions must
@@ -297,11 +287,9 @@ def topld_edges(lines: DataFrame, pos_rsid_dim: DataFrame, chr: str,
     k2 = F.concat_ws("_", F.lit(chr), F.col("_p2").cast("string"))
     m1 = pos_rsid_dim.select(F.col("key").alias("_k1"), F.col("value").alias("src"))
     m2 = pos_rsid_dim.select(F.col("key").alias("_k2"), F.col("value").alias("tgt"))
-    if broadcast_rsid:
-        m1, m2 = F.broadcast(m1), F.broadcast(m2)
     d = (d.withColumn("_key1", k1).withColumn("_key2", k2)
-         .join(m1, F.col("_key1") == F.col("_k1"))
-         .join(m2, F.col("_key2") == F.col("_k2")))
+         .join(F.broadcast(m1), F.col("_key1") == F.col("_k1"))
+         .join(F.broadcast(m2), F.col("_key2") == F.col("_k2")))
     r2 = to_float_col(F.concat(F.col("corr"), F.col("r2")))
     d = d.withColumn("_r2", r2).filter(F.abs(F.col("_r2")) >= cutoff)
     dprime = F.col("dprime").cast("double")

@@ -84,15 +84,6 @@ def canonical_id_map(alias_edges: DataFrame, max_iter: int = 10) -> DataFrame:
             .select("id", "canonical_id"))
 
 
-def alias_edges_from_dims(*dims: DataFrame) -> DataFrame:
-    """Union (key, value) dimension tables into an alias edge list."""
-    out = None
-    for d in dims:
-        e = d.select(F.col("key").alias("src"), F.col("value").alias("dst"))
-        out = e if out is None else out.union(e)
-    return out.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-
-
 def dedup_nodes(nodes: DataFrame, id_col: str = "id",
                 label_col: str = "label") -> DataFrame:
     """skip_duplicate_nodes semantics (A5): first row per (label, id)."""

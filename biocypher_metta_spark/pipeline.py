@@ -10,6 +10,12 @@ contributes a DataFrame fragment to ONE logical plan:
     dimensions ───────┴────── broadcast joins ────────────────────────┤
                                    union of nodes (deduped), edges, atoms
 
+Each `PIPELINE_REGISTRY` entry is one direct adapter call that names the
+span kinds (`ctx.lines`, `ctx.lines_keyed`, the cached `ctx.gtf` and
+`ctx.swiss` parses), the dimensions (`ctx.dims[...]`) and the schema
+registry it reads; only dbSUPER (a cached lifted scan shared by its two
+entries), HOCOMOCO and GAF need a few lines more.
+
 `materialize` then writes three independent branches as concurrent Spark
 jobs, each from its own thread:
 
@@ -32,11 +38,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
+import biocypher_metta_spark.adapters.annotations as ann
 from biocypher_metta_spark import lineage, sinks
+from biocypher_metta_spark.adapters import (
+    forgedb,
+    gencode,
+    interactions,
+    ontology,
+    pathways,
+    variants,
+)
+from biocypher_metta_spark.adapters import regulatory as reg
 from biocypher_metta_spark.canonicalize import dedup_nodes
 from biocypher_metta_spark.schema import SchemaRegistry, load_default_registry
-from biocypher_metta_spark.sources.documents import span_lines
+from biocypher_metta_spark.sources.documents import explode_spans, span_lines
 from biocypher_metta_spark.sources.gtf import GENE_KEYS, parse_gtf
+from biocypher_metta_spark.sources.swiss import parse_swiss_spans
 
 # the attribute keys every cached GTF parse extracts: the gene/transcript
 # adapters' keys plus the exon adapter's
@@ -71,13 +88,17 @@ class PipelineContext:
         'pwm:ATF1_HUMAN.H11MO.0.B', 'gtex:Adipose_Subcutaneous') become
         lines carrying the key as a column — the Spark twin of
         filename-carries-the-key directory scans."""
-        from biocypher_metta_spark.sources.documents import explode_spans
-
         sp = explode_spans(self.docs).filter(
             F.col("kind").startswith(prefix + ":"))
         return sp.select(
             "doc_id", "offset", F.col("text").alias("value"),
             F.expr(f"substring(kind, {len(prefix) + 2})").alias(key_col))
+
+    def swiss(self) -> DataFrame:
+        """Parsed UniProt records, cached so the protein nodes and the
+        translation edges share one parse."""
+        return self.cached("swiss_records",
+                           lambda: parse_swiss_spans(self.lines("swiss_record")))
 
     def cached(self, key, builder):
         if key not in self._cache:
@@ -86,256 +107,125 @@ class PipelineContext:
         return self._cache[key]
 
 
-# entry name -> callable(ctx, **args) -> (typed_df, atoms_df, is_edge)
-
-
-def _gencode_gene(ctx: PipelineContext, **args):
-    from biocypher_metta_spark.adapters import gencode
-
-    typed, atoms = gencode.gene_nodes(
-        ctx.gtf(), alias_df=ctx.dims.get("gene_alias"), **args)
-    return typed, atoms, False
-
-
-def _gencode_transcript(ctx: PipelineContext, **args):
-    from biocypher_metta_spark.adapters import gencode
-
-    typed, atoms = gencode.transcript_nodes(ctx.gtf(), **args)
-    return typed, atoms, False
-
-
-def _gencode_exon(ctx: PipelineContext, **args):
-    from biocypher_metta_spark.adapters import gencode
-
-    typed, atoms = gencode.exon_nodes(ctx.gtf(keys=GTF_KEYS), **args)
-    return typed, atoms, False
-
-
-def _transcribed(direction):
-    def run(ctx: PipelineContext, **args):
-        from biocypher_metta_spark.adapters import gencode
-
-        typed, atoms = gencode.transcribed_edges(
-            ctx.gtf(), ctx.registry, direction, **args)
-        return typed, atoms, True
-
-    return run
-
-
-def _dbsnp(ctx: PipelineContext, **args):
-    from biocypher_metta_spark.adapters import variants
-
-    typed, atoms = variants.dbsnp_nodes(ctx.lines("vcf"), **args)
-    return typed, atoms, False
-
-
-def _node_adapter(fn_path, kind, dim_args=(), is_edge=False, needs_registry=False,
-                  keyed=None):
-    """Generic registry entry: adapters.<module>.<fn>(lines, *dims[,registry])."""
-
-    def run(ctx: PipelineContext, **args):
-        import importlib
-
-        mod_name, fn_name = fn_path.rsplit(".", 1)
-        mod = importlib.import_module(f"biocypher_metta_spark.adapters.{mod_name}")
-        fn = getattr(mod, fn_name)
-        lines = ctx.lines_keyed(kind, keyed) if keyed else ctx.lines(kind)
-        dims = [ctx.dims[d] for d in dim_args]
-        if needs_registry:
-            typed, atoms = fn(lines, *dims, ctx.registry, **args)
-        else:
-            typed, atoms = fn(lines, *dims, **args)
-        return typed, atoms, is_edge
-
-    return run
-
-
-def _swiss(fn_name, is_edge, needs_registry=False):
-    def run(ctx: PipelineContext, **args):
-        import biocypher_metta_spark.adapters.annotations as ann
-        from biocypher_metta_spark.sources.swiss import parse_swiss_spans
-
-        recs = ctx.cached("swiss_records",
-                          lambda: parse_swiss_spans(ctx.lines("swiss_record")))
-        fn = getattr(ann, fn_name)
-        if needs_registry:
-            typed, atoms = fn(recs, ctx.registry, **args)
-        else:
-            typed, atoms = fn(recs, **args)
-        return typed, atoms, is_edge
-
-    return run
-
-
-def _two_file(fn_path, kinds, dim_args=(), is_edge=False, needs_registry=False):
-    def run(ctx: PipelineContext, **args):
-        import importlib
-
-        mod_name, fn_name = fn_path.rsplit(".", 1)
-        mod = importlib.import_module(f"biocypher_metta_spark.adapters.{mod_name}")
-        fn = getattr(mod, fn_name)
-        lines = [ctx.lines(k) for k in kinds]
-        dims = [ctx.dims[d] for d in dim_args]
-        if needs_registry:
-            typed, atoms = fn(*lines, *dims, ctx.registry, **args)
-        else:
-            typed, atoms = fn(*lines, *dims, **args)
-        return typed, atoms, is_edge
-
-    return run
-
-
-def _dbsuper(fn_name, is_edge):
-    def run(ctx: PipelineContext, **args):
-        from biocypher_metta_spark.adapters import regulatory as reg
-
-        lift = ctx.dims["liftover"]  # a liftover(chr,pos) callable
-        window = (args.get("chr"), args.get("start"), args.get("end"))
-        # the lifted base scan is shared between the node and edge outputs
-        # (one Arrow liftover pass instead of two)
-        base = ctx.cached(("dbsuper_base", window), lambda: reg._dbsuper_base(
-            ctx.lines("dbsuper"), lift, *window))
-        if fn_name == "dbsuper_nodes":
-            typed, atoms = reg.dbsuper_nodes(None, lift, base=base, **args)
-        else:
-            typed, atoms = reg.dbsuper_edges(
-                None, lift, ctx.dims["hgnc_to_ensembl"],
-                ctx.dims["dbsuper_tissues"], ctx.registry, base=base, **args)
-        return typed, atoms, is_edge
-
-    return run
+def _dbsuper_lifted(ctx: PipelineContext, chr=None, start=None, end=None, **_):
+    """The lifted dbSUPER scan, cached per window: the node and edge
+    entries share one Arrow liftover pass."""
+    window = (chr, start, end)
+    return ctx.cached(("dbsuper_base", window), lambda: reg._dbsuper_base(
+        ctx.lines("dbsuper"), ctx.dims["liftover"], *window))
 
 
 def _hocomoco(ctx: PipelineContext, **args):
-    import biocypher_metta_spark.adapters.annotations as ann
-
-    lines = ctx.lines_keyed("pwm", "model").withColumn(
-        "row_order", F.col("offset"))
+    pwm = ctx.lines_keyed("pwm", "model").withColumn("row_order", F.col("offset"))
     model_tf = ann.parse_model_tf(ctx.lines("hocomoco_annotation"))
-    typed, atoms = ann.hocomoco_motif_nodes(
-        lines, model_tf, ctx.dims["hgnc_to_ensembl"], **args)
-    return typed, atoms, False
+    return ann.hocomoco_motif_nodes(pwm, model_tf, ctx.dims["hgnc_to_ensembl"], **args)
 
 
 def _gaf(ctx: PipelineContext, gaf_type="human", **args):
-    import biocypher_metta_spark.adapters.annotations as ann
-
     rmap = None
     if gaf_type == "rna":
         rmap = ann.parse_rnacentral_gencode_map(ctx.lines("rnacentral_map"))
-    typed, atoms = ann.gaf_edges(ctx.lines("gaf"), ctx.registry,
-                                 gaf_type=gaf_type, rnacentral_map=rmap, **args)
-    return typed, atoms, True
+    return ann.gaf_edges(ctx.lines("gaf"), ctx.registry, gaf_type=gaf_type,
+                         rnacentral_map=rmap, **args)
 
 
-def _topld(ctx: PipelineContext, **args):
-    from biocypher_metta_spark.adapters import forgedb
+# entry name -> fn(ctx, **args) -> (typed, atoms): one direct adapter call,
+# which names the span kinds, dimensions and schema registry it reads
+_CALLS = {
+    # gencode family (one cached GTF parse)
+    "gencode_gene": lambda ctx, **a: gencode.gene_nodes(
+        ctx.gtf(), alias_df=ctx.dims.get("gene_alias"), **a),
+    "gencode_transcript": lambda ctx, **a: gencode.transcript_nodes(ctx.gtf(), **a),
+    "gencode_exon": lambda ctx, **a: gencode.exon_nodes(ctx.gtf(keys=GTF_KEYS), **a),
+    "transcribed_to": lambda ctx, **a: gencode.transcribed_edges(
+        ctx.gtf(), ctx.registry, "to", **a),
+    "transcribed_from": lambda ctx, **a: gencode.transcribed_edges(
+        ctx.gtf(), ctx.registry, "from", **a),
+    # variants
+    "dbsnp": lambda ctx, **a: variants.dbsnp_nodes(ctx.lines("vcf"), **a),
+    "dbvar": lambda ctx, **a: variants.dbvar_nodes(ctx.lines("vcf"), **a),
+    "dgv": lambda ctx, **a: variants.dgv_nodes(ctx.lines("dgv"), **a),
+    "favor": lambda ctx, **a: variants.favor_nodes(ctx.lines("favor"), **a),
+    # reactome
+    "pathway": lambda ctx, **a: pathways.pathway_nodes(
+        ctx.lines("reactome_pathways"), ctx.lines("reactome_pmids"), **a),
+    "genes_pathways": lambda ctx, **a: pathways.genes_pathways_edges(
+        ctx.lines("reactome_gene_map"), ctx.registry, **a),
+    "parent_pathway_of": lambda ctx, **a: pathways.pathway_rel_edges(
+        ctx.lines("reactome_relations"), ctx.registry, **a),
+    "child_pathway_of": lambda ctx, **a: pathways.pathway_rel_edges(
+        ctx.lines("reactome_relations"), ctx.registry, **a),
+    # interactions
+    "string": lambda ctx, **a: interactions.string_ppi_edges(
+        ctx.lines("string"), ctx.dims["ensembl_to_uniprot"], ctx.registry, **a),
+    "tflink": lambda ctx, **a: interactions.tflink_edges(
+        ctx.lines("tflink"), ctx.dims["entrez_to_ensembl"], ctx.registry, **a),
+    "coexpression": lambda ctx, **a: interactions.coxpresdb_edges(
+        ctx.lines_keyed("coxpresdb", "file_entrez"), ctx.dims["entrez_to_ensembl"],
+        ctx.registry, **a),
+    # regulatory
+    "epd_promoter": lambda ctx, **a: reg.epd_promoter_nodes(ctx.lines("epd"), **a),
+    "epd_promoter_gene": lambda ctx, **a: reg.epd_promoter_gene_edges(
+        ctx.lines("epd"), ctx.dims["hgnc_to_ensembl"], ctx.registry, **a),
+    "enhancer_atlas": lambda ctx, **a: reg.enhancer_atlas_nodes(ctx.lines("ea_bed"), **a),
+    "enhancer_atlas_gene": lambda ctx, **a: reg.enhancer_atlas_edges(
+        ctx.lines_keyed("ea_gene", "tissue"), ctx.dims["ea_tissues"], ctx.registry, **a),
+    "tadmap": lambda ctx, **a: reg.tadmap_nodes(ctx.lines("tadmap"), **a),
+    "dbsuper": lambda ctx, **a: reg.dbsuper_nodes(
+        None, ctx.dims["liftover"], base=_dbsuper_lifted(ctx, **a), **a),
+    "dbsuper_gene": lambda ctx, **a: reg.dbsuper_edges(
+        None, ctx.dims["liftover"], ctx.dims["hgnc_to_ensembl"],
+        ctx.dims["dbsuper_tissues"], ctx.registry, base=_dbsuper_lifted(ctx, **a), **a),
+    "peregrine": lambda ctx, **a: reg.peregrine_nodes(
+        ctx.lines("peregrine_enhancers"), ctx.lines("peregrine_sources"), **a),
+    "peregrine_gene": lambda ctx, **a: reg.peregrine_edges(
+        ctx.lines("peregrine_enhancers"), ctx.lines("peregrine_links"),
+        ctx.dims["hgnc_ensembl_map"], ctx.dims["peregrine_tissues"], ctx.registry, **a),
+    # annotations
+    "rna_central": lambda ctx, **a: ann.rna_central_nodes(ctx.lines("rna_bed"), **a),
+    "rna_central_go": lambda ctx, **a: ann.rna_central_go_edges(
+        ctx.lines("rna_rfam"), ctx.registry, **a),
+    "hocomoco": _hocomoco,
+    "gaf": _gaf,
+    "uniprot_protein": lambda ctx, **a: ann.uniprot_protein_nodes(ctx.swiss(), **a),
+    "uniprot_translates": lambda ctx, **a: ann.uniprot_translation_edges(
+        ctx.swiss(), ctx.registry, **a),
+    # forgedb family (dbsnp rsid dimension)
+    "roadmap": lambda ctx, **a: forgedb.roadmap_nodes(
+        ctx.lines("roadmap"), ctx.dims["roadmap_tissues"], ctx.dims["dbsnp_rsid"], **a),
+    "abc": lambda ctx, **a: forgedb.abc_nodes(
+        ctx.lines("abc"), ctx.dims["abc_tissues"], ctx.dims["dbsnp_rsid"], **a),
+    "abc_gene": lambda ctx, **a: forgedb.abc_edges(
+        ctx.lines("abc"), ctx.dims["hgnc_to_ensembl"], ctx.dims["abc_tissues"],
+        ctx.dims["dbsnp_rsid"], ctx.registry, **a),
+    "cadd": lambda ctx, **a: forgedb.cadd_nodes(
+        ctx.lines("cadd"), ctx.dims["dbsnp_rsid"], **a),
+    "refseq_closest_gene": lambda ctx, **a: forgedb.refseq_closest_gene_edges(
+        ctx.lines("closest_gene"), ctx.dims["hgnc_to_ensembl"], ctx.dims["dbsnp_rsid"],
+        ctx.registry, **a),
+    "topld": lambda ctx, **a: forgedb.topld_edges(
+        ctx.lines("topld"), ctx.dims["dbsnp_pos"], registry=ctx.registry, **a),
+    "gtex_eqtl": lambda ctx, **a: forgedb.gtex_eqtl_edges(
+        ctx.lines_keyed("gtex", "tissue"), ctx.dims["gtex_tissues"], ctx.registry, **a),
+    # ontology
+    "ontology_nodes": lambda ctx, label, **a: ontology.ontology_nodes(
+        ctx.dims["ontology_triples"], label, **a),
+    "ontology_edges": lambda ctx, label, **a: ontology.ontology_edges(
+        ctx.dims["ontology_triples"], label, ctx.registry, **a),
+}
 
-    typed, atoms = forgedb.topld_edges(ctx.lines("topld"),
-                                       ctx.dims["dbsnp_pos"],
-                                       registry=ctx.registry, **args)
-    return typed, atoms, True
 
-
-def _ontology(fn_name, is_edge):
+def _entry(call):
+    """Registry entry: the call's (typed, atoms) plus is_edge, read off
+    the typed frame (edge frames carry `src`)."""
     def run(ctx: PipelineContext, **args):
-        from biocypher_metta_spark.adapters import ontology as onto
-
-        triples = ctx.dims["ontology_triples"]
-        fn = getattr(onto, fn_name)
-        if is_edge:
-            typed, atoms = fn(triples, args.pop("label"), ctx.registry, **args)
-        else:
-            typed, atoms = fn(triples, args.pop("label"), **args)
-        return typed, atoms, is_edge
-
+        typed, atoms = call(ctx, **args)
+        return typed, atoms, "src" in typed.columns
     return run
 
 
-PIPELINE_REGISTRY = {
-    # gencode family (shared cached GTF scan)
-    "gencode_gene": _gencode_gene,
-    "gencode_transcript": _gencode_transcript,
-    "gencode_exon": _gencode_exon,
-    "transcribed_to": _transcribed("to"),
-    "transcribed_from": _transcribed("from"),
-    # variants
-    "dbsnp": _dbsnp,
-    "dbvar": _node_adapter("variants.dbvar_nodes", "vcf"),
-    "dgv": _node_adapter("variants.dgv_nodes", "dgv"),
-    "favor": _node_adapter("variants.favor_nodes", "favor"),
-    # reactome
-    "pathway": _two_file("pathways.pathway_nodes",
-                         ["reactome_pathways", "reactome_pmids"]),
-    "genes_pathways": _node_adapter("pathways.genes_pathways_edges",
-                                    "reactome_gene_map", is_edge=True,
-                                    needs_registry=True),
-    "parent_pathway_of": _node_adapter("pathways.pathway_rel_edges",
-                                       "reactome_relations", is_edge=True,
-                                       needs_registry=True),
-    "child_pathway_of": _node_adapter("pathways.pathway_rel_edges",
-                                      "reactome_relations", is_edge=True,
-                                      needs_registry=True),
-    # interactions
-    "string": _node_adapter("interactions.string_ppi_edges", "string",
-                            ("ensembl_to_uniprot",), is_edge=True,
-                            needs_registry=True),
-    "tflink": _node_adapter("interactions.tflink_edges", "tflink",
-                            ("entrez_to_ensembl",), is_edge=True,
-                            needs_registry=True),
-    "coexpression": _node_adapter("interactions.coxpresdb_edges", "coxpresdb",
-                                  ("entrez_to_ensembl",), is_edge=True,
-                                  needs_registry=True, keyed="file_entrez"),
-    # regulatory
-    "epd_promoter": _node_adapter("regulatory.epd_promoter_nodes", "epd"),
-    "epd_promoter_gene": _node_adapter("regulatory.epd_promoter_gene_edges",
-                                       "epd", ("hgnc_to_ensembl",),
-                                       is_edge=True, needs_registry=True),
-    "enhancer_atlas": _node_adapter("regulatory.enhancer_atlas_nodes", "ea_bed"),
-    "enhancer_atlas_gene": _node_adapter("regulatory.enhancer_atlas_edges",
-                                         "ea_gene", ("ea_tissues",),
-                                         is_edge=True, needs_registry=True,
-                                         keyed="tissue"),
-    "tadmap": _node_adapter("regulatory.tadmap_nodes", "tadmap"),
-    "dbsuper": _dbsuper("dbsuper_nodes", False),
-    "dbsuper_gene": _dbsuper("dbsuper_edges", True),
-    "peregrine": _two_file("regulatory.peregrine_nodes",
-                           ["peregrine_enhancers", "peregrine_sources"]),
-    "peregrine_gene": _two_file("regulatory.peregrine_edges",
-                                ["peregrine_enhancers", "peregrine_links"],
-                                ("hgnc_ensembl_map", "peregrine_tissues"),
-                                is_edge=True, needs_registry=True),
-    # annotations
-    "rna_central": _node_adapter("annotations.rna_central_nodes", "rna_bed"),
-    "rna_central_go": _node_adapter("annotations.rna_central_go_edges",
-                                    "rna_rfam", is_edge=True,
-                                    needs_registry=True),
-    "hocomoco": _hocomoco,
-    "gaf": _gaf,
-    "uniprot_protein": _swiss("uniprot_protein_nodes", False),
-    "uniprot_translates": _swiss("uniprot_translation_edges", True,
-                                 needs_registry=True),
-    # forgedb family (dbsnp rsid dimension)
-    "roadmap": _node_adapter("forgedb.roadmap_nodes", "roadmap",
-                             ("roadmap_tissues", "dbsnp_rsid")),
-    "abc": _node_adapter("forgedb.abc_nodes", "abc",
-                         ("abc_tissues", "dbsnp_rsid")),
-    "abc_gene": _node_adapter("forgedb.abc_edges", "abc",
-                              ("hgnc_to_ensembl", "abc_tissues", "dbsnp_rsid"),
-                              is_edge=True),
-    "cadd": _node_adapter("forgedb.cadd_nodes", "cadd", ("dbsnp_rsid",)),
-    "refseq_closest_gene": _node_adapter("forgedb.refseq_closest_gene_edges",
-                                         "closest_gene",
-                                         ("hgnc_to_ensembl", "dbsnp_rsid"),
-                                         is_edge=True),
-    "topld": _topld,
-    "gtex_eqtl": _node_adapter("forgedb.gtex_eqtl_edges", "gtex",
-                               ("gtex_tissues",), is_edge=True,
-                               needs_registry=True, keyed="tissue"),
-    # ontology
-    "ontology_nodes": _ontology("ontology_nodes", False),
-    "ontology_edges": _ontology("ontology_edges", True),
-}
+# entry name -> callable(ctx, **args) -> (typed_df, atoms_df, is_edge)
+PIPELINE_REGISTRY = {name: _entry(call) for name, call in _CALLS.items()}
 
 
 @dataclass
@@ -346,9 +236,9 @@ class PipelineResult:
 
 
 def build(ctx: PipelineContext, config: list[dict]) -> PipelineResult:
-    """config entries: {adapter: <registry name>, args: {...}} — ordered
-    like adapters_config.yaml; order only affects nothing (set-semantics
-    outputs), unlike the reference's append files."""
+    """config entries: {adapter: <registry name>, args: {...}}, ordered
+    like adapters_config.yaml. The outputs are sets, so the order does
+    not change them (the reference appends to files in config order)."""
     node_parts: list[DataFrame] = []
     edge_parts: list[DataFrame] = []
     atom_parts: list[DataFrame] = []
@@ -565,9 +455,7 @@ def translate_reference_config(path: str | Path) -> list[dict]:
         kwargs = {k: v for k, v in args.items()
                   if k in _PASSTHROUGH_ARGS and v is not None}
         if name in ("uniprot_translates",) and args.get("type"):
-            kwargs["direction"] = args["type"].replace(" ", "_").replace(
-                "translation_of", "translation_of").replace(
-                "translates_to", "translates_to")
+            kwargs["direction"] = args["type"].replace(" ", "_")
             kwargs.pop("label", None)
         if name in ("parent_pathway_of", "child_pathway_of"):
             kwargs["label"] = name

@@ -147,7 +147,7 @@ def test_abc_edges_parity(spark, abc_rsid_map):
     tissue = dims.dim_from_pickle(spark, f"{AUX}/abc_tissues_to_ontology_map.pkl")
     rdim = rsid_dim_df(spark, abc_rsid_map)
     _, atoms = fg.abc_edges(lines_of(spark, f"{S}/abc.forgedb_sample.csv.gz"),
-                            hgnc, tissue, rdim)
+                            hgnc, tissue, rdim, REGISTRY)
     assert_pr(spark_atoms(atoms), golden, 1.0, "abc edges")
 
 
@@ -179,7 +179,7 @@ def test_refseq_parity(spark):
     hgnc = dims.dim_from_pickle(spark, f"{AUX}/hgnc_to_ensembl.pkl")
     _, atoms = fg.refseq_closest_gene_edges(
         lines_of(spark, f"{S}/closest_gene.forgedb_sample.csv.gz"),
-        hgnc, rsid_dim_df(spark, m))
+        hgnc, rsid_dim_df(spark, m), REGISTRY)
     assert_pr(spark_atoms(atoms), golden, 1.0, "refseq closest gene")
 
 

@@ -3,6 +3,8 @@ lineage/resume, linking, sinks, dedup/similarity operators."""
 
 from __future__ import annotations
 
+import re
+
 import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
@@ -276,16 +278,60 @@ def test_manifest_hash_sees_duplicate_rows(spark):
 # --------------------------------------------------------------------------
 
 
+_TOKEN_RE = re.compile(r"[A-Za-z0-9:_.\-]+")
+
+
+def _oracle_mentions(dictionary: dict[str, str], text: str, maxn: int):
+    """The pure-Python linker the JVM path must reproduce, one text at a
+    time: n-grams longest first, exact then casefold lookup, one hit per
+    distinct mention, length-weighted score."""
+    ex = dict(dictionary)
+    fo: dict[str, str] = {}
+    for k, v in dictionary.items():
+        fo.setdefault(k.casefold(), v)
+    if not text:
+        return []
+    toks = _TOKEN_RE.findall(text)
+    seen = set()
+    out = []
+    for n in range(maxn, 0, -1):
+        for i in range(len(toks) - n + 1):
+            mention = " ".join(toks[i:i + n])
+            if mention in seen:
+                continue
+            ent = ex.get(mention)
+            score = 1.0
+            if ent is None:
+                ent = fo.get(mention.casefold())
+                score = 0.8
+            if ent is None:
+                continue
+            seen.add(mention)
+            # longer mentions are less ambiguous
+            score = score * min(1.0, 0.5 + 0.25 * n)
+            out.append((mention, ent, round(score, 4)))
+    out.sort()
+    return out
+
+
+def _oracle_link(dictionary, docs: dict[str, str], maxn: int, min_score: float):
+    """sorted (doc_id, mention, entity, score) rows with score >= min_score."""
+    return sorted((d, m, e, sc) for d, text in docs.items()
+                  for m, e, sc in _oracle_mentions(dictionary, text, maxn)
+                  if sc >= min_score)
+
+
 def test_mention_linking(spark):
     dictionary = {"PAK5": "ENSG00000101349", "p21 activated kinase 5":
                   "ENSG00000101349", "SNAP25": "ENSG00000132639"}
-    detect = linking.build_mention_udf(spark, dictionary, max_ngram=5)
-    docs = spark.createDataFrame(
-        [("d1", "the PAK5 kinase aka p21 activated kinase 5"),
-         ("d2", "snap25 lowercase mention"),
-         ("d3", "nothing here")],
-        "doc_id string, value string")
-    out = linking.link_documents(docs, detect).collect()
+    texts = {"d1": "the PAK5 kinase aka p21 activated kinase 5",
+             "d2": "snap25 lowercase mention",
+             "d3": "nothing here"}
+    docs = spark.createDataFrame(list(texts.items()), "doc_id string, value string")
+    link = linking.build_mention_join(spark, dictionary, max_ngram=5)
+    out = link(docs).collect()
+    assert sorted((r.doc_id, r.mention, r.entity, r.score) for r in out) == \
+        _oracle_link(dictionary, texts, 5, 0.5)
     by_doc = {}
     for r in out:
         by_doc.setdefault(r.doc_id, set()).add((r.mention, r.entity))
@@ -294,30 +340,26 @@ def test_mention_linking(spark):
     assert ("snap25", "ENSG00000132639") in by_doc["d2"]
     assert "d3" not in by_doc
     counts = {r.entity: r.n_mentions for r in
-              linking.entity_mention_counts(
-                  linking.link_documents(docs, detect)).collect()}
+              linking.entity_mention_counts(link(docs)).collect()}
     assert counts["ENSG00000101349"] == 2
 
 
 def test_mention_join_path_parity(spark):
-    """The fully-JVM join path must emit exactly the pandas-UDF path's
+    """The fully-JVM join path must emit exactly the pure-Python oracle's
     (doc_id, mention, entity, score) rows — same dictionary, texts with
     multi-word mentions, casefold hits, repeats, and empty strings."""
     dictionary = {"PAK5": "ENSG1", "p21 activated kinase 5": "ENSG1",
                   "SNAP25": "ENSG2", "kinase": "FAM1"}
+    texts = {"d1": "the PAK5 kinase aka p21 activated kinase 5",
+             "d2": "snap25 lowercase mention snap25 repeated",
+             "d3": "nothing here", "d4": "", "d5": "Kinase KINASE kinase"}
     docs = spark.createDataFrame(pa.table({
-        "doc_id": ["d1", "d2", "d3", "d4", "d5"],
-        "value": ["the PAK5 kinase aka p21 activated kinase 5",
-                  "snap25 lowercase mention snap25 repeated",
-                  "nothing here", "", "Kinase KINASE kinase"]}))
-    detect = linking.build_mention_udf(spark, dictionary, max_ngram=5)
-    udf_rows = sorted((r.doc_id, r.mention, r.entity, r.score)
-                      for r in linking.link_documents(
-                          docs, detect, min_score=0.0).collect())
+        "doc_id": list(texts), "value": list(texts.values())}))
+    oracle_rows = _oracle_link(dictionary, texts, 5, 0.0)
     linked = linking.build_mention_join(spark, dictionary, max_ngram=5)(docs)
     join_rows = sorted((r.doc_id, r.mention, r.entity, r.score)
                        for r in linked.collect())
-    assert join_rows == udf_rows
+    assert join_rows == oracle_rows
     assert any(m == "p21 activated kinase 5" for _, m, _, _ in join_rows)
     # the dictionaries are local relations: no Python-row scan in the plan
     # (docs is built through Arrow too, so any such scan is a dictionary's)

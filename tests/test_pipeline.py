@@ -6,15 +6,17 @@ import json
 import subprocess
 import sys
 import time
+from dataclasses import replace
 from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
-from biocypher_metta_spark import lineage, pipeline, sinks
-from biocypher_metta_spark.schema import load_default_registry
-from biocypher_metta_spark.sources.documents import span_lines
+from biocypher_metta_spark import dims, lineage, pipeline, sinks
+from biocypher_metta_spark.schema import SchemaRegistry, load_default_registry
+from biocypher_metta_spark.sources.documents import DOCUMENTS_SCHEMA, span_lines
 from biocypher_metta_spark.sources.gtf import GENE_KEYS, parse_gtf
+from biocypher_metta_spark.sources.rdf import parse_ntriples
 from biocypher_metta_spark.sources.synth import spans_from_files, synth_gtf_documents
 from biocypher_metta_spark.streaming.incremental import (
     read_documents_stream,
@@ -251,6 +253,108 @@ def test_materialize_branch_failure_cancels_siblings(spark, tmp_path):
     assert not (out / "_lineage").exists()
     assert not (out / "type_defs.metta").exists()
     assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+
+
+
+# args an entry cannot run without
+REQUIRED_ARGS = {
+    "parent_pathway_of": {"label": "parent_pathway_of"},
+    "child_pathway_of": {"label": "child_pathway_of"},
+    "topld": {"chr": "chr16", "ancestry": "EUR"},
+    "ontology_nodes": {"label": "go"},
+    "ontology_edges": {"label": "go_subtype_of"},
+}
+EDGE_ENTRIES = {
+    "transcribed_to", "transcribed_from", "genes_pathways", "parent_pathway_of",
+    "child_pathway_of", "string", "tflink", "coexpression", "epd_promoter_gene",
+    "enhancer_atlas_gene", "dbsuper_gene", "peregrine_gene", "rna_central_go",
+    "gaf", "uniprot_translates", "abc_gene", "refseq_closest_gene", "topld",
+    "gtex_eqtl", "ontology_edges",
+}
+KEY_VALUE_DIMS = (
+    "abc_tissues", "dbsnp_pos", "dbsuper_tissues", "ea_tissues",
+    "ensembl_to_uniprot", "entrez_to_ensembl", "gtex_tissues", "hgnc_ensembl_map",
+    "hgnc_to_ensembl", "peregrine_tissues", "roadmap_tissues",
+)
+
+
+def _documents(spark, lines_by_kind: dict[str, list[str]]):
+    """One document per span kind, in one partition."""
+    rows = [(f"{kind}-0", [(kind, line, None, i) for i, line in enumerate(lines)])
+            for kind, lines in lines_by_kind.items()]
+    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), DOCUMENTS_SCHEMA)
+
+
+def _key_value(spark, mapping: dict[str, str]):
+    return dims.local_frame(spark, {"key": list(mapping), "value": list(mapping.values())},
+                            "key string, value string")
+
+
+def _rsid_dim(spark, rows: list[tuple]):
+    return dims.local_frame(spark, {"rsid": [r[0] for r in rows],
+                                    "chr": [r[1] for r in rows],
+                                    "pos": [r[2] for r in rows]},
+                            "rsid string, chr string, pos long")
+
+
+def test_every_registry_entry_builds_on_empty_input(spark, monkeypatch):
+    """All 40 entries build over empty documents and dimensions: each
+    returns the frame shape `build` selects from, and their union renders
+    no atom. Entries are recorded as `build` calls them, so each plan is
+    built once."""
+    docs = _documents(spark, {})
+    dim_frames = {name: _key_value(spark, {}) for name in KEY_VALUE_DIMS}
+    dim_frames["dbsnp_rsid"] = _rsid_dim(spark, [])
+    dim_frames["ontology_triples"] = parse_ntriples(span_lines(docs, "ontology"))
+    dim_frames["liftover"] = lambda c, p: p
+    ctx = pipeline.PipelineContext(spark, docs, REGISTRY, dims=dim_frames)
+    assert len(pipeline.PIPELINE_REGISTRY) == 40
+    built = {}
+
+    def recorded(name, entry):
+        def run(ctx, **args):
+            built[name] = entry(ctx, **args)
+            return built[name]
+        return run
+
+    for name, entry in list(pipeline.PIPELINE_REGISTRY.items()):
+        monkeypatch.setitem(pipeline.PIPELINE_REGISTRY, name, recorded(name, entry))
+    config = [{"adapter": name, "args": REQUIRED_ARGS.get(name, {})}
+              for name in pipeline.PIPELINE_REGISTRY]
+    result = pipeline.build(ctx, config)
+    assert sorted(built) == sorted(pipeline.PIPELINE_REGISTRY)
+    for name, (typed, atoms, is_edge) in built.items():
+        assert is_edge == ("src" in typed.columns) == (name in EDGE_ENTRIES), name
+        need = {"src", "tgt", "label"} if is_edge else {"id", "label"}
+        assert need <= set(typed.columns), name
+        assert atoms.columns == ["atom"], name
+    assert result.atoms.count() == 0
+
+
+def test_forgedb_edges_render_with_context_registry(spark):
+    """abc_gene and refseq_closest_gene render their edge atoms with the
+    context's schema registry, so its output labels reach the atoms."""
+    abc = ["rs1", "chr1"] + [""] * 27
+    abc[10], abc[24], abc[27] = "GENE1", "0.5", "tissueA"
+    closest = ["rs1", "chr1", "", "", "", "100", "", "GENE1"]
+    docs = _documents(spark, {"abc": [",".join(abc)],
+                              "closest_gene": [",".join(closest)]})
+    registry = SchemaRegistry(edge_node_types=dict(REGISTRY.edge_node_types))
+    for label in ("regulatory_region_gene", "closest_gene"):
+        registry.edge_node_types[label] = replace(
+            registry.edge_node_types[label], output_label=f"renamed_{label}")
+    ctx = pipeline.PipelineContext(spark, docs, registry, dims={
+        "hgnc_to_ensembl": _key_value(spark, {"GENE1": "ENSG1"}),
+        "abc_tissues": _key_value(spark, {"tissueA": "UBERON_1"}),
+        "dbsnp_rsid": _rsid_dim(spark, [("rs1", "chr1", 50)]),
+    })
+    for name, label, src_type in (("abc_gene", "regulatory_region_gene",
+                                   "regulatory_region"),
+                                  ("refseq_closest_gene", "closest_gene", "snp")):
+        typed, atoms, is_edge = pipeline.PIPELINE_REGISTRY[name](ctx)
+        assert is_edge
+        got = {r.atom for r in atoms.collect()}
+        assert f"(renamed_{label} ({src_type} rs1) (gene ENSG1))" in got, got
 
 
 # Imports everything the KG build path uses, in a fresh interpreter so no
