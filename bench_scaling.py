@@ -1,171 +1,162 @@
-"""Scaling-efficiency evidence (north rule: throughput scaling >= 0.8
-from N to 4N executors; sandbox proxy = local[8] vs local[32] on the
-SAME input — see BASELINE.md).
+"""N->4N scaling of the KG job (north rule: throughput scaling >= 0.8 from
+N to 4N executors), measured on the job that ships: `jobs/build_kg.py`'s
+`pipeline.build` + `pipeline.materialize` with its `CONFIG`, up to the
+written `.metta` shards, node and edge tables and lineage manifests.
 
-Runs the KG-construction job in fresh subprocesses (one JVM per
-parallelism level), measures steady-state throughput (warmup pass first,
-then the timed pass inside one JVM), writes BENCH_SCALING_LAST.md.
+Protocol:
+- the documents are synthesized once, in their own JVM, and written to
+  parquet beside a small warm-up table; every level reads both through
+  `read_documents`;
+- the levels are local[1] and local[<cores>], each in a fresh JVM that
+  runs the job over the warm-up table first and then the timed job over
+  the full table;
+- every level's written atoms and manifest row totals must be nonzero
+  and equal across levels, or the run fails before writing the report.
 
-Usage: python bench_scaling.py [n_docs]
+Efficiency is the speed-up from local[1] to local[<cores>] divided by
+<cores>. Writes BENCH_SCALING_LAST.md and prints one JSON line.
+
+Usage: python bench_scaling.py [n_docs]     (default 400000)
 """
 
 from __future__ import annotations
 
 import json
+import multiprocessing
 import os
-import subprocess
+import shutil
 import sys
+import tempfile
+import time
+from concurrent.futures import ProcessPoolExecutor
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent
+sys.path.insert(0, str(REPO))
 
-CHILD = r"""
-import json, sys, time
-sys.path.insert(0, {repo!r})
-from biocypher_metta_spark import get_spark
-from biocypher_metta_spark.adapters import gencode
-from biocypher_metta_spark.schema import load_default_registry
-from biocypher_metta_spark.sources.documents import span_lines
-from biocypher_metta_spark.sources.gtf import GENE_KEYS, parse_gtf
-from biocypher_metta_spark.sources.synth import synth_gtf_documents
-
-n_docs = {n_docs}
-spark = get_spark("bcm-scaling", master={master!r}, extra_confs={confs!r})
-spark.sparkContext.setLogLevel("ERROR")
-reg = load_default_registry()
-
-def run_once(n):
-    docs = synth_gtf_documents(spark, n)
-    gtf = parse_gtf(span_lines(docs, "gtf"), keys=GENE_KEYS)
-    _, a1 = gencode.gene_nodes(gtf)
-    _, a2 = gencode.transcript_nodes(gtf)
-    _, a3 = gencode.transcribed_edges(gtf, reg, "to")
-    return a1.unionByName(a2).unionByName(a3).count()
-
-run_once(max(n_docs // 20, 1000))  # JVM/codegen warmup, excluded
-t0 = time.time()
-n_atoms = run_once(n_docs)
-dt = time.time() - t0
-print(json.dumps(dict(n_atoms=n_atoms, seconds=dt,
-                      triples_per_sec=n_atoms / dt)))
-"""
+from biocypher_metta_spark import get_spark, pipeline  # noqa: E402
+from biocypher_metta_spark.schema import load_default_registry  # noqa: E402
+from biocypher_metta_spark.sources.documents import read_documents  # noqa: E402
+from biocypher_metta_spark.sources.synth import synth_gtf_documents  # noqa: E402
+from jobs.build_kg import CONFIG  # noqa: E402
 
 
-def _run_child(master: str, confs: dict, n_docs: int, repeats: int) -> dict:
-    """Best-of-N fresh-JVM runs: the sandbox VM shares a host with noisy
-    neighbors (identical configs measured 2.7x apart minutes apart), so
-    per-level minima are the comparable statistic."""
-    best = None
-    for _ in range(repeats):
-        code = CHILD.format(repo=str(REPO), n_docs=n_docs,
-                            master=master, confs=confs)
-        out = subprocess.run([sys.executable, "-c", code], env=dict(os.environ),
-                             capture_output=True, text=True, timeout=1800)
-        lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
-        if not lines:
-            raise RuntimeError(f"child failed for {master}:\n{out.stderr[-2000:]}")
-        r = json.loads(lines[-1])
-        if best is None or r["seconds"] < best["seconds"]:
-            best = r
-    return best
+def measure(spark, docs_path: str, out_dir: str) -> dict:
+    """The timed op: the KG job over the documents table at `docs_path`,
+    written to `out_dir`. Returns its wall time and, counted after the
+    clock stops, the atoms it wrote and its manifests' row totals."""
+    registry = load_default_registry()
+    t0 = time.perf_counter()
+    ctx = pipeline.PipelineContext(spark, read_documents(spark, docs_path), registry)
+    manifests = pipeline.materialize(pipeline.build(ctx, CONFIG), out_dir,
+                                     registry, run_id="bench-scaling")
+    seconds = time.perf_counter() - t0
+    return {"seconds": seconds,
+            "atoms": spark.read.text(f"{out_dir}/metta").count(),
+            "rows": {name: sum(r["n_rows"] for r in rows)
+                     for name, rows in sorted(manifests.items())}}
 
 
-def run_level(cpus: int, n_docs: int, repeats: int = 2) -> dict:
-    return _run_child(f"local[{cpus}]",
-                      {"spark.sql.shuffle.partitions": str(max(cpus, 8))},
-                      n_docs, repeats)
+def _session(cpus: int):
+    spark = get_spark("bcm-scaling", master=f"local[{cpus}]",
+                      extra_confs={"spark.ui.showConsoleProgress": "false"})
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
 
 
-def run_cluster_level(workers: int, cores: int, n_docs: int,
-                      mem_mb: int = 9216, repeats: int = 2) -> dict:
-    """Separate executor JVMs via local-cluster[workers,cores,mem]: the
-    faithful N->4N *executor count* proxy — each worker brings its own
-    heap and GC, isolating single-JVM memory-bus/GC saturation from true
-    scaling (the real cluster contract in the north rule)."""
-    confs = {"spark.executor.memory": "8g",
-             "spark.sql.shuffle.partitions": str(max(workers * cores, 8)),
-             # ActiveProcessorCount stands in for the cgroup CPU limit a
-             # real cluster's container runtime gives each executor: on a
-             # bare shared host every JVM sizes its GC/JIT pools to ALL
-             # host cores (4 executors x 32 ParallelGC threads thrash).
-             "spark.executor.extraJavaOptions":
-                 ("-XX:+UseParallelGC -XX:+AlwaysPreTouch "
-                  f"-XX:ActiveProcessorCount={cores}")}
-    return _run_child(f"local-cluster[{workers},{cores},{mem_mb}]",
-                      confs, n_docs, repeats)
+def synthesize(cpus: int, n_docs: int, docs_path: str, warm_path: str) -> None:
+    """Writes the documents at local[cpus], one file per core: the GTF
+    parse runs one task per file, so fewer files would idle cores."""
+    spark = _session(cpus)
+    try:
+        synth_gtf_documents(spark, n_docs).write.parquet(docs_path)
+        synth_gtf_documents(spark, max(n_docs // 20, 1000)).write.parquet(warm_path)
+    finally:
+        spark.stop()
 
 
-def main():
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
-    r2 = run_level(2, n_docs)
-    r8 = run_level(8, n_docs)
-    r32 = run_level(32, n_docs)
-    # executor-count scaling with separate JVMs: N=1 worker vs 4N=4 workers,
-    # 8 cores each (the north rule's N->4N executors, as faithfully as a
-    # single host allows)
-    c1 = run_cluster_level(1, 8, n_docs)
-    c4 = run_cluster_level(4, 8, n_docs)
-    eff_2_8 = (r8["triples_per_sec"] / r2["triples_per_sec"]) / 4
-    eff = (r32["triples_per_sec"] / r8["triples_per_sec"]) / 4
-    eff_exec = (c4["triples_per_sec"] / c1["triples_per_sec"]) / 4
-    result = {
-        "n_docs": n_docs,
-        "n_atoms": r32["n_atoms"],
-        "local2": {k: round(v, 2) for k, v in r2.items()},
-        "local8": {k: round(v, 2) for k, v in r8.items()},
-        "local32": {k: round(v, 2) for k, v in r32.items()},
-        "cluster_1x8": {k: round(v, 2) for k, v in c1.items()},
-        "cluster_4x8": {k: round(v, 2) for k, v in c4.items()},
-        "scaling_efficiency_2_to_8": round(eff_2_8, 3),
-        "scaling_efficiency_8_to_32": round(eff, 3),
-        "scaling_efficiency_1_to_4_executors": round(eff_exec, 3),
-        "target": 0.8,
-        "pass": max(eff_2_8, eff_exec) >= 0.8,
-    }
+def run_level(cpus: int, docs_path: str, warm_path: str, work: str) -> dict:
+    """One level: warm-up op, then the timed op, in this process's JVM."""
+    spark = _session(cpus)
+    try:
+        measure(spark, warm_path, f"{work}/warm-{cpus}")
+        spark.catalog.clearCache()
+        return measure(spark, docs_path, f"{work}/out-{cpus}")
+    finally:
+        spark.stop()
+
+
+def _in_fresh_jvm(fn, *args):
+    """Run `fn(*args)` in a new interpreter, so it starts its own JVM."""
+    with ProcessPoolExecutor(1, mp_context=multiprocessing.get_context("spawn")) as ex:
+        return ex.submit(fn, *args).result()
+
+
+def _dir_mb(path: str) -> float:
+    return sum(p.stat().st_size for p in Path(path).rglob("*.parquet")) / 2**20
+
+
+def main() -> None:
+    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 400_000
+    cores = len(os.sched_getaffinity(0))
+    levels = [1, cores]
+    work = tempfile.mkdtemp(prefix="bench_scaling-")
+    try:
+        docs_path, warm_path = f"{work}/documents", f"{work}/documents_warm"
+        _in_fresh_jvm(synthesize, cores, n_docs, docs_path, warm_path)
+        input_mb = _dir_mb(docs_path)
+        runs = {c: _in_fresh_jvm(run_level, c, docs_path, warm_path, work)
+                for c in levels}
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+    outputs = {c: (r["atoms"], r["rows"]) for c, r in runs.items()}
+    first = outputs[levels[0]]
+    if first[0] == 0 or 0 in first[1].values() \
+            or any(o != first for o in outputs.values()):
+        raise SystemExit(f"outputs are empty or differ across levels: {outputs}")
+
+    t1, tn = runs[1]["seconds"], runs[cores]["seconds"]
+    eff = t1 / tn / cores
+    result = {"n_docs": n_docs, "input_mb": round(input_mb, 1), "cores": cores,
+              "atoms": first[0], "rows": first[1],
+              "seconds": {f"local[{c}]": round(r["seconds"], 2) for c, r in runs.items()},
+              "scaling_efficiency": round(eff, 3), "target": 0.8, "meets_target": eff >= 0.8}
     print(json.dumps(result))
 
-    md = f"""# BENCH — measured numbers (this engine)
+    rows = "\n".join(
+        f"| local[{c}] | {n_docs:,} | {r['atoms']:,} | {r['rows'].get('nodes', 0):,} "
+        f"| {r['rows'].get('edges', 0):,} | {r['seconds']:.2f} | {r['atoms'] / r['seconds']:,.0f} |"
+        for c, r in runs.items())
+    cpu = next((line.split(":", 1)[1].strip() for line in
+                Path("/proc/cpuinfo").read_text().splitlines()
+                if line.startswith("model name")), "unknown CPU")
+    md = f"""# KG job scaling, local[1] -> local[{cores}]
 
-## KG construction throughput + N->4N scaling (north rule)
+Job: `jobs/build_kg.py`'s `pipeline.build` + `pipeline.materialize` over
+its `CONFIG` ({", ".join(e["adapter"] for e in CONFIG)}),
+up to the written `.metta` shards, node and edge tables and lineage
+manifests.
 
-Job: interleaved documents spans -> GTF parse -> gene/transcript nodes +
-transcribed_to edges -> MeTTa atoms (count materialization). Same input
-at every parallelism level, one fresh JVM each, warmup pass excluded.
-Sandbox proxy for cluster sizes per BASELINE.md: two N->4N pairs are
-reported — local[2]->local[8] and local[8]->local[32].
+Input: one parquet documents table of {n_docs:,} synthetic GTF documents
+({input_mb:.1f} MB), read by every level through `read_documents`.
 
-| parallelism | docs | atoms | seconds | triples/sec |
-|---|---|---|---|---|
-| local[2] | {n_docs:,} | {r2['n_atoms']:,} | {r2['seconds']:.2f} | {r2['triples_per_sec']:,.0f} |
-| local[8] | {n_docs:,} | {r8['n_atoms']:,} | {r8['seconds']:.2f} | {r8['triples_per_sec']:,.0f} |
-| local[32] | {n_docs:,} | {r32['n_atoms']:,} | {r32['seconds']:.2f} | {r32['triples_per_sec']:,.0f} |
-| local-cluster[1,8] (1 executor JVM) | {n_docs:,} | {c1['n_atoms']:,} | {c1['seconds']:.2f} | {c1['triples_per_sec']:,.0f} |
-| local-cluster[4,8] (4 executor JVMs) | {n_docs:,} | {c4['n_atoms']:,} | {c4['seconds']:.2f} | {c4['triples_per_sec']:,.0f} |
+Each level runs in a fresh JVM: the job over a
+{max(n_docs // 20, 1000):,}-doc warm-up table first, then the timed job.
+Host: {cores} cores ({cpu}).
 
-**Scaling efficiency N->4N: local[2]->local[8] cores = {eff_2_8:.3f};
-1->4 separate executor JVMs (8 cores each) = {eff_exec:.3f};
-local[8]->local[32] threads-in-one-JVM = {eff:.3f}** (target >= 0.8)
+| parallelism | docs | atoms | node rows | edge rows | seconds | atoms/s |
+|---|---|---|---|---|---|---|
+{rows}
 
-Analysis: the job is map-only (scan -> explode -> regex parse -> render),
-so the only single-node scaling limiters are shared memory bandwidth and
-GC. The north rule's N->4N *executors* criterion is evidenced two ways:
-(a) local[2]->local[8] core scaling, and (b) 1->4 separate executor JVMs
-via local-cluster[4,8,m] — each worker gets its own heap and GC, which is
-what distinguishes a real 4N-executor cluster from 4N threads in one JVM.
-The 8->32-threads-in-one-JVM point is reported for completeness; it
-saturates on the shared memory bus/GC of a single JVM, which a multi-
-executor cluster does not share (the 1->4 executor-JVM number on the same
-32 physical cores is the apples-to-apples refutation/confirmation).
-Tuning applied from these experiments (now engine defaults): ParallelGC
-(+35% at 32 threads) and a deliberately modest 8g heap (32g was 3x
-slower — young-gen blowout).
+Outputs checked: every level wrote the same nonzero number of atoms and
+the same manifest row totals.
 
-Reproduce: `python bench_scaling.py {n_docs}`; per-round operator
-timings: `python bench.py` (BENCH_r{{N}}.json).
+**Scaling efficiency local[1] -> local[{cores}]: {eff:.3f}** (target >= 0.8:
+{"met" if eff >= 0.8 else "not met"}).
+
+Reproduce: `python bench_scaling.py {n_docs}`.
 """
-    # Own artifact file: BENCH.md's scaling sections carry hand-written
-    # analysis (multi-JVM collapse bisection, controls) that an automated
-    # rewrite once clobbered — generated output stays out of it.
     (REPO / "BENCH_SCALING_LAST.md").write_text(md)
 
 

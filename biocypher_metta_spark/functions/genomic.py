@@ -34,12 +34,6 @@ def genomic_window(chr_col: Column, start_col: Column, end_col: Column,
     return pred
 
 
-def rebase_0_to_1(col: Column) -> Column:
-    """0-based -> 1-based coordinate re-basing (+1), the P12 pattern
-    (enhancer_atlas_adapter.py:54-55, epd_adapter.py:39-40, etc.)."""
-    return (col.cast("long") + 1)
-
-
 def interval_point_join(intervals, points, bucket: int = 10_000,
                         chrom: str = "chrom", start: str = "start",
                         end: str = "end", pos: str = "pos"):

@@ -25,21 +25,20 @@ from pyspark.sql import functions as F
 
 
 def write_partitioned(df: DataFrame, path: str,
-                      partition_by: list[str],
-                      mode: str = "overwrite") -> None:
+                      partition_by: list[str]) -> None:
     """Dynamic partition overwrite: only partitions present in `df` are
     replaced (resume = re-run the failed partitions' input slice). The
     mode is a writer option, so the session conf is left alone and
     concurrent writers do not race on it."""
-    (df.write.mode(mode).option("partitionOverwriteMode", "dynamic")
+    (df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
      .partitionBy(*partition_by).parquet(path))
 
 
-def partition_manifest(df: DataFrame, partition_by: list[str],
-                       content_cols: list[str] | None = None) -> list[dict]:
+def partition_manifest(df: DataFrame, partition_by: list[str]) -> list[dict]:
     """Per-partition lineage rows: key -> row count + order-insensitive
-    content hash (sum of row xxhashes mod 2^64 — distributed, no sort)."""
-    cols = content_cols or [c for c in df.columns if c not in partition_by]
+    content hash over the non-partition columns (sum of row xxhashes mod
+    2^64 — distributed, no sort)."""
+    cols = [c for c in df.columns if c not in partition_by]
     row_hash = F.xxhash64(*[F.coalesce(F.col(c).cast("string"), F.lit("\x00"))
                             for c in cols])
     # A sum, unlike a xor, does not cancel equal rows in pairs. It runs as
@@ -58,16 +57,13 @@ def partition_manifest(df: DataFrame, partition_by: list[str],
     return rows
 
 
-def write_manifest(manifest_rows: list[dict], path: str,
-                   run_id: str, extra: dict | None = None) -> None:
+def write_manifest(manifest_rows: list[dict], path: str, run_id: str) -> None:
     out = {
         "run_id": run_id,
         "written_at": time.time(),
         "partitions": sorted(manifest_rows,
                              key=lambda r: json.dumps(r, sort_keys=True, default=str)),
     }
-    if extra:
-        out.update(extra)
     p = Path(path)
     p.parent.mkdir(parents=True, exist_ok=True)
     p.write_text(json.dumps(out, indent=1, default=str))

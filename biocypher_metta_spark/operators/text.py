@@ -366,8 +366,8 @@ def tfidf_topk(df: DataFrame, text_col: str = "text",
     spark.sql.shuffle.partitions to the EXPLODED row count (~tokens, not
     docs): a 1G-token corpus through 32 partitions puts ~31M rows in each
     per-task window sort — measured GC-overhead OOM on an 8g heap; ~5M
-    exploded rows per partition is comfortable (tools/scale_rehearsal.py
-    sizes it as docs/100k)."""
+    exploded rows per partition is comfortable (docs/100k; BENCH.md,
+    "Round-3b text-operator rehearsal")."""
     from pyspark.sql.window import Window
 
     tf = (df.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("token"))

@@ -23,8 +23,12 @@ jobs, each from its own thread:
     edges ─ partitioned write ─ manifest read-back ─┼─ all succeeded ─ type_defs.metta
     atoms ─ .metta shards ──────────────────────────┘                  + _lineage/*.json
 
-Shared scans are cached once; Catalyst dedups the rest. Outputs are
-written with dynamic partition overwrite + lineage manifests (resume).
+The GTF and UniProt parses are cached once and shared. Every other
+`ctx.lines`/`ctx.lines_keyed` read is uncached: it scans the documents
+table once for the entry that makes it, in each output (nodes, edges,
+atoms) that entry feeds; Catalyst does not share those scans. Outputs
+are written with dynamic partition overwrite + lineage manifests
+(resume).
 """
 
 from __future__ import annotations
@@ -51,7 +55,7 @@ from biocypher_metta_spark.adapters import (
 from biocypher_metta_spark.adapters import regulatory as reg
 from biocypher_metta_spark.canonicalize import dedup_nodes
 from biocypher_metta_spark.schema import SchemaRegistry, load_default_registry
-from biocypher_metta_spark.sources.documents import explode_spans, span_lines
+from biocypher_metta_spark.sources.documents import keyed_span_lines, span_lines
 from biocypher_metta_spark.sources.gtf import GENE_KEYS, parse_gtf
 from biocypher_metta_spark.sources.swiss import parse_swiss_spans
 
@@ -84,15 +88,9 @@ class PipelineContext:
         return span_lines(self.docs, kind)
 
     def lines_keyed(self, prefix: str, key_col: str) -> DataFrame:
-        """S9 fan-in via span kinds: spans tagged '<prefix>:<key>' (e.g.
-        'pwm:ATF1_HUMAN.H11MO.0.B', 'gtex:Adipose_Subcutaneous') become
-        lines carrying the key as a column — the Spark twin of
-        filename-carries-the-key directory scans."""
-        sp = explode_spans(self.docs).filter(
-            F.col("kind").startswith(prefix + ":"))
-        return sp.select(
-            "doc_id", "offset", F.col("text").alias("value"),
-            F.expr(f"substring(kind, {len(prefix) + 2})").alias(key_col))
+        """S9 fan-in via span kinds: spans tagged '<prefix>:<key>' become
+        lines carrying the key as column `key_col`."""
+        return keyed_span_lines(self.docs, prefix, key_col)
 
     def swiss(self) -> DataFrame:
         """Parsed UniProt records, cached so the protein nodes and the

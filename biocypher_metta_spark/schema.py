@@ -69,10 +69,6 @@ class EdgeTypeInfo:
     output_label: str | None
     edge_type: str  # normalized schema key (the MeTTa edge Type name)
 
-    @property
-    def final_label(self) -> str:
-        return self.output_label if self.output_label is not None else None
-
 
 @dataclass
 class SchemaRegistry:

@@ -1,5 +1,5 @@
-"""Sinks: MeTTa text shards, Prolog facts, Neo4j-style CSV, and the
-queryable triple table.
+"""Sinks: MeTTa text shards, Prolog facts, Neo4j-style CSV rows,
+N-Triples lines and the queryable triple table.
 
 Reference: metta_writer.py:91-126 (append-mode text files),
 prolog_writer.py:47-120 (alternate rendering — proves the sink is
@@ -14,21 +14,21 @@ order is incidental; ours is reproducible).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from biocypher_metta_spark.schema import SchemaRegistry
 from biocypher_metta_spark.serializer import escape_str
 
 
-def write_metta_text(atoms: DataFrame, path: str, atom_col: str = "atom",
-                     mode: str = "overwrite") -> None:
-    """Deterministic .metta shards: sorted within partitions, one atom
-    per line. Repartition count inherits from upstream — callers set it
-    via repartition(chr/label) for pruning-friendly layout."""
-    (atoms.select(F.col(atom_col).alias("value"))
+def write_metta_text(atoms: DataFrame, path: str) -> None:
+    """Deterministic .metta shards from the `atom` column, overwriting
+    `path`: sorted within partitions, one atom per line. Repartition count
+    inherits from upstream — callers set it via repartition(chr/label) for
+    pruning-friendly layout."""
+    (atoms.select(F.col("atom").alias("value"))
      .sortWithinPartitions("value")
-     .write.mode(mode).text(path))
+     .write.mode("overwrite").text(path))
 
 
 def write_triple_table(nodes: DataFrame | None, edges: DataFrame | None,
@@ -82,17 +82,15 @@ def prolog_edge_facts(edges: DataFrame, registry: SchemaRegistry,
 
 
 # ---------------------------------------------------------------------------
-# Neo4j-style CSV export (K7): tab-delimited, array_delimiter '|',
-# skip_duplicate_nodes via dropDuplicates
+# Neo4j-style CSV rows (K7): array_delimiter '|', skip_duplicate_nodes
+# via dropDuplicates
 # ---------------------------------------------------------------------------
 
 
 def neo4j_rows(nodes: DataFrame,
                array_cols: list[str] | None = None) -> DataFrame:
-    """The transformation write_neo4j_csv applies before writing:
-    skip_duplicate_nodes semantics (dropDuplicates on label+id) and
-    '|'-joined array columns. Exposed so the driver gate can value-check
-    the dedup-on-write path without a filesystem round-trip."""
+    """The rows a Neo4j CSV import takes: skip_duplicate_nodes semantics
+    (dropDuplicates on label+id) and '|'-joined array columns."""
     df = nodes.dropDuplicates(["label", "id"])
     for c in (array_cols or []):
         if c in df.columns:
@@ -100,16 +98,9 @@ def neo4j_rows(nodes: DataFrame,
     return df
 
 
-def write_neo4j_csv(nodes: DataFrame, path: str,
-                    array_cols: list[str] | None = None,
-                    mode: str = "overwrite") -> None:
-    df = neo4j_rows(nodes, array_cols)
-    df.write.mode(mode).option("sep", "\t").option("header", True).csv(path)
-
-
 # ---------------------------------------------------------------------------
 # N-Triples (RDF) export: the fourth sink next to MeTTa atoms, Prolog
-# facts, and Neo4j CSV — W3C N-Triples lines so the KG loads into any
+# facts, and Neo4j CSV rows — W3C N-Triples lines so the KG loads into any
 # triple store. Node -> rdf:type statement, edge -> predicate
 # statement, scalar property -> literal statement. IRIs are
 # deterministic (base + label/id with minimal percent-encoding of the

@@ -67,11 +67,9 @@ def explode_spans(df: DataFrame) -> DataFrame:
     )
 
 
-def span_lines(df: DataFrame, kind: str) -> DataFrame:
-    """Text payloads of one format family: filter on span kind — this
-    predicate reaches the scan (partition pruning when the table is
-    partitioned/bucketed by kind). Selects only kind/text/offset so
-    nested-schema pruning drops media_ref from the parquet read."""
+def _text_spans(df: DataFrame) -> DataFrame:
+    """(doc_id, span struct<kind, text, offset>) per span, with media_ref
+    pruned from the parquet read."""
     # arrays_zip over direct nested-field extractions is the one explode
     # form where nested-schema pruning survives a downstream filter: the
     # parquet ReadSchema drops media_ref (verified via .explain — plain
@@ -79,11 +77,32 @@ def span_lines(df: DataFrame, kind: str) -> DataFrame:
     z = F.arrays_zip(F.col("spans.kind").alias("kind"),
                      F.col("spans.text").alias("text"),
                      F.col("spans.offset").alias("offset"))
+    return df.select("doc_id", F.explode(z).alias("span"))
+
+
+def span_lines(df: DataFrame, kind: str) -> DataFrame:
+    """Text payloads of one format family: filter on span kind — this
+    predicate reaches the scan (partition pruning when the table is
+    partitioned/bucketed by kind)."""
     return (
-        df.select("doc_id", F.explode(z).alias("span"))
+        _text_spans(df)
         .filter(F.col("span.kind") == kind)
         .select("doc_id", F.col("span.offset").alias("offset"),
                 F.col("span.text").alias("value"))
+    )
+
+
+def keyed_span_lines(df: DataFrame, prefix: str, key_col: str) -> DataFrame:
+    """Text payloads of the spans tagged '<prefix>:<key>' (e.g.
+    'pwm:ATF1_HUMAN.H11MO.0.B', 'gtex:Adipose_Subcutaneous'), with the key
+    as column `key_col` — the Spark twin of filename-carries-the-key
+    directory scans. Reads the spans as `span_lines` does."""
+    return (
+        _text_spans(df)
+        .filter(F.col("span.kind").startswith(prefix + ":"))
+        .select("doc_id", F.col("span.offset").alias("offset"),
+                F.col("span.text").alias("value"),
+                F.expr(f"substring(span.kind, {len(prefix) + 2})").alias(key_col))
     )
 
 

@@ -4,7 +4,6 @@ Usage (cluster):
     spark-submit --py-files bcm_spark.zip jobs/build_kg.py \
         --input  s3://bucket/documents/           (parquet/Iceberg dir) \
         --output s3://bucket/kg_out/ \
-        --config configs/adapters.yaml            (optional) \
         --chr chr16 --start 53000000 --end 56000000  (optional window)
 
 Local smoke:
@@ -24,6 +23,16 @@ import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+
+# The job's adapters. The optional --chr/--start/--end window is passed to
+# the entries that carry an "args" dict (the node adapters).
+CONFIG = [
+    {"adapter": "gencode_gene", "args": {}},
+    {"adapter": "gencode_transcript", "args": {}},
+    {"adapter": "gencode_exon", "args": {}},
+    {"adapter": "transcribed_to"},
+    {"adapter": "transcribed_from"},
+]
 
 
 def main() -> None:
@@ -55,13 +64,7 @@ def main() -> None:
 
     window = {k: getattr(args, k) for k in ("chr", "start", "end")
               if getattr(args, k) is not None}
-    config = [
-        {"adapter": "gencode_gene", "args": window},
-        {"adapter": "gencode_transcript", "args": window},
-        {"adapter": "gencode_exon", "args": window},
-        {"adapter": "transcribed_to"},
-        {"adapter": "transcribed_from"},
-    ]
+    config = [dict(e, args=window) if "args" in e else e for e in CONFIG]
     ctx = pipeline.PipelineContext(spark, docs, registry)
     result = pipeline.build(ctx, config)
     run_id = args.run_id or f"run-{int(time.time())}"

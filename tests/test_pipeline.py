@@ -14,7 +14,11 @@ from pyspark.sql import functions as F
 
 from biocypher_metta_spark import dims, lineage, pipeline, sinks
 from biocypher_metta_spark.schema import SchemaRegistry, load_default_registry
-from biocypher_metta_spark.sources.documents import DOCUMENTS_SCHEMA, span_lines
+from biocypher_metta_spark.sources.documents import (
+    DOCUMENTS_SCHEMA,
+    read_documents,
+    span_lines,
+)
 from biocypher_metta_spark.sources.gtf import GENE_KEYS, parse_gtf
 from biocypher_metta_spark.sources.rdf import parse_ntriples
 from biocypher_metta_spark.sources.synth import spans_from_files, synth_gtf_documents
@@ -385,3 +389,44 @@ def test_kg_path_loads_no_operator_or_gate_module():
         [sys.executable, "-c", _KG_PATH_IMPORTS, str(repo)],
         capture_output=True, text=True, check=True, timeout=300)
     assert out.stdout.split() == []
+
+
+def test_lines_keyed_reads_spans_without_media_ref(spark, tmp_path):
+    """Keyed span lines keep their rows and read the span struct without
+    media_ref, as span_lines does."""
+    rows = [("d0", [("pwm:M1", "A 1", None, 0), ("media", None, "img/0.png", 1),
+                    ("pwm:M2", "C 3", None, 2), ("gtf", "x", None, 3),
+                    ("pwm:M3", None, "img/1.png", 4)]),
+            ("d1", [("pwm:M1", "G 2", None, 5), ("pwmx:M9", "T", None, 6)])]
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(rows, DOCUMENTS_SCHEMA).write.parquet(path)
+    docs = read_documents(spark, path)
+    got = pipeline.PipelineContext(spark, docs, REGISTRY).lines_keyed("pwm", "model")
+    assert got.columns == ["doc_id", "offset", "value", "model"]
+    assert sorted(map(tuple, got.collect()), key=repr) == sorted(
+        [("d0", 0, "A 1", "M1"), ("d0", 2, "C 3", "M2"), ("d0", 4, None, "M3"),
+         ("d1", 5, "G 2", "M1")], key=repr)
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    read_schema = plan.split("ReadSchema: ", 1)[1].split("\n", 1)[0]
+    assert "offset" in read_schema and "media_ref" not in read_schema, read_schema
+
+
+def test_bench_scaling_measure_matches_one_materialize(spark, tmp_path):
+    """The scaling runner's timed op is the KG job: its atoms and manifest
+    rows agree with one `pipeline.materialize` of the job's config."""
+    import bench_scaling
+    from jobs.build_kg import CONFIG as JOB_CONFIG
+
+    path = str(tmp_path / "docs")
+    synth_gtf_documents(spark, 40).write.parquet(path)
+    got = bench_scaling.measure(spark, path, str(tmp_path / "bench"))
+    ctx = pipeline.PipelineContext(spark, read_documents(spark, path), REGISTRY)
+    want = pipeline.materialize(pipeline.build(ctx, JOB_CONFIG),
+                                str(tmp_path / "want"), REGISTRY)
+    want_atoms = spark.read.text(str(tmp_path / "want" / "metta"))
+    assert got["atoms"] == want_atoms.count() > 0
+    assert got["rows"] == {name: sum(r["n_rows"] for r in rows)
+                           for name, rows in want.items()}
+    assert set(got["rows"]) == {"nodes", "edges"} and all(got["rows"].values())
+    got_atoms = spark.read.text(str(tmp_path / "bench" / "metta"))
+    assert got_atoms.exceptAll(want_atoms).count() == 0
