@@ -16,12 +16,21 @@ library (reference: biocypher_metta/metta_writer.py:47-88
 * per-label property type map (str/int/float/str[]/float[]/obj) driving
   Spark column types.
 
+Without the schema YAML, ``load_default_registry`` falls back to what is
+embedded here: the compiled edge registry (FALLBACK_EDGE_TYPES), the
+Biolink chain (BIOLINK_PARENTS) and the three is_a edges the project's
+documents settle (FALLBACK_PARENTS). That fallback has no node data
+constructors, no other is_a edge, and no edge-type parents: every edge
+type is written as a root, ``(: TRANSCRIBED_TO Type)``, where the YAML
+gives ``(<: TRANSCRIBED_TO RELATED_TO_AT_INSTANCE_LEVEL)``.
+
 Everything here runs once on the driver at job start and is broadcast; no
 distributed work (the schema is ~80 entries).
 """
 
 from __future__ import annotations
 
+import warnings
 from dataclasses import dataclass, field
 from pathlib import Path
 
@@ -59,6 +68,22 @@ BIOLINK_PARENTS: dict[str, str] = {
     "biological_process_or_activity": "biological_entity",
     "related_to_at_instance_level": "related_to",
     "related_to_at_concept_level": "related_to",
+}
+
+# The schema YAML's is_a edges that the project's documents settle, for
+# the fallback registry. gene -> coding_element is PAPER.md §1.1's
+# `(<: GENE CODING_ELEMENT)`, read as the is_a edge itself: read as a
+# grandparent line it would contradict the reference line
+# `(<: GENE POSITION_ENTITY)`, and as the edge it agrees with it. The two
+# edges above follow from that line and `(<: CODING_ELEMENT
+# BIOLOGICAL_ENTITY)` (tests/golden_type_defs_subset.metta) under
+# ref_ancestor's grandparent rule. For every other schema type those
+# lines record only the grandparent, so its parent is left out rather
+# than guessed.
+FALLBACK_PARENTS: dict[str, str] = {
+    "gene": "coding_element",
+    "coding_element": "position_entity",
+    "position_entity": "biological_entity",
 }
 
 
@@ -118,11 +143,14 @@ class SchemaRegistry:
                 for l in labels:
                     reg.node_labels[_norm(l)] = type_key
                     reg.properties[_norm(l)] = {k: str(t) for k, t in props.items()}
-        # graft the public Biolink ancestor edges above the YAML's roots
-        # (YAML-declared parents win on conflict)
-        for child, parent in BIOLINK_PARENTS.items():
-            reg.parents.setdefault(child, parent)
+        reg.graft_biolink()
         return reg
+
+    def graft_biolink(self) -> None:
+        """Graft the public Biolink ancestor edges above the schema's
+        roots; parents the schema declares win on conflict."""
+        for child, parent in BIOLINK_PARENTS.items():
+            self.parents.setdefault(child, parent)
 
     # ------------------------------------------------------------------
     # edge serialization lookups (metta_writer.py:137-143)
@@ -197,13 +225,26 @@ DEFAULT_SCHEMA_PATH = Path("/root/reference/config/schema_config.yaml")
 
 def load_default_registry() -> SchemaRegistry:
     """Registry from the reference's schema YAML when present, else the
-    embedded fallback (FALLBACK_EDGE_TYPES below) so the engine is
-    standalone."""
+    embedded fallback so the engine is standalone.
+
+    The fallback carries the compiled edge registry (FALLBACK_EDGE_TYPES),
+    the Biolink chain (BIOLINK_PARENTS) and the three documented is_a
+    edges (FALLBACK_PARENTS). Until the YAML is in the repository it
+    lacks the node data constructors, every other is_a edge, and the
+    edge types' parents; falling back warns, naming that gap."""
     if DEFAULT_SCHEMA_PATH.exists():
         return SchemaRegistry.from_yaml(DEFAULT_SCHEMA_PATH)
-    reg = SchemaRegistry()
+    warnings.warn(
+        f"{DEFAULT_SCHEMA_PATH} is absent: using the embedded schema "
+        "fallback, whose type_defs.metta lacks the node data constructors, "
+        "every is_a edge beyond the Biolink chain and "
+        + ", ".join(f"{c} -> {p}" for c, p in FALLBACK_PARENTS.items())
+        + ", and the edge types' parents",
+        stacklevel=2)
+    reg = SchemaRegistry(parents=dict(FALLBACK_PARENTS))
     for label, (src, tgt, out) in FALLBACK_EDGE_TYPES.items():
         reg.edge_node_types[label] = EdgeTypeInfo(src, tgt, out, label)
+    reg.graft_biolink()
     return reg
 
 

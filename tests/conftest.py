@@ -10,8 +10,21 @@ REPO = Path(__file__).resolve().parent.parent
 if str(REPO) not in sys.path:
     sys.path.insert(0, str(REPO))
 
-SAMPLES = Path("/root/reference/samples")
-AUX = Path("/root/reference/aux_files")
+from tests.reference_shim import REF_PATH  # noqa: E402
+
+REFERENCE = Path(REF_PATH)
+
+
+def requires_reference(*relpaths: str):
+    """Skip unless every path named (relative to the reference checkout)
+    exists. Reference parity tests run the reference's own code or read
+    its samples, aux pickles and config; without the checkout there is
+    no oracle, so they report as skipped with the first missing path."""
+    missing = [REFERENCE / p for p in relpaths if not (REFERENCE / p).exists()]
+    return pytest.mark.skipif(
+        bool(missing),
+        reason=f"needs the reference checkout: {missing[0]} is absent"
+        if missing else "")
 
 
 @pytest.fixture(scope="session")

@@ -18,6 +18,7 @@ from biocypher_metta_spark.functions.liftover import make_liftover_udf
 from biocypher_metta_spark.schema import load_default_registry
 from biocypher_metta_spark.sources.documents import span_lines
 from biocypher_metta_spark.sources.synth import spans_from_files
+from tests.conftest import requires_reference
 from tests.golden import (
     assert_pr,
     golden_edge_atoms,
@@ -29,6 +30,9 @@ from tests.reference_shim import fake_lifter_shift, load_ref
 S = "/root/reference/samples"
 AUX = "/root/reference/aux_files"
 REGISTRY = load_default_registry()
+
+# every test runs a reference adapter as its golden oracle
+pytestmark = requires_reference("biocypher_metta")
 
 
 def lines_of(spark, path, kind="x"):

@@ -8,6 +8,7 @@ import pytest
 from biocypher_metta_spark.functions.chainfile import (
     ChainLifter, compose_chain, parse_chain_blocks)
 from biocypher_metta_spark.functions.liftover import make_liftover_udf
+from tests.conftest import requires_reference
 
 # A fixture exercising every format feature: multi-block chains with
 # both-side gaps, a negative-strand destination, two overlapping chains
@@ -140,6 +141,7 @@ def test_parse_rejects_header_inside_chain():
 # --------------------------------------------------------------------------
 
 
+@requires_reference("biocypher_metta")
 def test_dbsuper_nodes_real_chain_kernel(spark):
     """Same dbsuper parity path as test_adapters_batch2, but the lifter
     is the real chain kernel over whole-chromosome +1234 chains — the

@@ -13,12 +13,17 @@ from biocypher_metta_spark import dims, pipeline
 from biocypher_metta_spark.functions.liftover import make_liftover_udf
 from biocypher_metta_spark.schema import load_default_registry
 from biocypher_metta_spark.sources.synth import spans_from_files
+from tests.conftest import requires_reference
 from tests.reference_shim import fake_lifter_shift
 from tests.test_adapters_batch2 import make_rsid_map, rsid_dim_df
 
 S = "/root/reference/samples"
 AUX = "/root/reference/aux_files"
 REGISTRY = load_default_registry()
+
+# the fixture reads ~30 sample files (listing whole sample dirs) and
+# nine aux pickles
+pytestmark = requires_reference("samples", "aux_files")
 
 
 @pytest.fixture(scope="module")

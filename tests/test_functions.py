@@ -12,13 +12,17 @@ from pyspark.sql import functions as F
 from biocypher_metta_spark.functions.hgvs import variant_id_from_hgvs
 from biocypher_metta_spark.functions.values import py_to_float
 from biocypher_metta_spark.operators import multimodal as mm
+from tests.conftest import requires_reference
 from tests.reference_shim import load_ref
+
+needs_ref_code = requires_reference("biocypher_metta")
 
 
 def _helpers():
     return load_ref("biocypher_metta.adapters.helpers")
 
 
+@needs_ref_code
 @given(st.floats(allow_nan=False, allow_infinity=True, width=64))
 @settings(max_examples=300, deadline=None)
 def test_to_float_parity(x):
@@ -26,6 +30,7 @@ def test_to_float_parity(x):
     assert py_to_float(repr(x)) == h.to_float(repr(x))
 
 
+@needs_ref_code
 @given(st.decimals(allow_nan=False, allow_infinity=False,
                    min_value=-10**12, max_value=10**12))
 @settings(max_examples=200, deadline=None)
@@ -35,6 +40,7 @@ def test_to_float_decimal_strings(d):
     assert py_to_float(s) == h.to_float(s)
 
 
+@needs_ref_code
 def test_variant_id_builders_parity():
     h = _helpers()
     from biocypher_metta_spark.functions.ids import ASSEMBLY
@@ -56,6 +62,7 @@ HGVS_CASES = [
 ]
 
 
+@needs_ref_code
 def test_hgvs_variant_id_parity(spark):
     h = _helpers()
     # positional False: the reference's assembly_check decorator unpacks
@@ -145,6 +152,7 @@ def _random_attr_string(rng) -> str:
     return " ".join(parts)
 
 
+@needs_ref_code
 def test_gtf_attr_parse_fuzz(spark):
     """Column parser == reference parse_info_metadata on arbitrary
     attribute tails (token-after-key, '\";' stripped); 300 seeded

@@ -12,6 +12,7 @@ from biocypher_metta_spark.schema import load_default_registry
 from biocypher_metta_spark.sources.documents import assert_span_invariant, span_lines
 from biocypher_metta_spark.sources.gtf import GENE_KEYS, parse_gtf
 from biocypher_metta_spark.sources.synth import spans_from_files
+from tests.conftest import requires_reference
 from tests.golden import (
     assert_pr,
     golden_edge_atoms,
@@ -22,6 +23,9 @@ from tests.reference_shim import load_ref
 
 GTF = "/root/reference/samples/gencode_sample.gtf.gz"
 REGISTRY = load_default_registry()
+
+pytestmark = requires_reference("samples/gencode_sample.gtf.gz")
+needs_ref_code = requires_reference("biocypher_metta")
 
 
 @pytest.fixture(scope="module")
@@ -60,6 +64,7 @@ def _ref_gene_adapter(gene_info_path, **kw):
     )
 
 
+@needs_ref_code
 def test_gene_nodes_parity(spark, gtf_df, gene_info_path):
     golden = golden_node_atoms(_ref_gene_adapter(gene_info_path).get_nodes())
     alias = gencode.parse_gene_alias(spark, str(gene_info_path))
@@ -67,6 +72,7 @@ def test_gene_nodes_parity(spark, gtf_df, gene_info_path):
     assert_pr(spark_atoms(atoms), golden, 1.0, "gencode gene nodes")
 
 
+@needs_ref_code
 def test_gene_nodes_window_parity(spark, gtf_df, gene_info_path):
     kw = dict(chr="chr20", start=9_500_000, end=10_000_000)
     golden = golden_node_atoms(_ref_gene_adapter(gene_info_path, **kw).get_nodes())
@@ -76,6 +82,7 @@ def test_gene_nodes_window_parity(spark, gtf_df, gene_info_path):
     assert_pr(spark_atoms(atoms), golden, 1.0, "gencode gene nodes windowed")
 
 
+@needs_ref_code
 def test_transcript_nodes_parity(spark, gtf_df):
     mod = load_ref("biocypher_metta.adapters.gencode_adapter")
     ref = mod.GencodeAdapter(write_properties=True, add_provenance=True,
@@ -89,6 +96,7 @@ def test_transcript_nodes_parity(spark, gtf_df):
     ("to", "transcribed to", "transcribed_to"),
     ("from", "transcribed from", "transcribed_from"),
 ])
+@needs_ref_code
 def test_transcribed_edges_parity(spark, gtf_df, direction, reftype, label):
     mod = load_ref("biocypher_metta.adapters.gencode_adapter")
     ref = mod.GencodeAdapter(write_properties=True, add_provenance=True,
@@ -98,6 +106,7 @@ def test_transcribed_edges_parity(spark, gtf_df, direction, reftype, label):
     assert_pr(spark_atoms(atoms), golden, 1.0, f"gencode {label}")
 
 
+@needs_ref_code
 def test_exon_nodes_parity(spark, gtf_df):
     mod = load_ref("biocypher_metta.adapters.gencode_exon_adapter")
     ref = mod.GencodeExonAdapter(write_properties=True, add_provenance=True,

@@ -15,10 +15,12 @@ from biocypher_metta_spark.adapters import ontology as onto
 from biocypher_metta_spark.operators import dedup as dd
 from biocypher_metta_spark.operators import similarity as sim
 from biocypher_metta_spark.schema import load_default_registry
+from tests.conftest import requires_reference
 from tests.golden import assert_pr, golden_edge_atoms, golden_node_atoms, spark_atoms
 from tests.reference_shim import install_stubs, load_ref
 
 REGISTRY = load_default_registry()
+needs_ref_code = requires_reference("biocypher_metta")
 
 OBO = "http://purl.obolibrary.org/obo"
 
@@ -92,6 +94,7 @@ def _triples_df(spark, triples):
               " subj_blank boolean, obj_blank boolean, obj_literal boolean")
 
 
+@needs_ref_code
 def test_to_key_parity():
     mod = load_ref("biocypher_metta.adapters.ontologies_adapter")
     cases = [
@@ -114,6 +117,7 @@ def test_to_key_column_matches_python(spark):
     assert got == [onto.py_to_key(c) for c in cases]
 
 
+@needs_ref_code
 def test_ontology_nodes_parity(spark):
     t = _fixture_triples()
     ref = _ref_ontology_adapter(t, "node", "go")
@@ -129,6 +133,7 @@ def test_ontology_nodes_parity(spark):
     assert_pr(ours_go, golden_go, 1.0, "ontology nodes (GO terms)")
 
 
+@needs_ref_code
 def test_ontology_edges_parity(spark):
     t = _fixture_triples()
     ref = _ref_ontology_adapter(t, "edge", "go_subtype_of")

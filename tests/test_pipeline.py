@@ -26,6 +26,7 @@ from biocypher_metta_spark.streaming.incremental import (
     read_documents_stream,
     run_incremental,
 )
+from tests.conftest import requires_reference
 
 GTF = "/root/reference/samples/gencode_sample.gtf.gz"
 REGISTRY = load_default_registry()
@@ -39,6 +40,7 @@ CONFIG = [
 ]
 
 
+@requires_reference("samples/gencode_sample.gtf.gz")
 def test_pipeline_end_to_end(spark, tmp_path):
     docs = spans_from_files(spark, {"gtf": GTF})
     ctx = pipeline.PipelineContext(spark, docs, REGISTRY)
@@ -91,6 +93,7 @@ def test_streaming_incremental(spark, tmp_path):
     assert n2 == 150
 
 
+@requires_reference("config/adapters_config_sample.yaml")
 def test_reference_config_translation():
     """The reference's own adapters_config_sample.yaml translates fully
     into this engine's registry (config-compat for switching users)."""

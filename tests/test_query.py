@@ -11,8 +11,11 @@ from biocypher_metta_spark.adapters import gencode
 from biocypher_metta_spark.sources.documents import span_lines
 from biocypher_metta_spark.sources.gtf import GENE_KEYS, parse_gtf
 from biocypher_metta_spark.sources.synth import spans_from_files
+from tests.conftest import requires_reference
 
 GTF = "/root/reference/samples/gencode_sample.gtf.gz"
+# the gene_nodes fixture parses the reference's sample GTF
+needs_gtf = requires_reference("samples/gencode_sample.gtf.gz")
 
 
 @pytest.fixture(scope="module")
@@ -25,6 +28,7 @@ def gene_nodes(spark):
     return t
 
 
+@needs_gtf
 def test_probe1_node_property_fetch(gene_nodes):
     """metta_space_import.py:73-77 — all property atoms of one gene."""
     props = query.fetch_node_properties(gene_nodes, "gene", "ENSG00000101349")
@@ -37,6 +41,7 @@ def test_probe1_node_property_fetch(gene_nodes):
                props.select("subj").collect())
 
 
+@needs_gtf
 def test_probe2_gene_window(gene_nodes):
     """metta_space_import.py:82-90 — strict-inequality window scan."""
     rows = query.genes_in_window(gene_nodes, "chr20", 9_000_000, 10_000_000)
@@ -45,6 +50,7 @@ def test_probe2_gene_window(gene_nodes):
     assert len(ids) == 4
 
 
+@needs_gtf
 def test_match_pattern_conjunction(gene_nodes, spark):
     """The probe-2 conjunction expressed as a generic pattern match over
     property triples: (, (chr $g chr20) (gene_type $g protein_coding))."""
@@ -59,6 +65,7 @@ def test_match_pattern_conjunction(gene_nodes, spark):
     assert got == direct and got
 
 
+@needs_gtf
 def test_match_pattern_with_object_var(gene_nodes):
     """(, (gene_name $g $n)) binds both variables."""
     triples = query.node_prop_triples(gene_nodes)
@@ -67,6 +74,7 @@ def test_match_pattern_with_object_var(gene_nodes):
     assert m["(gene ENSG00000101349)"] == "PAK5"
 
 
+@needs_gtf
 def test_match_pattern_refuses_disjoint_cartesian(gene_nodes):
     """Conjuncts sharing no variable are a corpus x corpus cross
     product; refused by default, allowed only with allow_cartesian."""

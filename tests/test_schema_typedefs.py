@@ -15,8 +15,12 @@ BioCypher's Biolink-merged ontology. No Spark session needed.
 
 from pathlib import Path
 
+import pytest
+
+from biocypher_metta_spark import schema as schema_mod
 from biocypher_metta_spark.schema import (
     BIOLINK_PARENTS,
+    SchemaRegistry,
     load_default_registry,
 )
 
@@ -56,3 +60,31 @@ def test_yaml_is_a_wins_over_biolink_on_conflict():
     # every YAML-declared parent must survive the merge untouched
     assert reg.parents["gene"] == "coding_element"
     assert reg.parents["biological_entity"] == "named_thing"
+
+
+def test_from_yaml_is_a_wins_over_biolink_on_conflict(tmp_path):
+    # a schema that re-parents a Biolink class keeps its own parent; the
+    # Biolink edges it does not declare are still grafted
+    schema = tmp_path / "schema.yaml"
+    schema.write_text(
+        "biological entity:\n"
+        "  represented_as: node\n"
+        "  input_label: biological_entity\n"
+        "  is_a: thing with taxon\n"
+        "gene:\n"
+        "  represented_as: node\n"
+        "  input_label: gene\n"
+        "  is_a: biological entity\n")
+    reg = SchemaRegistry.from_yaml(schema)
+    assert BIOLINK_PARENTS["biological_entity"] != "thing_with_taxon"
+    assert reg.parents["biological_entity"] == "thing_with_taxon"
+    assert reg.parents["gene"] == "biological_entity"
+    assert reg.parents["named_thing"] == BIOLINK_PARENTS["named_thing"]
+
+
+def test_fallback_warns_what_it_lacks(tmp_path, monkeypatch):
+    monkeypatch.setattr(schema_mod, "DEFAULT_SCHEMA_PATH",
+                        tmp_path / "absent.yaml")
+    with pytest.warns(UserWarning, match="lacks the node data constructors"):
+        reg = load_default_registry()
+    assert not reg.node_labels

@@ -15,7 +15,11 @@ from biocypher_metta_spark.serializer import (
     py_write_node,
     py_write_property,
 )
+from tests.conftest import requires_reference
 from tests.golden import make_ref_writer
+
+# every test renders its golden through the reference writer
+pytestmark = requires_reference("biocypher_metta")
 
 CASES = [
     {"chr": "chr16", "start": 53000000, "end": 53001000},
