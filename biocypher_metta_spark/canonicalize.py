@@ -6,20 +6,25 @@ rule generalizes this to salt-keyed canonicalization via connected
 components over the alias graph formed by the id maps (hgnc<->ensembl,
 entrez->ensembl, ensembl_protein->uniprot — SURVEY §2.4 J1-J4).
 
-Implementation: iterative label propagation with plain DataFrame joins
-(no GraphFrames dependency). Alias chains are short (id systems form
-star-shaped components around one canonical accession), so the loop
-converges in <= `max_iter` rounds; each round is one shuffle on the node
-key; a component it cannot cover raises instead of returning partial
-labels. Deterministic canonical pick = lexicographic min id in the
-component. Hub safety: membership is keyed by node id (unique), so the
-join keys are skew-free; the final groupBy aggregates componet sizes with
-map-side partial aggregation.
+Implementation: iterative min-label propagation with plain DataFrame
+joins (no GraphFrames dependency). Alias chains are short (id systems
+form star-shaped components around one canonical accession), so the
+loop converges in <= `max_iter` rounds; a component it cannot cover
+raises instead of returning partial labels. The first round is the
+initialization itself (each node's min over its closed neighbourhood);
+every later round is one join of the edge list with the labels on the
+neighbour id, feeding one aggregate on the node id, and one checkpoint
+whose observed change count is the convergence test. Every node starts
+as its own label, so the fixed-point label already is the canonical
+pick: the lexicographic min id of the component. Hub safety: the
+labels side of the join holds one row per id, and the aggregate's
+map-side partial min collapses a hub's neighbour rows before the
+shuffle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from biocypher_metta_spark.ckpt import local_checkpoint_cut as _ckcut
@@ -29,14 +34,20 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
                          max_iter: int = 10) -> DataFrame:
     """edges -> (id, component) where component = min id reachable.
 
-    Label propagation: every node starts labeled with itself; each round
-    adopts the min label among itself and its neighbors; stop when no
-    label changes (checked with a cheap agg). Raises RuntimeError if
-    labels still change in round `max_iter`: a component whose diameter
-    exceeds the rounds would otherwise get split canonical ids.
+    Label propagation: round 1 labels each node with the min of itself
+    and its neighbours; each later round adopts the min label among a
+    node and its neighbours' labels; stop after a round in which no
+    label changes. Raises RuntimeError if labels still change in round
+    `max_iter`: a component whose diameter exceeds the rounds would
+    otherwise get split canonical ids.
     """
-    sym = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-           .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+    # both directions from ONE scan of the edges: a union of two selects
+    # computes the upstream twice (measured: building sym from 900 edges
+    # of a Python-list frame took 0.65 s as a union, 0.33 s as one scan,
+    # local[4] on 4 vCPUs)
+    sym = (edges.select(F.inline(F.array(
+               F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
+               F.struct(F.col(dst).alias("a"), F.col(src).alias("b")))))
            .filter(F.col("a") != F.col("b"))
            .distinct())
     # checkpoint BEFORE deriving labels: labels' first materialization
@@ -44,44 +55,36 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
     # measured ~70s of a 190s doc-dup-clusters run when the edges come
     # from the LSH candidate-pair join.
     sym = sym.localCheckpoint(eager=True)
-    labels = (sym.select(F.col("a").alias("id"))
-              .union(sym.select(F.col("b").alias("id")))
-              .distinct()
-              .withColumn("component", F.col("id")))
-    converged = False
+    step = (sym.groupBy("a")
+            .agg(F.least(F.col("a"), F.min("b")).alias("label"))
+            .select(F.col("a").alias("id"), "label", F.col("a").alias("old")))
     for _ in range(max_iter):
+        # ONE materialization per round: the checkpoint also counts the
+        # changed labels, so no second job reads the convergence flag. A
+        # retried task can only over-count, never hide a change; the sum
+        # over no rows (an empty graph) is NULL, read as no change.
+        obs = Observation()
+        labels = (step.observe(obs, F.sum((F.col("label") != F.col("old"))
+                                          .cast("long")).alias("changed"))
+                  .localCheckpoint(eager=True))
+        if not obs.get["changed"]:
+            return labels.select("id", F.col("label").alias("component"))
         neigh = (sym.join(labels, sym["b"] == labels["id"])
-                 .select(F.col("a").alias("id"),
-                         F.col("component").alias("nlabel")))
-        new_labels = (labels.join(neigh, "id", "left")
-                      .groupBy("id")
-                      .agg(F.least(F.min("component"), F.min("nlabel")).alias("newc"),
-                           F.first("component").alias("component")))
-        # ONE materialization per round: checkpoint first, then read the
-        # convergence flag and the next labels off the checkpointed rows
-        # (the previous shape computed new_labels twice per round).
-        new_labels = new_labels.localCheckpoint(eager=True)
-        changed = new_labels.filter(
-            F.col("newc").isNotNull() & (F.col("newc") != F.col("component"))
-        ).limit(1).count()
-        labels = new_labels.select(
-            "id", F.coalesce("newc", "component").alias("component"))
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iter} "
-            "label-propagation rounds (one hop per round); raise max_iter")
-    return labels
+                 .select(F.col("a").alias("id"), "label", F.lit(None).alias("old")))
+        step = (labels.select("id", "label", F.col("label").alias("old"))
+                .unionByName(neigh)
+                .groupBy("id")
+                .agg(F.min("label").alias("label"), F.min("old").alias("old")))
+    raise RuntimeError(
+        f"connected_components did not converge within {max_iter} "
+        "label-propagation rounds (one hop per round); raise max_iter")
 
 
 def canonical_id_map(alias_edges: DataFrame, max_iter: int = 10) -> DataFrame:
-    """(id, canonical_id): lexicographic-min member per alias component."""
-    comp = connected_components(alias_edges, max_iter=max_iter)
-    canon = comp.groupBy("component").agg(F.min("id").alias("canonical_id"))
-    return (comp.join(canon, "component")
-            .select("id", "canonical_id"))
+    """(id, canonical_id): lexicographic-min member per alias component,
+    which is the component label itself."""
+    return (connected_components(alias_edges, max_iter=max_iter)
+            .select("id", F.col("component").alias("canonical_id")))
 
 
 def dedup_nodes(nodes: DataFrame, id_col: str = "id",

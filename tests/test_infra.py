@@ -3,6 +3,7 @@ lineage/resume, linking, sinks, dedup/similarity operators."""
 
 from __future__ import annotations
 
+import random
 import re
 
 import pyarrow as pa
@@ -192,13 +193,90 @@ def test_connected_components(spark):
 
 def test_connected_components_raises_when_unconverged(spark):
     """A chain n0-...-n6 needs 6 label-propagation rounds plus one that
-    changes nothing; 3 rounds must raise, not return split components."""
+    changes nothing: `max_iter` counts every round, the first one folded
+    into the labels' initialization included, so 7 converges and 6 (or
+    3) must raise, not return split components."""
     edges = spark.createDataFrame(
         [(f"n{i}", f"n{i + 1}") for i in range(6)], "src string, dst string")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        canon.connected_components(edges, max_iter=3)
-    comps = {r.component for r in canon.connected_components(edges).collect()}
+    for short in (3, 6):
+        with pytest.raises(RuntimeError, match="did not converge"):
+            canon.connected_components(edges, max_iter=short)
+    comps = {r.component
+             for r in canon.connected_components(edges, max_iter=7).collect()}
     assert comps == {"n0"}
+
+
+def _union_find(pairs):
+    """id -> lexicographic-min member of its component, for every id on a
+    pair of two distinct ids (a self-loop alone puts no id in the map)."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        if a == b:
+            continue
+        ra, rb = find(parent.setdefault(a, a)), find(parent.setdefault(b, b))
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def test_canonical_id_map_matches_union_find(spark):
+    rng = random.Random(9)
+    pairs = []
+    for c in range(40):                    # 4-id alias chains, shuffled order
+        ids = [f"C{c:02d}_{k}" for k in range(4)]
+        rng.shuffle(ids)
+        pairs += zip(ids, ids[1:])
+    pairs += [("HUB", f"S{k}") for k in range(6)]        # a star
+    pairs += [("C03_2", "C03_1"), ("C03_1", "C03_2"),    # reversed and
+              ("S2", "HUB"), ("S2", "HUB")]              # duplicate pairs
+    pairs += [("LOOP", "LOOP")]                          # self-loop only
+    rng.shuffle(pairs)
+    edges = spark.createDataFrame(pairs, "src string, dst string")
+    got = {r.id: r.canonical_id
+           for r in canon.canonical_id_map(edges).collect()}
+    assert got == _union_find(pairs)
+    assert "LOOP" not in got and got["S5"] == "HUB"
+
+
+def test_canonical_id_map_of_no_edges_is_empty(spark):
+    alias = spark.createDataFrame([], "src string, dst string")
+    id_map = canon.canonical_id_map(alias)
+    assert id_map.collect() == []
+    nodes = spark.createDataFrame([("ENSG1", "gene"), ("HGNC:5", "gene")],
+                                  "id string, label string")
+    out = canon.canonicalize_nodes(nodes, id_map)
+    assert sorted(r.id for r in out.collect()) == ["ENSG1", "HGNC:5"]
+
+
+def test_connected_components_job_count(spark):
+    """One warm call on 50 shuffled 4-id chains runs 19 Spark jobs here
+    (one aggregate and one observed checkpoint per round, the first round
+    fused into initialization); the previous loop, with a separate id
+    list, a left join plus aggregate and a convergence-count job per
+    round, ran 34 on the same graph."""
+    rng = random.Random(3)
+    pairs = []
+    for c in range(50):
+        ids = [f"J{c:02d}_{k}" for k in range(4)]
+        rng.shuffle(ids)
+        pairs += zip(ids, ids[1:])
+    edges = spark.createDataFrame(pairs, "src string, dst string")
+    canon.connected_components(edges)
+    sc = spark.sparkContext
+    sc.setJobGroup("cc-job-count", "connected_components job count")
+    try:
+        canon.connected_components(edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("cc-job-count"))
+    assert 0 < n_jobs <= 24
 
 
 def test_canonicalize_nodes(spark):
