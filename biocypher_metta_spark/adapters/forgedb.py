@@ -339,11 +339,13 @@ def gtex_eqtl_edges(lines: DataFrame, tissue_map: DataFrame, registry,
     m = tissue_map.select(F.col("key").alias("_k"), F.col("value").alias("_ctx"))
     d = d.join(F.broadcast(m), F.col(tissue_col) == m["_k"])
     tgt = F.split(F.col("gene_id"), r"\.").getItem(0)
-    maf = to_float_col(F.col("maf"))
-    slope = to_float_col(F.col("slope"))
-    pv = to_float_col(F.col("pval_perm"))
-    qv = to_float_col(F.col("pval_beta"))
-    d = d.withColumn("_tgt", tgt)
+    # projected once: each rendered float reads its value several times
+    d = d.withColumns({"_tgt": tgt,
+                       "_maf": to_float_col(F.col("maf")),
+                       "_slope": to_float_col(F.col("slope")),
+                       "_pv": to_float_col(F.col("pval_perm")),
+                       "_qv": to_float_col(F.col("pval_beta"))})
+    maf, slope, pv, qv = (F.col(c) for c in ("_maf", "_slope", "_pv", "_qv"))
     typed = d.select(F.col("rs_id").alias("src"), F.col("_tgt").alias("tgt"),
                      F.lit("gtex_variant_gene").alias("label"),
                      maf.alias("maf"), slope.alias("slope"),

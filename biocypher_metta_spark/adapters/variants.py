@@ -226,18 +226,18 @@ def favor_nodes(lines: DataFrame, chr: str | None = None,
             Prop("alt", F.col("alt_vcf"), "str"),
         ]
         def_out = node_def_out("sequence_variant", F.col("_id"))
-        # ONE Arrow crossing for all ~80 annotation fields: the values
-        # cross as a single array<string>, come back as rendered
-        # fragments, and the atom strings assemble JVM-side (the naive
-        # per-field pandas UDF would be 80 separate crossings per batch)
+        # the ~80 annotation fields render as ONE transform over an
+        # array<string>, projected once as a column: the plan holds one
+        # num_or_str kernel, not one per field or per field reference
         from biocypher_metta_spark.serializer import num_or_str_fragments
 
         ann_keys = [k for k in FAVOR_FIELDS if k not in _FAVOR_KEY_FIELDS]
-        frags = num_or_str_fragments(F.array(*[F.col(k) for k in ann_keys]))
+        d = d.withColumn("_ann", num_or_str_fragments(
+            F.array(*[F.col(k) for k in ann_keys])))
         head = F.concat(F.lit("(annotation "), def_out, F.lit(")"))
         extra = [head]
         for i, k in enumerate(ann_keys):
-            frag = F.get(frags, i)
+            frag = F.get(F.col("_ann"), i)
             extra.append(F.when(frag.isNull(), F.lit(None)).otherwise(
                 F.concat(F.lit(f"({k} "), head, F.lit(" "), frag, F.lit(")"))))
         extra += [p_atom for p_atom in

@@ -12,23 +12,21 @@ Byte-parity target: the reference writer's rendering rules
 * value escaping: spaces -> ``_``; backslash-escape ``(``, ``)``, ``\``
   (:165-174); numbers rendered via Python ``str()`` (f-string semantics).
 
-Everything except float formatting is pure Catalyst expression work
-(regexp_replace / format_string / concat_ws / transform) that stays inside
-whole-stage codegen. Python float repr has no JVM builtin twin, so floats
-cross once through an Arrow-batched pandas UDF (``fmt_float``) — the only
-Python in the render path, vectorized per the A+B axes contract.
+Everything is Catalyst expression work (replace / concat_ws / transform),
+float formatting included: Python's repr(float) is rebuilt from Java's
+Double.toString where its digits are provably the shortest, and from the
+exact BigDecimal expansion where they are not (``fmt_float``). No row
+crosses into Python on the render path.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, StringType
 
+from biocypher_metta_spark.functions.values import let, py_float_col, py_to_float
 from biocypher_metta_spark.schema import SchemaRegistry
 
 # ---------------------------------------------------------------------------
@@ -58,30 +56,144 @@ def py_escape(value: str) -> str:
     return "".join("\\" + ch if ch in "()\\" else ch for ch in value)
 
 
+def py_num_or_str(v: str | None) -> str | None:
+    """Pure-Python twin of num_or_str: FAVOR convert_freq_value + writer
+    rendering in one step (favor_adapter.py:74-83 + metta_writer.py:162-174):
+    '.' -> 0, numeric text -> clamped float repr, other text -> escaped
+    string, ''/None -> skip (None)."""
+    if v is None or v == "":
+        return None
+    if v == ".":
+        return "0"
+    try:
+        return str(py_to_float(v))
+    except (ValueError, TypeError):
+        return py_escape(v)
+
+
 # ---------------------------------------------------------------------------
-# Python-repr float formatting (vectorized)
+# Python repr(float) as one Catalyst expression
 # ---------------------------------------------------------------------------
 
+# The kernel is SQL text over the name {v}, bound by functions.values.let.
 
-@pandas_udf(StringType())
-def fmt_float(s: pd.Series) -> pd.Series:
-    """Render double column exactly as Python str(float): '0.173',
-    '1e-05', '2.89394e-06' — Spark's cast(string) would produce
-    '1.0E-5' style, so this single Arrow crossing buys byte parity."""
-    return s.map(lambda v: None if pd.isna(v) else str(float(v)))
+_MIN_NORMAL = "2.2250738585072014e-308D"
 
 
-@pandas_udf(StringType())
-def fmt_float_list(s: pd.Series) -> pd.Series:
+def _strip_zeros(digits: str) -> str:
+    return f"regexp_replace({digits}, '0+$', '')"
+
+
+def _decimal_parts(s: str) -> tuple[str, str]:
+    """(significant digits, exponent of the first one) of the positive
+    decimal string `s`: 'I', 'I.F', 'I.FEn' or 'I.FE-n' (Java's Double
+    and BigDecimal toString); the digits may end in zeros. Written for
+    strings of up to ~770 characters (an exact expansion): each step is
+    one pass or works on a short prefix."""
+    mant = f"if(contains({s}, 'E'), substring_index({s}, 'E', 1), {s})"
+    exp = f"if(contains({s}, 'E'), int(substring_index({s}, 'E', -1)), 0)"
+    point = f"instr({mant}, '.')"
+    int_len = f"if({point} > 0, {point} - 1, length({mant}))"
+    digits = f"replace({mant}, '.', '')"
+    # both toStrings switch to E-notation before a seventh leading zero
+    lead = f"length(regexp_extract(substring({digits}, 1, 8), '^0*', 0))"
+    return f"substring({digits}, {lead} + 1)", f"{int_len} - 1 - {lead} + {exp}"
+
+
+def _shortest_slow(a: str) -> str:
+    """struct(m, e): the shortest decimal m * 10^(e - len(m) + 1) that
+    reads back as the positive finite double `a`, and of those the
+    closest: the floor or the ceiling of a's exact expansion truncated
+    to p digits, for the least p in 1..17 where one reads back (if both
+    do, the one the dropped digits round to, half to even). At a normal
+    `a` at most one decimal of 15 digits reads back, so p starts at 15."""
+    sig, e = _decimal_parts("__x")
+    # 18 digits decide every rounding below; a nonzero rest of the
+    # (up to ~750-digit) expansion only matters as a sticky '1'
+    split = (f"named_struct('d', concat(substring({sig}, 1, 18),"
+             f" if(substring({sig}, 19) RLIKE '[1-9]', '1', '')), 'e', {e},"
+             " 'r', CAST(NULL AS STRUCT<m: STRING, e: INT>))")
+    q = "(__acc.e - __p + 1)"
+    floor = "CAST(rpad(substring(__acc.d, 1, __p), __p, '0') AS BIGINT)"
+    # round the dropped digits half to even, as dtoa does on a tie
+    dropped = _strip_zeros("substring(__acc.d, __p + 1)")
+    up = f"({dropped} > '5' OR ({dropped} = '5' AND {floor} % 2 = 1))"
+    near, other = f"if({up}, {floor} + 1, {floor})", f"if({up}, {floor}, {floor} + 1)"
+
+    def reads_back(c: str) -> str:
+        return f"CAST(concat(CAST({c} AS STRING), 'e', {q}) AS DOUBLE) = {a}"
+
+    def found(c: str) -> str:
+        return (f"named_struct('m', CAST({c} AS STRING),"
+                f" 'e', {q} + length(CAST({c} AS STRING)) - 1)")
+
+    step = (f"named_struct('d', __acc.d, 'e', __acc.e, 'r', coalesce(__acc.r,"
+            f" CASE WHEN {reads_back(near)} THEN {found(near)}"
+            f" WHEN {reads_back(other)} THEN {found(other)} END))")
+    exact = f"reflect('scala.math.BigDecimal', 'exact', {a})"
+    return (f"aggregate(sequence(if({a} >= {_MIN_NORMAL}, 15, 1), 17),"
+            f" transform(array({exact}), __x -> {split})[0],"
+            f" (__acc, __p) -> {step}, __acc -> __acc.r)")
+
+
+def _layout(r: str) -> str:
+    """Python's layout of the struct(m, e) `r`: fixed for -4 <= e < 16,
+    with '.0' on integral values, else d.ddde+XX."""
+    d, e = _strip_zeros(f"{r}.m"), f"{r}.e"
+    sci = (f"concat(left({d}, 1), if(length({d}) > 1, concat('.', substring({d}, 2)), ''),"
+           f" format_string('e%+03d', {e}))")
+    # fixed: left-pad to a units digit, right-pad to one decimal
+    z = f"greatest(-{e}, 0)"
+    padded = f"concat(repeat('0', {z}), {d})"
+    units = f"({e} + {z} + 1)"
+    padded = f"rpad({padded}, greatest(length({padded}), {units} + 1), '0')"
+    fixed = f"concat(left({padded}, {units}), '.', substring({padded}, {units} + 1))"
+    return f"if({e} >= -4 AND {e} < 16, {fixed}, {sci})"
+
+
+def _repr_sql(s: str) -> str:
+    """Python repr of the double whose Java toString is `s`."""
+    body = f"regexp_replace({s}, '^-', '')"
+    a = f"CAST({body} AS DOUBLE)"
+    sig, e = _decimal_parts(body)
+    # Java's digits read back; with at most 15 of them at a normal value
+    # no other decimal that short does, so they are the shortest
+    fast = f"{a} >= {_MIN_NORMAL} AND length({_strip_zeros(sig)}) <= 15"
+    short = (f"CASE WHEN {fast} THEN named_struct('m', {sig}, 'e', {e})"
+             f" ELSE {_shortest_slow(a)} END")
+    sign = f"if(startswith({s}, '-'), '-', '')"
+    return (f"CASE WHEN {s} IS NULL THEN NULL WHEN {s} = 'NaN' THEN 'nan'"
+            f" WHEN {s} = 'Infinity' THEN 'inf' WHEN {s} = '-Infinity' THEN '-inf'"
+            f" WHEN {a} = 0 THEN concat({sign}, '0.0')"
+            f" ELSE concat({sign}, transform(array({short}), __r -> {_layout('__r')})[0]) END")
+
+
+_REPR = _repr_sql("{v}")
+
+
+def fmt_float(col: Column | str) -> Column:
+    """Python repr(float) (str(float)) of a double column, byte for
+    byte: the shortest decimal that reads back ('0.173', '1e-05',
+    '2.89394e-06', '5e-324'), laid out fixed for exponents -4..15 ('1.0',
+    '0.0001') and as d.ddde+XX otherwise, with 'nan', 'inf', '-inf' and
+    '-0.0'. Spark's cast gives '1.0E-5' where Python writes '1e-05'.
+
+    Java's Double.toString (JDK 17) reads back but is not always the
+    shortest (2.82879384806159008E17), so digits it cannot vouch for are
+    found from the exact expansion instead (_shortest_slow)."""
+    s = (F.col(col) if isinstance(col, str) else col).cast("double").cast("string")
+    # Java writes 1e-3 <= |x| < 1e7 in plain notation as Python does, and
+    # with at most 15 digits (16 characters) they are Python's digits too
+    plain = s.contains(".") & ~s.contains("E") & (F.length(s) <= 16)
+    return F.when(plain, s).otherwise(let(s, _REPR))
+
+
+def fmt_float_list(col: Column) -> Column:
     """Render array<double> as '(v1 v2 ...)' with Python float repr per
-    element (list-property rule, metta_writer.py:151-157)."""
-
-    def one(arr):
-        if arr is None:
-            return None
-        return "(" + " ".join(str(float(v)) for v in arr) + ")"
-
-    return s.map(one)
+    element (list-property rule, metta_writer.py:151-157); a NULL element
+    is written as str(None) is."""
+    return F.concat(F.lit("("), F.array_join(F.transform(col, fmt_float), " ", "None"),
+                    F.lit(")"))
 
 
 # ---------------------------------------------------------------------------
@@ -96,7 +208,7 @@ class Prop:
     kind:
       str        — escaped string scalar
       int        — integer scalar (str(int))
-      float      — double scalar via fmt_float
+      float      — double scalar via fmt_float (Python float repr)
       str_list   — array<string>, elements escaped
       float_list — array<double> via fmt_float_list
       raw        — pre-rendered value fragment (escaping already applied)
@@ -133,56 +245,23 @@ def _value_fragment(p: Prop) -> Column:
     if p.kind == "raw":
         return p.col
     if p.kind == "num_or_str":
-        return num_or_str_fragment(p.col)
+        return num_or_str(p.col)
     raise ValueError(f"unknown prop kind {p.kind}")
 
 
-@pandas_udf(StringType())
-def _fmt_num_or_str(s: pd.Series) -> pd.Series:
-    """FAVOR convert_freq_value + writer rendering in one step
-    (favor_adapter.py:74-83 + metta_writer.py:162-174): '.' -> 0,
-    numeric text -> clamped float repr, other text -> escaped string,
-    ''/None -> skip (null)."""
-    from biocypher_metta_spark.functions.values import py_to_float
-
-    def one(v):
-        if v is None or v == "":
-            return None
-        if v == ".":
-            return "0"
-        try:
-            return str(py_to_float(v))
-        except (ValueError, TypeError):
-            return py_escape(v)
-
-    return s.map(one)
-
-
-def num_or_str_fragment(col: Column) -> Column:
-    return _fmt_num_or_str(col)
-
-
-@pandas_udf(ArrayType(StringType()))
-def _fmt_num_or_str_arr(s: pd.Series) -> pd.Series:
-    """Vectorized batch variant: render a whole array of num_or_str
-    values in ONE Arrow crossing (FAVOR's ~80 annotation fields)."""
-    from biocypher_metta_spark.functions.values import py_to_float
-
-    def one_val(v):
-        if v is None or v == "":
-            return None
-        if v == ".":
-            return "0"
-        try:
-            return str(py_to_float(v))
-        except (ValueError, TypeError):
-            return py_escape(v)
-
-    return s.map(lambda arr: None if arr is None else [one_val(v) for v in arr])
+def num_or_str(v: Column) -> Column:
+    """Column twin of py_num_or_str over a string column."""
+    def render(d: Column) -> Column:
+        return F.when(d.isNull(), escape_str(v)).otherwise(fmt_float(d))
+    return (F.when(v.isNull() | (v == ""), F.lit(None))
+            .when(v == ".", F.lit("0"))
+            .otherwise(let(py_float_col(v), render)))
 
 
 def num_or_str_fragments(arr_col: Column) -> Column:
-    return _fmt_num_or_str_arr(arr_col)
+    """num_or_str over every element of an array<string>: FAVOR's ~80
+    annotation fields share one kernel in one transform."""
+    return F.transform(arr_col, num_or_str)
 
 
 def prop_atom(def_out: Column, p: Prop) -> Column:
