@@ -4,9 +4,11 @@ reference Habush/biocypher-metta pipeline.
 
 Reference semantics (what to compute) are documented per-module with
 file:line citations into /root/reference. The execution strategy is
-Spark-first: DataFrame/SQL plans optimized by Catalyst, Arrow-batched
-pandas UDFs for the irreducible Python surface, and partitioned parquet
-(Iceberg-style layout) outputs with per-partition lineage manifests.
+Spark-first: DataFrame/SQL plans optimized by Catalyst, with no Python
+worker on any KG path (the liftover is a dimension join, the SwissProt
+parse and the float render are Catalyst expressions), and partitioned
+parquet (Iceberg-style layout) outputs with per-partition lineage
+manifests.
 """
 
 __version__ = "0.1.0"

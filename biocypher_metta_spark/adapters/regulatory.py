@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from biocypher_metta_spark.adapters import provenance_props
 from biocypher_metta_spark.functions.genomic import genomic_window
 from biocypher_metta_spark.functions.ids import build_regulatory_region_id
+from biocypher_metta_spark.functions.liftover import lift
 from biocypher_metta_spark.serializer import (
     Prop,
     atoms_df,
@@ -219,31 +220,31 @@ DBSUPER_COLS = {"chr": 0, "coord_start": 1, "coord_end": 2, "se_id": 3,
                 "gene_id": 4, "cell_name": 5}
 
 
-def _dbsuper_base(lines: DataFrame, liftover, chr, start, end) -> DataFrame:
-    """Shared scan: 0-based hg19 -> +1 -> lifted hg38; rows whose lift
-    fails are dropped (dbsuper_adapter.py:46-52)."""
+def _dbsuper_base(lines: DataFrame, blocks: DataFrame, chr, start, end) -> DataFrame:
+    """Shared scan: 0-based hg19 -> +1 -> lifted hg38 through the chain
+    `blocks` (functions/liftover.py); rows whose start or end fails to
+    lift are dropped (dbsuper_adapter.py:46-52)."""
     d = split_cols(lines, DBSUPER_COLS, "\t")
     d = d.filter(F.col("chr") != "chrom")
     s19 = F.col("coord_start").try_cast("long") + 1
     e19 = F.col("coord_end").try_cast("long") + 1
     d = (d.withColumn("_s19", s19).withColumn("_e19", e19)
          .filter(F.col("_s19").isNotNull() & F.col("_e19").isNotNull()))
-    d = (d.withColumn("_s", liftover(F.col("chr"), F.col("_s19")))
-         .withColumn("_e", liftover(F.col("chr"), F.col("_e19")))
-         .filter(F.col("_s").isNotNull() & F.col("_e").isNotNull()))
+    d = lift(lift(d, "chr", "_s19", blocks, "_s"), "chr", "_e19", blocks, "_e")
+    d = d.filter(F.col("_s").isNotNull() & F.col("_e").isNotNull())
     d = d.withColumn("_id", build_regulatory_region_id(
         F.col("chr"), F.col("_s"), F.col("_e")))
     return d.filter(genomic_window(F.col("chr"), F.col("_s"), F.col("_e"),
                                    chr, start, end))
 
 
-def dbsuper_nodes(lines: DataFrame, liftover, label: str = "super_enhancer",
+def dbsuper_nodes(lines: DataFrame, blocks: DataFrame, label: str = "super_enhancer",
                   chr: str | None = None, start: int | None = None,
                   end: int | None = None,
                   write_properties: bool = True, add_provenance: bool = True,
                   base: DataFrame | None = None,
                   ) -> tuple[DataFrame, DataFrame]:
-    d = base if base is not None else _dbsuper_base(lines, liftover, chr, start, end)
+    d = base if base is not None else _dbsuper_base(lines, blocks, chr, start, end)
     typed = d.select(F.col("_id").alias("id"), F.lit(label).alias("label"),
                      "chr", F.col("_s").alias("start"), F.col("_e").alias("end"),
                      F.col("se_id"))
@@ -259,7 +260,7 @@ def dbsuper_nodes(lines: DataFrame, liftover, label: str = "super_enhancer",
     return typed, atoms
 
 
-def dbsuper_edges(lines: DataFrame, liftover, hgnc2ensembl: DataFrame,
+def dbsuper_edges(lines: DataFrame, blocks: DataFrame, hgnc2ensembl: DataFrame,
                   tissue_map: DataFrame, registry,
                   label: str = "super_enhancer_gene",
                   chr: str | None = None, start: int | None = None,
@@ -270,7 +271,7 @@ def dbsuper_edges(lines: DataFrame, liftover, hgnc2ensembl: DataFrame,
     """super_enhancer -> gene (dbsuper_adapter.py:68-94). Note the
     reference KeyErrors (crashes) on a tissue-map miss at :81 — sample
     data always hits, so an inner join is behavior-equivalent."""
-    d = base if base is not None else _dbsuper_base(lines, liftover, chr, start, end)
+    d = base if base is not None else _dbsuper_base(lines, blocks, chr, start, end)
     g = hgnc2ensembl.select(F.col("key").alias("_g"), F.col("value").alias("tgt"))
     d = d.join(F.broadcast(g), F.col("gene_id") == g["_g"])
     m = tissue_map.select(F.col("key").alias("_k"), F.col("value").alias("_ctx"))

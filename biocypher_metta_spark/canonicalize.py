@@ -89,8 +89,17 @@ def canonical_id_map(alias_edges: DataFrame, max_iter: int = 10) -> DataFrame:
 
 def dedup_nodes(nodes: DataFrame, id_col: str = "id",
                 label_col: str = "label") -> DataFrame:
-    """skip_duplicate_nodes semantics (A5): first row per (label, id)."""
-    return nodes.dropDuplicates([label_col, id_col])
+    """skip_duplicate_nodes semantics (A5): one row per (label, id).
+
+    The reference keeps the first row it meets; here the kept row is
+    the least of the other columns, compared as one struct in column
+    order, so the result does not depend on the input's row order."""
+    rest = [c for c in nodes.columns if c not in (label_col, id_col)]
+    if not rest:
+        return nodes.dropDuplicates([label_col, id_col])
+    kept = nodes.groupBy(label_col, id_col).agg(F.min(F.struct(*rest)).alias("_row"))
+    return kept.select(*[c if c in (label_col, id_col) else F.col("_row")[c].alias(c)
+                         for c in nodes.columns])
 
 
 def canonicalize_nodes(nodes: DataFrame, id_map: DataFrame,

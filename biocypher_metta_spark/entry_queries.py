@@ -1598,8 +1598,8 @@ FROM base
 
 
 def kg_swiss_records(spark, sf_dir):
-    """S4 twin: SwissProt flat-record assembly (uniprot adapters'
-    ID/AC/DR field set) through the real mapInPandas record parser over
+    """S4 twin: SwissProt flat-record parse (uniprot adapters' ID/AC/DR
+    field set) through the production Catalyst record parser over
     synthesized record text."""
     from biocypher_metta_spark.sources.swiss import parse_swiss_spans
 
@@ -2070,20 +2070,21 @@ WHERE NOT EXISTS (
 QUERIES["kg_gwas_leads"] = (kg_gwas_leads, KG_GWAS_LEADS_SQL)
 
 # ===========================================================================
-# P11 liftover, REAL chain-file kernel (round 3): the UCSC-chain interval
-# lifter (functions/chainfile.py) queried through the same pandas-UDF seam
-# production uses (functions/liftover.py), over a deterministic gate chain
-# exercising multi-block gaps, a negative-strand destination, and
-# overlapping chains with score tiebreak. The DuckDB twin re-derives every
-# lift with an independent range join over the chain's aligned-block table
-# (generated from ChainLifter.blocks_table() — blocks are one source of
-# truth; the LIFT ARITHMETIC and best-chain selection are independent:
-# bisect kernel vs SQL join + window). Reference semantics:
+# P11 liftover as a dimension join: the chain's aligned blocks
+# (functions/chainfile.py) become a frame (`chain_blocks`), and production's
+# `functions.liftover.lift` joins positions against it (64 kb bins, then a
+# containment filter and a best-(score, order) pick), over a deterministic
+# gate chain exercising multi-block gaps, a negative-strand destination,
+# and overlapping chains with score tiebreak. The DuckDB twin re-derives
+# every lift with an independent range join over the same aligned-block
+# table (generated from ChainLifter.blocks_table() — blocks are one source
+# of truth; the LIFT ARITHMETIC and best-chain selection are independent:
+# binned join + max_by vs SQL range join + window). Reference semantics:
 # helpers.py:145-175 (failed lifts -> None -> dropped, dbsuper_adapter.py:51).
 # ===========================================================================
 
 from biocypher_metta_spark.functions.chainfile import ChainLifter, compose_chain
-from biocypher_metta_spark.functions.liftover import make_liftover_udf
+from biocypher_metta_spark.functions.liftover import chain_blocks, lift
 
 _GATE_CHAIN_TEXT = (
     compose_chain(1000, "chr1", 10_000, 100, "chr1", 20_000, "+", 500,
@@ -2099,17 +2100,16 @@ _GATE_LIFTER = ChainLifter.from_text(_GATE_CHAIN_TEXT)
 
 
 def kg_liftover(spark, sf_dir):
-    """P11 gate: real chain-kernel liftover of doc-id-derived coordinates;
-    unmapped positions (chain gaps / out of range) drop, like the
-    reference's None-return path."""
+    """P11 gate: the chain-block liftover join over doc-id-derived
+    coordinates; unmapped positions (chain gaps / out of range) drop,
+    like the reference's None-return path."""
     ids = _ids(spark, sf_dir)
     src = ids.select(
         "i",
         F.concat(F.lit("chr"), ((F.col("i") % 3) + 1).cast("string"))
         .alias("chrom"),
         (F.lit(80) + (F.col("i") * 7) % 300).cast("long").alias("pos"))
-    lift = make_liftover_udf(_GATE_LIFTER.query)
-    return (src.withColumn("lifted", lift(F.col("chrom"), F.col("pos")))
+    return (lift(src, "chrom", "pos", chain_blocks(spark, _GATE_LIFTER), "lifted")
             .filter(F.col("lifted").isNotNull())
             .select("i", "chrom", "pos", "lifted"))
 

@@ -22,15 +22,14 @@ the stdlib:
 
 `ChainLifter.query(chrom, pos)` mirrors the `liftover` package protocol
 the reference relies on: 0-based source position in, a list of
-``(dst_chrom, dst_pos, dst_strand)`` out, best chain score first — so
-`make_liftover_udf(ChainLifter.from_path(p).query)` drops straight into
-the existing pluggable seam in functions/liftover.py.
+``(dst_chrom, dst_pos, dst_strand)`` out, best chain score first. It is
+the oracle for the Spark lift: `blocks_table()` feeds
+`functions.liftover.chain_blocks`, and `functions.liftover.lift` joins
+positions against those blocks.
 
-Scale notes: the full hg19ToHg38 chain expands to ~10^6 aligned blocks
-— a few tens of MB as the flat per-chromosome arrays built here. The
-lifter object pickles into the pandas-UDF closure once per executor
-(broadcast-sized, like the reference's process-global `_lifters` cache);
-each row lookup is one bisect + a bounded left scan, no per-row parsing.
+Scale notes: the full hg19ToHg38 chain expands to ~10^6 aligned blocks,
+built once on the driver; each `query` is one bisect + a bounded left
+scan, no per-row parsing.
 """
 
 from __future__ import annotations
@@ -125,7 +124,6 @@ class ChainLifter:
         for b in blocks:
             by_chrom.setdefault(b[0], []).append(b)
         self._idx = {}
-        self._np = None  # lazy numpy mirror for the vectorized batch path
         for chrom, bl in by_chrom.items():
             bl.sort(key=lambda b: (b[1], b[8]))
             starts = [b[1] for b in bl]
@@ -166,115 +164,8 @@ class ChainLifter:
             j -= 1
         return [(c, p, s) for _, _, c, p, s in hits]
 
-    def _np_index(self):
-        """Lazy numpy mirror of the per-chrom index (the parser stays
-        pure-stdlib; only the batch path needs numpy). Built once per
-        lifter object — i.e. once per executor after unpickling."""
-        import numpy as np
-        if self._np is None:
-            idx = {}
-            for chrom, (starts, ends, prefmax, rest) in self._idx.items():
-                idx[chrom] = {
-                    "starts": np.asarray(starts, dtype=np.int64),
-                    "ends": np.asarray(ends, dtype=np.int64),
-                    "prefmax": np.asarray(prefmax, dtype=np.int64),
-                    "chrom": np.asarray([r[0] for r in rest], dtype=object),
-                    "anchor": np.asarray([r[1] for r in rest], dtype=np.int64),
-                    "sign": np.asarray([r[2] for r in rest], dtype=np.int64),
-                    "strand": np.asarray([r[3] for r in rest], dtype=object),
-                    "score": np.asarray([r[4] for r in rest], dtype=np.int64),
-                    "order": np.asarray([r[5] for r in rest], dtype=np.int64),
-                }
-            self._np = idx
-        return self._np
-
-    def _best_blocks(self, entry, pos):
-        """Vectorized stabbing scan over one chrom's block arrays:
-        np.searchsorted, then the left-scan runs as whole-vector rounds
-        (round count = max overlap depth at the queried positions, 1-3
-        on real UCSC chains). Returns the best-(score, order) block
-        index per position, -1 where unmapped."""
-        import numpy as np
-        j = np.searchsorted(entry["starts"], pos, side="right") - 1
-        best_score = np.full(len(pos), np.iinfo(np.int64).min,
-                             dtype=np.int64)
-        best_order = np.full(len(pos), np.iinfo(np.int64).max,
-                             dtype=np.int64)
-        best_block = np.full(len(pos), -1, dtype=np.int64)
-        active = np.nonzero(j >= 0)[0]
-        while active.size:
-            ja, pa = j[active], pos[active]
-            cont = entry["prefmax"][ja] > pa
-            hit = cont & (entry["starts"][ja] <= pa) \
-                & (pa < entry["ends"][ja])
-            if hit.any():
-                hi = active[hit]
-                sc, od = entry["score"][ja[hit]], entry["order"][ja[hit]]
-                better = (sc > best_score[hi]) | (
-                    (sc == best_score[hi]) & (od < best_order[hi]))
-                upd = hi[better]
-                best_score[upd] = sc[better]
-                best_order[upd] = od[better]
-                best_block[upd] = ja[hit][better]
-            rem = active[cont]
-            j[rem] -= 1
-            active = rem[j[rem] >= 0]
-        return best_block
-
-    def query_best_many(self, chroms, poss):
-        """Batch twin of ``query(...)[0]``: for each (chrom, pos) the
-        best-scoring mapping as (dst_chrom, dst_pos, dst_strand), or
-        None if unmapped. Vectorized per chrom group via _best_blocks."""
-        import numpy as np
-        out = [None] * len(poss)
-        groups: dict[str, list[int]] = {}
-        for i, c in enumerate(chroms):
-            if c is None or poss[i] is None:
-                continue
-            groups.setdefault(_norm_chrom(str(c)), []).append(i)
-        np_idx = self._np_index()
-        for chrom, rows in groups.items():
-            entry = np_idx.get(chrom)
-            if entry is None:
-                continue
-            pos = np.asarray([poss[i] for i in rows], dtype=np.int64)
-            best_block = self._best_blocks(entry, pos)
-            for k in np.nonzero(best_block >= 0)[0]:
-                b = best_block[k]
-                dpos = int(entry["anchor"][b]
-                           + entry["sign"][b] * (pos[k] - entry["starts"][b]))
-                out[rows[k]] = (entry["chrom"][b], dpos, entry["strand"][b])
-        return out
-
-    def query_best_pos_many(self, chroms, poss):
-        """Fully vectorized dst-position batch (the pandas-UDF hot
-        path): chrom normalization + grouping via pandas C kernels,
-        output assembled whole-vector. Returns a nullable Int64 pandas
-        Series (NA = unmapped / null input); positions stay exact in
-        float64 (< 2^53)."""
-        import numpy as np
-        import pandas as pd
-        s = pd.Series(chroms, dtype=object).astype("string")
-        pos = pd.to_numeric(pd.Series(poss), errors="coerce")
-        norm = s.str.replace(r"^(?:chr|ch)", "", regex=True)
-        norm = norm.where(s.notna() & pos.notna())
-        out = np.full(len(s), np.nan)
-        np_idx = self._np_index()
-        posv = pos.to_numpy(dtype="float64", na_value=np.nan)
-        for chrom, idx in norm.groupby(norm).indices.items():
-            entry = np_idx.get(chrom)
-            if entry is None:
-                continue
-            p = posv[idx].astype(np.int64)
-            bb = self._best_blocks(entry, p)
-            found = bb >= 0
-            bf = bb[found]
-            out[idx[found]] = (entry["anchor"][bf] + entry["sign"][bf]
-                               * (p[found] - entry["starts"][bf]))
-        return pd.Series(out).astype("Int64")
-
     def blocks_table(self):
-        """Flat block rows for SQL-oracle generation / diagnostics:
+        """Flat block rows, the liftover dimension's rows:
         (src_chrom, src_start, src_end, dst_chrom, dst_anchor, sign,
         strand, score, ord)."""
         out = []

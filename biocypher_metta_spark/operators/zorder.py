@@ -161,37 +161,38 @@ def hilbert_key_sql(input_sql: str, x_col: str, y_col: str,
     """DuckDB twin of hilbert_key_udf: the same xy2d walk as a chain
     of per-level MATERIALIZED CTEs (state threading without the
     expression-inlining blowup), generated from the same constants.
-    Emits `out_cols` plus hkey."""
+    Emits `out_cols` plus hkey. Level k's state columns are named
+    hx{k}/hy{k}/hd{k} and each level drops its predecessor's, so a
+    `*` in `out_cols` never binds a stale level's state."""
     if not 1 <= bits <= 31:
         raise ValueError(f"bits must be in [1, 31], got {bits}")
     n = 1 << bits
     parts = [f"""WITH hk0 AS MATERIALIZED (
-  SELECT {out_cols}, CAST({x_col} AS BIGINT) AS hx,
-         CAST({y_col} AS BIGINT) AS hy, CAST(0 AS BIGINT) AS hd
+  SELECT {out_cols}, CAST({x_col} AS BIGINT) AS hx0,
+         CAST({y_col} AS BIGINT) AS hy0, CAST(0 AS BIGINT) AS hd0
   FROM (
 {input_sql.strip()}
   )
 )"""]
-    step = 0
-    for lvl in range(bits - 1, -1, -1):
-        s = 1 << lvl
-        prev, cur = f"hk{step}", f"hk{step + 1}"
-        step += 1
-        parts.append(f""", {cur} AS MATERIALIZED (
-  SELECT {out_cols},
-         CASE WHEN ((hy >> {lvl}) & 1) = 0 THEN
-           CASE WHEN ((hx >> {lvl}) & 1) = 1
-                THEN {n - 1} - hy ELSE hy END
-         ELSE hx END AS hx,
-         CASE WHEN ((hy >> {lvl}) & 1) = 0 THEN
-           CASE WHEN ((hx >> {lvl}) & 1) = 1
-                THEN {n - 1} - hx ELSE hx END
-         ELSE hy END AS hy,
-         hd + {s} * {s}
-            * xor(3 * ((hx >> {lvl}) & 1), (hy >> {lvl}) & 1) AS hd
-  FROM {prev}
+    for p, lvl in enumerate(range(bits - 1, -1, -1)):
+        s, c = 1 << lvl, p + 1
+        hx, hy, hd = f"hx{p}", f"hy{p}", f"hd{p}"
+        parts.append(f""", hk{c} AS MATERIALIZED (
+  SELECT * EXCLUDE ({hx}, {hy}, {hd}),
+         CASE WHEN (({hy} >> {lvl}) & 1) = 0 THEN
+           CASE WHEN (({hx} >> {lvl}) & 1) = 1
+                THEN {n - 1} - {hy} ELSE {hy} END
+         ELSE {hx} END AS hx{c},
+         CASE WHEN (({hy} >> {lvl}) & 1) = 0 THEN
+           CASE WHEN (({hx} >> {lvl}) & 1) = 1
+                THEN {n - 1} - {hx} ELSE {hx} END
+         ELSE {hy} END AS hy{c},
+         {hd} + {s} * {s}
+            * xor(3 * (({hx} >> {lvl}) & 1), ({hy} >> {lvl}) & 1) AS hd{c}
+  FROM hk{p}
 )""")
-    parts.append(f"\nSELECT {out_cols}, hd AS hkey FROM hk{step}")
+    parts.append(f"\nSELECT * EXCLUDE (hx{bits}, hy{bits}, hd{bits}), hd{bits} AS hkey "
+                 f"FROM hk{bits}")
     return "".join(parts)
 
 

@@ -107,7 +107,7 @@ class PipelineContext:
 
 def _dbsuper_lifted(ctx: PipelineContext, chr=None, start=None, end=None, **_):
     """The lifted dbSUPER scan, cached per window: the node and edge
-    entries share one Arrow liftover pass."""
+    entries share one liftover join against the chain blocks."""
     window = (chr, start, end)
     return ctx.cached(("dbsuper_base", window), lambda: reg._dbsuper_base(
         ctx.lines("dbsuper"), ctx.dims["liftover"], *window))

@@ -5,9 +5,9 @@ its adapter parsing logic only on local fixture data) depends on libraries
 not present in this container (liftover, hgvs, biocypher, Bio, owlready2).
 Adapters only *touch* those deps on specific code paths (liftover for
 dbsuper, Bio for GAF/SwissProt), so we install minimal deterministic stubs
-into sys.modules before import. The stubs double as the shared fake
-implementations our Spark engine uses in tests (e.g. the fake lifter), so
-both sides compute with identical auxiliaries.
+into sys.modules before import. The stubs double as the shared
+auxiliaries our Spark engine uses in tests (e.g. the liftover chain), so
+both sides compute with identical inputs.
 """
 
 from __future__ import annotations
@@ -16,16 +16,24 @@ import importlib
 import sys
 import types
 
+from biocypher_metta_spark.functions.chainfile import ChainLifter, compose_chain
+
 REF_PATH = "/root/reference"
 
 
-def fake_lifter_shift(chr_no: str, pos: int):
-    """Deterministic fake hg19->hg38 lifter used by BOTH the reference run
-    and the Spark engine in tests: shift by +1234, fail (empty) when
-    pos % 997 == 0 to exercise the None-drop path."""
-    if pos % 997 == 0:
-        return []
-    return [(chr_no, pos + 1234, "+")]
+# One hg19 -> hg38 chain for both sides of the dbSUPER parity tests: per
+# chromosome a +1234 shift, with a 1 kb unaligned gap at 50 Mb whose
+# positions fail to lift (the None-drop path). The reference reads it
+# through ChainLifter.query (the `liftover` stub below), the engine as
+# `chain_blocks(spark, lift_chain())`.
+LIFT_CHAIN = "".join(
+    compose_chain(100, f"chr{c}", 260_000_000, 0, f"chr{c}", 260_010_000, "+", 1_234,
+                  [(50_000_000, 1_000, 1_000), (208_999_000,)], chain_id=i + 1)
+    for i, c in enumerate([str(n) for n in range(1, 23)] + ["X", "Y"]))
+
+
+def lift_chain() -> ChainLifter:
+    return ChainLifter.from_text(LIFT_CHAIN)
 
 
 def _gaf_split(value: str) -> list[str]:
@@ -116,11 +124,7 @@ def install_stubs() -> None:
         return sys.modules[name]
 
     # liftover
-    class _Lifter:
-        def query(self, chr_no, pos):
-            return fake_lifter_shift(chr_no, pos)
-
-    mod("liftover", get_lifter=lambda *a, **k: _Lifter())
+    mod("liftover", get_lifter=lambda *a, **k: lift_chain())
 
     # hgvs tree (never exercised by sample configs)
     hgvs = mod("hgvs")

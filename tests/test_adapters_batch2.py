@@ -14,7 +14,7 @@ from biocypher_metta_spark import dims
 from biocypher_metta_spark.adapters import forgedb as fg
 from biocypher_metta_spark.adapters import regulatory as reg
 from biocypher_metta_spark.adapters import variants as var
-from biocypher_metta_spark.functions.liftover import make_liftover_udf
+from biocypher_metta_spark.functions.liftover import chain_blocks
 from biocypher_metta_spark.schema import load_default_registry
 from biocypher_metta_spark.sources.documents import span_lines
 from biocypher_metta_spark.sources.synth import spans_from_files
@@ -25,7 +25,7 @@ from tests.golden import (
     golden_node_atoms,
     spark_atoms,
 )
-from tests.reference_shim import fake_lifter_shift, load_ref
+from tests.reference_shim import lift_chain, load_ref
 
 S = "/root/reference/samples"
 AUX = "/root/reference/aux_files"
@@ -252,9 +252,9 @@ def test_dbsuper_nodes_parity(spark):
                              dbsuper_tissues_map=f"{AUX}/dbsuper_tissues_map.pkl",
                              write_properties=True, add_provenance=True)
     golden = golden_node_atoms(ref.get_nodes())
-    lift = make_liftover_udf(fake_lifter_shift)
+    blocks = chain_blocks(spark, lift_chain())
     _, atoms = reg.dbsuper_nodes(
-        lines_of(spark, f"{S}/dbSUPER_SuperEnhancers_hg19.tsv.gz"), lift)
+        lines_of(spark, f"{S}/dbSUPER_SuperEnhancers_hg19.tsv.gz"), blocks)
     assert_pr(spark_atoms(atoms), golden, 1.0, "dbsuper nodes")
 
 
@@ -267,12 +267,12 @@ def test_dbsuper_edges_parity(spark):
                              label="super_enhancer_gene",
                              write_properties=True, add_provenance=True)
     golden = golden_edge_atoms(ref.get_edges())
-    lift = make_liftover_udf(fake_lifter_shift)
+    blocks = chain_blocks(spark, lift_chain())
     hgnc = dims.dim_from_pickle(spark, f"{AUX}/hgnc_to_ensembl.pkl")
     tissue = dims.dim_from_pickle(spark, f"{AUX}/dbsuper_tissues_map.pkl")
     _, atoms = reg.dbsuper_edges(
         lines_of(spark, f"{S}/dbSUPER_SuperEnhancers_hg19.tsv.gz"),
-        lift, hgnc, tissue, REGISTRY)
+        blocks, hgnc, tissue, REGISTRY)
     assert_pr(spark_atoms(atoms), golden, 1.0, "dbsuper edges")
 
 

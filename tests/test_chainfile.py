@@ -7,7 +7,8 @@ import pytest
 
 from biocypher_metta_spark.functions.chainfile import (
     ChainLifter, compose_chain, parse_chain_blocks)
-from biocypher_metta_spark.functions.liftover import make_liftover_udf
+from biocypher_metta_spark.dims import local_frame
+from biocypher_metta_spark.functions.liftover import chain_blocks, lift
 from tests.conftest import requires_reference
 
 # A fixture exercising every format feature: multi-block chains with
@@ -137,54 +138,30 @@ def test_parse_rejects_header_inside_chain():
 
 
 # --------------------------------------------------------------------------
-# real kernel through the real adapter: dbsuper with a chain-backed lifter
+# the Spark lift: a binned join against the chain's block frame, checked
+# position by position against query()[0]
 # --------------------------------------------------------------------------
 
 
-@requires_reference("biocypher_metta")
-def test_dbsuper_nodes_real_chain_kernel(spark):
-    """Same dbsuper parity path as test_adapters_batch2, but the lifter
-    is the real chain kernel over whole-chromosome +1234 chains — the
-    reference side uses the equivalent plain-shift fake, so equality
-    proves the chain kernel end-to-end through the adapter."""
-    from biocypher_metta_spark.adapters import regulatory as reg
-    from tests.golden import golden_node_atoms, spark_atoms, assert_pr
-    from tests.reference_shim import load_ref
-    from tests.test_adapters_batch2 import lines_of
-
-    S = "/root/reference/samples"
-    AUX = "/root/reference/aux_files"
-    chroms = [str(c) for c in range(1, 23)] + ["X", "Y"]
-    chain_text = "".join(
-        compose_chain(100, f"chr{c}", 260_000_000, 0, f"chr{c}",
-                      260_010_000, "+", 1_234, [(259_000_000,)],
-                      chain_id=i + 1)
-        for i, c in enumerate(chroms))
-    lift = make_liftover_udf(ChainLifter.from_text(chain_text).query)
-
-    mod = load_ref("biocypher_metta.adapters.dbsuper_adapter")
-    import biocypher_metta.adapters.helpers as ref_helpers
-    ref = mod.DBSuperAdapter(
-        filepath=f"{S}/dbSUPER_SuperEnhancers_hg19.tsv.gz",
-        hgnc_to_ensembl_map=f"{AUX}/hgnc_to_ensembl.pkl",
-        dbsuper_tissues_map=f"{AUX}/dbsuper_tissues_map.pkl",
-        write_properties=True, add_provenance=True)
-    ref_helpers._lifters["hg19_hg38"] = type(
-        "L", (), {"query": staticmethod(
-            lambda c, p: [(c, int(p) + 1_234, "+")])})()
-    try:
-        golden = golden_node_atoms(ref.get_nodes())
-    finally:
-        ref_helpers._lifters.pop("hg19_hg38", None)
-
-    _, atoms = reg.dbsuper_nodes(
-        lines_of(spark, f"{S}/dbSUPER_SuperEnhancers_hg19.tsv.gz"), lift)
-    assert_pr(spark_atoms(atoms), golden, 1.0, "dbsuper nodes (chain kernel)")
+def lift_positions(spark, lf, chroms, poss):
+    """lift() over (chrom, pos) rows -> the lifted position per row."""
+    df = local_frame(spark, {"i": list(range(len(poss))), "c": chroms, "p": poss},
+                     "i long, c string, p long").repartition(3)
+    out = lift(df, "c", "p", chain_blocks(spark, lf), "lifted").collect()
+    assert len(out) == len(poss)
+    got = {r.i: r.lifted for r in out}
+    return [got[i] for i in range(len(poss))]
 
 
-def test_query_best_many_matches_row_loop(lifter):
-    """The vectorized batch path (np.searchsorted + whole-vector scan
-    rounds) must agree with query()[0] at EVERY position on all
+def assert_lift_matches_query(spark, lf, chroms, poss):
+    got = lift_positions(spark, lf, chroms, poss)
+    for c, p, g in zip(chroms, poss, got):
+        rows = lf.query(c, p) if c is not None and p is not None else []
+        assert g == (rows[0][1] if rows else None), (c, p)
+
+
+def test_lift_matches_query_row_loop(spark, lifter):
+    """The join agrees with query()[0] at every position on all
     chromosomes, including unmapped positions, unknown chroms, Nones,
     and 'chr'/'ch' prefixed names."""
     chroms, poss = [], []
@@ -194,23 +171,12 @@ def test_query_best_many_matches_row_loop(lifter):
             poss.append(pos)
     chroms.append("1")
     poss.append(None)
-    got = lifter.query_best_many(chroms, poss)
-    for c, p, g in zip(chroms, poss, got):
-        if c is None or p is None:
-            assert g is None
-            continue
-        rows = lifter.query(c, p)
-        assert g == (rows[0] if rows else None), (c, p)
+    assert_lift_matches_query(spark, lifter, chroms, poss)
 
 
-def test_query_best_many_random_chains_fuzz():
-    """Parity on randomized overlapping chain sets (seeded): deep
-    overlap stacks exercise multi-round vectorized scans."""
-    import random
-
-    rng = random.Random(7)
+def random_chains(rng, n=25):
     parts = []
-    for cid in range(25):
+    for cid in range(n):
         t_start = rng.randrange(0, 400)
         blocks = [(rng.randrange(5, 60),
                    rng.randrange(1, 30), rng.randrange(1, 30))
@@ -221,26 +187,109 @@ def test_query_best_many_random_chains_fuzz():
             rng.randrange(100, 5000), f"chr{rng.randrange(1, 4)}", 10_000,
             t_start, f"chr{rng.randrange(1, 6)}", 20_000, strand,
             rng.randrange(0, 1000), blocks, chain_id=cid + 1))
-    lf = ChainLifter.from_text("".join(parts))
-    chroms = [str(rng.randrange(1, 5)) for _ in range(2000)]
-    poss = [rng.randrange(0, 800) for _ in range(2000)]
-    got = lf.query_best_many(chroms, poss)
-    for c, p, g in zip(chroms, poss, got):
-        rows = lf.query(c, p)
-        assert g == (rows[0] if rows else None), (c, p)
+    return ChainLifter.from_text("".join(parts))
 
 
-def test_query_best_pos_many_matches_tuple_path(lifter):
-    """The pandas-grouped hot path agrees with query_best_many on
-    position values and null handling."""
-    import pandas as pd
+def test_lift_random_chains_fuzz(spark):
+    """Parity on randomized overlapping chain sets (seeded): deep overlap
+    stacks exercise the best-(score, order) pick; Nones, unknown chroms
+    and 'chr'/'ch' prefixes ride along."""
+    import random
 
-    chroms = ["1", "chr1", "2", "ch3", "nope", None, "1"]
-    poss = [100, 120, 230, 310, 5, 10, None]
-    tup = lifter.query_best_many(chroms, poss)
-    vec = lifter.query_best_pos_many(pd.Series(chroms), pd.Series(poss))
-    for t, v in zip(tup, vec):
-        if t is None:
-            assert v is pd.NA
+    rng = random.Random(7)
+    lf = random_chains(rng)
+    chroms, poss = [], []
+    for _ in range(2000):
+        if rng.random() < 0.05:
+            chroms.append(rng.choice([None, "nope", "", "chr"]))
         else:
-            assert v == t[1]
+            chroms.append(rng.choice(["", "chr", "ch"]) + str(rng.randrange(1, 5)))
+        poss.append(None if rng.random() < 0.03 else rng.randrange(0, 800))
+    assert_lift_matches_query(spark, lf, chroms, poss)
+
+
+def test_lift_nulls_and_prefixes_match_query(spark, lifter):
+    """Null inputs and unknown chroms lift to NULL; prefixed names lift
+    like their bare names; positions across bin edges map exactly."""
+    chroms = ["1", "chr1", "2", "ch3", "nope", None, "1", "chr7"]
+    poss = [100, 120, 230, 310, 5, 10, None, (1 << 16) + 3]
+    wide = ChainLifter.from_text(compose_chain(
+        10, "chr7", 1 << 20, (1 << 16) - 5, "chr8", 1 << 20, "+", 7,
+        [(20,)], chain_id=1) + FIX)
+    got = lift_positions(spark, wide, chroms, poss)
+    assert got == [500, 520, 28_969, 3_310, None, None, None, 15]
+    assert_lift_matches_query(spark, wide, chroms, poss)
+
+
+def test_chain_blocks_frame_is_blocks_table(spark, lifter):
+    rows = [tuple(r) for r in chain_blocks(spark, lifter).collect()]
+    assert rows == lifter.blocks_table()
+
+
+# --------------------------------------------------------------------------
+# dbSUPER through the lift join, without the reference: a chain with a
+# gap, so rows whose start or end falls in it are dropped
+# --------------------------------------------------------------------------
+
+# chr1: [1000, 1100) -> +5000, gap [1100, 1150), [1150, 1300) -> +5000-40
+GAP_CHAIN = compose_chain(100, "chr1", 10_000, 1_000, "chr1", 20_000, "+", 6_000,
+                          [(100, 50, 10), (150,)], chain_id=1)
+
+
+def test_dbsuper_drops_rows_lifting_into_a_gap(spark):
+    from biocypher_metta_spark.adapters import regulatory as reg
+
+    lf = ChainLifter.from_text(GAP_CHAIN)
+    rows = [("chrom", "start", "stop", "se_id", "gene", "cell"),  # header
+            ("chr1", 1000, 1050, "SE_keep1", "G1", "c1"),
+            ("chr1", 1120, 1200, "SE_start_in_gap", "G1", "c1"),
+            ("chr1", 1050, 1130, "SE_end_in_gap", "G1", "c1"),
+            ("chr1", 1149, 1250, "SE_keep2", "G1", "c1"),
+            ("chr2", 1000, 1050, "SE_unknown_chrom", "G1", "c1"),
+            ("chr1", 1200, 1400, "SE_end_past_chain", "G1", "c1")]
+    lines = local_frame(spark, {"value": ["\t".join(map(str, r)) for r in rows]},
+                        "value string")
+    typed, _atoms = reg.dbsuper_nodes(lines, chain_blocks(spark, lf))
+    got = {r.se_id: (r.chr, r.start, r.end) for r in typed.collect()}
+
+    def lifted(pos):
+        return lf.query("chr1", pos + 1)[0][1]
+    assert got == {"SE_keep1": ("chr1", lifted(1000), lifted(1050)),
+                   "SE_keep2": ("chr1", lifted(1149), lifted(1250))}
+
+
+# --------------------------------------------------------------------------
+# real kernel through the real adapter: dbsuper with a chain-backed lifter
+# --------------------------------------------------------------------------
+
+
+@requires_reference("biocypher_metta")
+def test_dbsuper_nodes_real_chain_kernel(spark):
+    """Same dbsuper parity path as test_adapters_batch2, with the
+    reference's lifter cache holding the chain kernel itself: both sides
+    lift through one chain, the reference via ChainLifter.query and the
+    engine via the block join."""
+    from biocypher_metta_spark.adapters import regulatory as reg
+    from tests.golden import golden_node_atoms, spark_atoms, assert_pr
+    from tests.reference_shim import lift_chain, load_ref
+    from tests.test_adapters_batch2 import AUX, S, lines_of
+
+    lf = lift_chain()
+
+    mod = load_ref("biocypher_metta.adapters.dbsuper_adapter")
+    import biocypher_metta.adapters.helpers as ref_helpers
+    ref = mod.DBSuperAdapter(
+        filepath=f"{S}/dbSUPER_SuperEnhancers_hg19.tsv.gz",
+        hgnc_to_ensembl_map=f"{AUX}/hgnc_to_ensembl.pkl",
+        dbsuper_tissues_map=f"{AUX}/dbsuper_tissues_map.pkl",
+        write_properties=True, add_provenance=True)
+    ref_helpers._lifters["hg19_hg38"] = lf
+    try:
+        golden = golden_node_atoms(ref.get_nodes())
+    finally:
+        ref_helpers._lifters.pop("hg19_hg38", None)
+
+    _, atoms = reg.dbsuper_nodes(
+        lines_of(spark, f"{S}/dbSUPER_SuperEnhancers_hg19.tsv.gz"),
+        chain_blocks(spark, lf))
+    assert_pr(spark_atoms(atoms), golden, 1.0, "dbsuper nodes (chain kernel)")

@@ -10,11 +10,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from biocypher_metta_spark import dims, pipeline
-from biocypher_metta_spark.functions.liftover import make_liftover_udf
+from biocypher_metta_spark.functions.liftover import chain_blocks
 from biocypher_metta_spark.schema import load_default_registry
 from biocypher_metta_spark.sources.synth import spans_from_files
 from tests.conftest import requires_reference
-from tests.reference_shim import fake_lifter_shift
+from tests.reference_shim import lift_chain
 from tests.test_adapters_batch2 import make_rsid_map, rsid_dim_df
 
 S = "/root/reference/samples"
@@ -135,7 +135,7 @@ def full_ctx(spark, gene_info_path, fixtures_dir):
         "peregrine_tissues": dims.dim_from_map(spark, {k: v[0] for k, v in tmap.items()}),
         "dbsnp_rsid": rsid_dim_df(spark, rsid_map),
         "dbsnp_pos": dims.dim_from_map(spark, pos_map),
-        "liftover": make_liftover_udf(fake_lifter_shift),
+        "liftover": chain_blocks(spark, lift_chain()),
     }
     return pipeline.PipelineContext(spark, docs, REGISTRY, d)
 

@@ -13,6 +13,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from biocypher_metta_spark import dims, lineage, pipeline, sinks
+from biocypher_metta_spark.canonicalize import dedup_nodes
+from biocypher_metta_spark.functions.chainfile import ChainLifter, compose_chain
+from biocypher_metta_spark.functions.liftover import chain_blocks
 from biocypher_metta_spark.schema import SchemaRegistry, load_default_registry
 from biocypher_metta_spark.sources.documents import (
     DOCUMENTS_SCHEMA,
@@ -313,7 +316,7 @@ def test_every_registry_entry_builds_on_empty_input(spark, monkeypatch):
     dim_frames = {name: _key_value(spark, {}) for name in KEY_VALUE_DIMS}
     dim_frames["dbsnp_rsid"] = _rsid_dim(spark, [])
     dim_frames["ontology_triples"] = parse_ntriples(span_lines(docs, "ontology"))
-    dim_frames["liftover"] = lambda c, p: p
+    dim_frames["liftover"] = chain_blocks(spark, ChainLifter([]))
     ctx = pipeline.PipelineContext(spark, docs, REGISTRY, dims=dim_frames)
     assert len(pipeline.PIPELINE_REGISTRY) == 40
     built = {}
@@ -336,6 +339,48 @@ def test_every_registry_entry_builds_on_empty_input(spark, monkeypatch):
         assert need <= set(typed.columns), name
         assert atoms.columns == ["atom"], name
     assert result.atoms.count() == 0
+
+
+# physical operators that run Python workers
+PYTHON_EVAL_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
+                     "FlatMapGroupsInPandas")
+
+
+def test_no_entry_plan_runs_python(spark):
+    """No entry's typed or atom plan evaluates Python. The documents are
+    an RDD scan and every dimension holds a row, so the optimizer cannot
+    fold any entry's plan away to an empty relation."""
+    docs = _documents(spark, {"none": ["x"]})
+    dim_frames = {name: _key_value(spark, {"k": "v"}) for name in KEY_VALUE_DIMS}
+    dim_frames["dbsnp_rsid"] = _rsid_dim(spark, [("rs1", "chr1", 50)])
+    dim_frames["ontology_triples"] = parse_ntriples(span_lines(docs, "ontology"))
+    dim_frames["liftover"] = chain_blocks(spark, ChainLifter.from_text(compose_chain(
+        1, "chr1", 1_000, 0, "chr1", 1_000, "+", 0, [(1_000,)])))
+    ctx = pipeline.PipelineContext(spark, docs, REGISTRY, dims=dim_frames)
+    assert len(pipeline.PIPELINE_REGISTRY) == 40
+    found = {}
+    for name, entry in pipeline.PIPELINE_REGISTRY.items():
+        typed, atoms, _ = entry(ctx, **REQUIRED_ARGS.get(name, {}))
+        for df in (typed, atoms):
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            hits = [n for n in PYTHON_EVAL_NODES if n in plan]
+            if hits:
+                found[name] = hits
+    assert found == {}
+
+
+def test_dedup_nodes_keeps_one_row_in_either_order(spark):
+    """Two rows for one (label, id) keep the same row whichever partition
+    holds which; the columns keep their order."""
+    schema = "id string, label string, chr string, start long, end long"
+    a = ("ENSG1", "gene", "chr2", 5, 9)
+    b = ("ENSG1", "gene", "chr1", 7, 3)
+    other = ("ENSG2", "gene", None, None, None)
+    for rows in ([a, b, other], [b, a, other]):
+        nodes = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+        out = dedup_nodes(nodes)
+        assert out.columns == nodes.columns
+        assert sorted(tuple(r) for r in out.collect()) == [b, other]
 
 
 def test_forgedb_edges_render_with_context_registry(spark):
@@ -366,7 +411,8 @@ def test_forgedb_edges_render_with_context_registry(spark):
 
 # Imports everything the KG build path uses, in a fresh interpreter so no
 # other test's imports leak in, then prints every loaded module that lies
-# outside that path: the operator library and the driver gate registry.
+# outside that path: the operator library, the driver gate registry and
+# pandas (the KG path runs no Python worker).
 _KG_PATH_IMPORTS = """
 import importlib, importlib.util, pkgutil, sys
 sys.path.insert(0, sys.argv[1])
@@ -382,7 +428,7 @@ for name in ("pipeline", "sinks", "serializer", "lineage", "canonicalize",
     importlib.import_module("biocypher_metta_spark." + name)
 print("\\n".join(m for m in sorted(sys.modules)
                 if m.startswith("biocypher_metta_spark.operators")
-                or "entry_queries" in m))
+                or "entry_queries" in m or m == "pandas"))
 """
 
 

@@ -75,6 +75,21 @@ def test_duckdb_twin_matches(spark):
     assert duck == got
 
 
+def test_duckdb_twin_default_out_cols():
+    """With the default out_cols='*' every input column comes through
+    once and no level's state column shadows the next one's."""
+    bits = 3
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (x BIGINT, y BIGINT)")
+    pts = [(x, y) for x in range(1 << bits) for y in range(1 << bits)]
+    con.executemany("INSERT INTO t VALUES (?, ?)", pts)
+    cur = con.execute(hilbert_key_sql("SELECT x, y FROM t", "x", "y", bits=bits))
+    assert [d[0] for d in cur.description] == ["x", "y", "hkey"]
+    got = {(x, y): k for x, y, k in cur.fetchall()}
+    assert got[(1, 2)] == 13
+    assert got == {(x, y): xy2d(bits, x, y) for x, y in pts}
+
+
 def test_hilbert_layout_orders_rows(spark):
     bits = 6
     n = 1 << bits
