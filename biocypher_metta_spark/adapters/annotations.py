@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from biocypher_metta_spark.adapters import provenance_props
+from biocypher_metta_spark.dims import lookup_join
 from biocypher_metta_spark.functions.genomic import genomic_window
 from biocypher_metta_spark.serializer import (
     Prop,
@@ -39,31 +40,27 @@ UNIPROT_SOURCE = ("Uniprot", "https://www.uniprot.org/")
 
 
 def hocomoco_motif_nodes(pwm_lines: DataFrame, model_tf: DataFrame,
-                         hgnc2ensembl: DataFrame,
-                         model_col: str = "model", order_col: str = "row_order",
-                         write_properties: bool = True,
-                         add_provenance: bool = True,
-                         ) -> tuple[DataFrame, DataFrame]:
+                         hgnc2ensembl: DataFrame) -> tuple[DataFrame, DataFrame]:
     """motif nodes (hocomoco_motif_adapter.py:48-83).
 
-    pwm_lines: one row per PWM matrix line with the model key and a
-    row-order column (S9 fan-in: filename carries the model). The 4
+    pwm_lines: one row per PWM matrix line with the `model` key and a
+    `row_order` column (S9 fan-in: filename carries the model). The 4
     parallel float lists are rebuilt with order-preserving
     sort_array(collect_list(struct(order, vals))) — the A1 aggregation.
     model -> tf (annotation TSV dim) -> ensembl id (hgnc dim), both inner.
     """
     d = split_cols(pwm_lines, {"a": 0, "c": 1, "g": 2, "t": 3}, "\t")
     d = d.filter(~F.col("a").startswith(">"))
-    rowstruct = F.struct(F.col(order_col).alias("o"),
+    rowstruct = F.struct(F.col("row_order").alias("o"),
                          F.col("a").cast("double").alias("va"),
                          F.col("c").cast("double").alias("vc"),
                          F.col("g").cast("double").alias("vg"),
                          F.col("t").cast("double").alias("vt"))
     agg = (
-        d.groupBy(model_col)
+        d.groupBy("model")
         .agg(F.array_sort(F.collect_list(rowstruct)).alias("rows"))
         .select(
-            F.col(model_col),
+            F.col("model"),
             F.transform("rows", lambda r: r["va"]).alias("pwm_A"),
             F.transform("rows", lambda r: r["vc"]).alias("pwm_C"),
             F.transform("rows", lambda r: r["vg"]).alias("pwm_G"),
@@ -71,23 +68,18 @@ def hocomoco_motif_nodes(pwm_lines: DataFrame, model_tf: DataFrame,
             F.size("rows").alias("length"),
         )
     )
-    mt = model_tf.select(F.col("key").alias("_m"), F.col("value").alias("tf_name"))
-    hm = hgnc2ensembl.select(F.col("key").alias("_h"), F.col("value").alias("_id"))
-    agg = (agg.join(F.broadcast(mt), F.col(model_col) == mt["_m"], "left")
-           .join(F.broadcast(hm), F.col("tf_name") == hm["_h"])
-           )
+    agg = lookup_join(agg, model_tf, F.col("model"), out_col="tf_name", how="left")
+    agg = lookup_join(agg, hgnc2ensembl, F.col("tf_name"), out_col="_id")
     typed = agg.select(F.col("_id").alias("id"), F.lit("motif").alias("label"),
                        "tf_name", "pwm_A", "pwm_C", "pwm_G", "pwm_T", "length")
-    props: list[Prop] = []
-    if write_properties:
-        props = [
-            Prop("tf_name", F.col("tf_name"), "str"),
-            Prop("pwm_A", F.col("pwm_A"), "float_list"),
-            Prop("pwm_C", F.col("pwm_C"), "float_list"),
-            Prop("pwm_G", F.col("pwm_G"), "float_list"),
-            Prop("pwm_T", F.col("pwm_T"), "float_list"),
-            Prop("length", F.col("length"), "int"),
-        ] + provenance_props(*HOCOMOCO_SOURCE, write_properties, add_provenance)
+    props = [
+        Prop("tf_name", F.col("tf_name"), "str"),
+        Prop("pwm_A", F.col("pwm_A"), "float_list"),
+        Prop("pwm_C", F.col("pwm_C"), "float_list"),
+        Prop("pwm_G", F.col("pwm_G"), "float_list"),
+        Prop("pwm_T", F.col("pwm_T"), "float_list"),
+        Prop("length", F.col("length"), "int"),
+    ] + provenance_props(*HOCOMOCO_SOURCE)
     atoms = atoms_df(agg, node_def_out("motif", F.col("_id")), props)
     return typed, atoms
 
@@ -109,33 +101,28 @@ GAF_COLS = {"db_object_id": 1, "qualifier": 3, "go_id": 4,
 
 def gaf_edges(lines: DataFrame, registry, gaf_type: str = "human",
               rnacentral_map: DataFrame | None = None,
-              write_properties: bool = True, add_provenance: bool = True,
               ) -> tuple[DataFrame, DataFrame]:
     """GO -> gene-product edges (gaf_adapter.py:76-103). Qualifier and
     DB:Reference are '|'-multivalue fields (Biopython GAF semantics) ->
     list properties. gaf_type='rna' routes DB_Object_ID through the
     RNAcentral '{urs}_{taxid}' -> transcript dimension (inner)."""
     d = split_cols(lines, GAF_COLS, "\t", skip_prefix="!")
-    d = d.withColumn("_tgt", F.col("db_object_id"))
     if gaf_type == "rna":
         assert rnacentral_map is not None
-        m = rnacentral_map.select(F.col("key").alias("_k"), F.col("value").alias("_mapped"))
-        d = d.join(F.broadcast(m), d["db_object_id"] == m["_k"]) \
-             .withColumn("_tgt", F.col("_mapped"))
+        d = lookup_join(d, rnacentral_map, F.col("db_object_id"), out_col="_tgt")
+    else:
+        d = d.withColumn("_tgt", F.col("db_object_id"))
     qualifier = F.split(F.col("qualifier"), r"\|")
     db_ref = F.split(F.col("db_reference"), r"\|")
     typed = d.select(F.col("go_id").alias("src"), F.col("_tgt").alias("tgt"),
                      F.lit("go_gene_product").alias("label"),
                      qualifier.alias("qualifier"), db_ref.alias("db_reference"),
                      F.col("evidence"))
-    props: list[Prop] = []
-    if write_properties:
-        props = [
-            Prop("qualifier", qualifier, "str_list"),
-            Prop("db_reference", db_ref, "str_list"),
-            Prop("evidence", F.col("evidence"), "str"),
-        ] + provenance_props("GO", GO_SOURCE_URLS.get(gaf_type, GO_SOURCE_URLS["human"]),
-                             write_properties, add_provenance)
+    props = [
+        Prop("qualifier", qualifier, "str_list"),
+        Prop("db_reference", db_ref, "str_list"),
+        Prop("evidence", F.col("evidence"), "str"),
+    ] + provenance_props("GO", GO_SOURCE_URLS.get(gaf_type, GO_SOURCE_URLS["human"]))
     atoms = atoms_df(d, edge_def_out("go_gene_product", registry,
                                      F.col("go_id"), F.col("_tgt")), props)
     return typed, atoms
@@ -162,9 +149,7 @@ RNA_BED_COLS = {"chr": 0, "coord_start": 1, "coord_end": 2, "id": 3,
 
 def rna_central_nodes(lines: DataFrame, label: str = "non_coding_rna",
                       chr: str | None = None, start: int | None = None,
-                      end: int | None = None,
-                      write_properties: bool = True, add_provenance: bool = True,
-                      ) -> tuple[DataFrame, DataFrame]:
+                      end: int | None = None) -> tuple[DataFrame, DataFrame]:
     """non_coding_rna nodes (rna_central_adapter.py:38-58): URS id minus
     the taxon suffix, 0-based -> +1 coords, rna_type from BED col 13."""
     d = split_cols(lines, RNA_BED_COLS, "\t")
@@ -178,23 +163,18 @@ def rna_central_nodes(lines: DataFrame, label: str = "non_coding_rna",
     typed = d.select(F.col("_id").alias("id"), F.lit(label).alias("label"),
                      "chr", F.col("_s").alias("start"), F.col("_e").alias("end"),
                      F.col("_rt").alias("rna_type"))
-    props: list[Prop] = []
-    if write_properties:
-        props = [
-            Prop("chr", F.col("chr"), "str"),
-            Prop("start", F.col("_s"), "int"),
-            Prop("end", F.col("_e"), "int"),
-            Prop("rna_type", F.col("_rt"), "str"),
-        ] + provenance_props(*RNACENTRAL_SOURCE, write_properties, add_provenance)
+    props = [
+        Prop("chr", F.col("chr"), "str"),
+        Prop("start", F.col("_s"), "int"),
+        Prop("end", F.col("_e"), "int"),
+        Prop("rna_type", F.col("_rt"), "str"),
+    ] + provenance_props(*RNACENTRAL_SOURCE)
     atoms = atoms_df(d, node_def_out(label, F.col("_id")), props)
     return typed, atoms
 
 
 def rna_central_go_edges(rfam_lines: DataFrame, registry,
-                         label: str = "go_rna",
-                         write_properties: bool = True,
-                         add_provenance: bool = True,
-                         ) -> tuple[DataFrame, DataFrame]:
+                         label: str = "go_rna") -> tuple[DataFrame, DataFrame]:
     """ncRNA -> GO term edges from the rfam annotation TSV, human
     (_9606) only (rna_central_adapter.py:60-74)."""
     d = split_cols(rfam_lines, {"urs_taxid": 0, "go_term": 1, "rfam": 2}, "\t")
@@ -203,7 +183,7 @@ def rna_central_go_edges(rfam_lines: DataFrame, registry,
     d = d.withColumn("_id", rid)
     typed = d.select(F.col("_id").alias("src"), F.col("go_term").alias("tgt"),
                      F.lit(label).alias("label"))
-    props = provenance_props(*RNACENTRAL_SOURCE, write_properties, add_provenance)
+    props = provenance_props(*RNACENTRAL_SOURCE)
     atoms = atoms_df(d, edge_def_out(label, registry, F.col("_id"), F.col("go_term")), props)
     return typed, atoms
 
@@ -246,10 +226,7 @@ def _uniprot_dbxrefs(xrefs_col):
     return F.transform(F.array_sort(keyed), lambda st: st["v"])
 
 
-def uniprot_protein_nodes(records: DataFrame,
-                          write_properties: bool = True,
-                          add_provenance: bool = True,
-                          ) -> tuple[DataFrame, DataFrame]:
+def uniprot_protein_nodes(records: DataFrame) -> tuple[DataFrame, DataFrame]:
     """protein nodes (uniprot_protein_adapter.py:46-62). Quirk preserved:
     `accessions` is the REST of the list when >1, else the single
     accession as a scalar string."""
@@ -265,21 +242,17 @@ def uniprot_protein_nodes(records: DataFrame,
     r = r.withColumn("_dbx", dbx)
     typed = r.select(F.col("_id").alias("id"), F.lit("protein").alias("label"),
                      name.alias("protein_name"), F.col("_dbx").alias("synonyms"))
-    props: list[Prop] = []
-    if write_properties:
-        props = [
-            Prop("accessions", acc_raw, "raw"),
-            Prop("protein_name", name, "str"),
-            Prop("synonyms", F.col("_dbx"), "str_list"),
-        ] + provenance_props(*UNIPROT_SOURCE, write_properties, add_provenance)
+    props = [
+        Prop("accessions", acc_raw, "raw"),
+        Prop("protein_name", name, "str"),
+        Prop("synonyms", F.col("_dbx"), "str_list"),
+    ] + provenance_props(*UNIPROT_SOURCE)
     atoms = atoms_df(r, node_def_out("protein", F.col("_id")), props)
     return typed, atoms
 
 
 def uniprot_translation_edges(records: DataFrame, registry,
                               direction: str = "translates_to",
-                              write_properties: bool = True,
-                              add_provenance: bool = True,
                               ) -> tuple[DataFrame, DataFrame]:
     """transcript <-> protein edges from Ensembl ENST dbxrefs
     (uniprot_adapter.py:33-74): one edge per Ensembl xref whose first
@@ -299,6 +272,6 @@ def uniprot_translation_edges(records: DataFrame, registry,
     else:
         src, tgt, label = F.col("_id"), F.col("_enst"), "translation_of"
     typed = r.select(src.alias("src"), tgt.alias("tgt"), F.lit(label).alias("label"))
-    props = provenance_props(*UNIPROT_SOURCE, write_properties, add_provenance)
+    props = provenance_props(*UNIPROT_SOURCE)
     atoms = atoms_df(r, edge_def_out(label, registry, src, tgt), props)
     return typed, atoms

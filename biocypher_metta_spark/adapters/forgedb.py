@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from biocypher_metta_spark.adapters import provenance_props
+from biocypher_metta_spark.dims import lookup_join
 from biocypher_metta_spark.functions.genomic import genomic_window
 from biocypher_metta_spark.functions.values import to_float_col
 from biocypher_metta_spark.serializer import (
@@ -59,9 +60,7 @@ ROADMAP_COLS = {"rsid": 0, "dataset": 1, "cell": 2, "tissue": 3, "datatype": 4}
 
 def roadmap_nodes(lines: DataFrame, tissue_map: DataFrame, rsid_dim: DataFrame,
                   chr: str | None = None, start: int | None = None,
-                  end: int | None = None,
-                  write_properties: bool = True, add_provenance: bool = True,
-                  ) -> tuple[DataFrame, DataFrame]:
+                  end: int | None = None) -> tuple[DataFrame, DataFrame]:
     """regulatory_region nodes (roadmap_adapter.py:48-81): rsid -> chr/pos
     via the dbsnp dimension (inner, KeyError-skip parity), tissue ->
     ontology id (inner, None-skip), quotes stripped from the cell/tissue
@@ -72,8 +71,7 @@ def roadmap_nodes(lines: DataFrame, tissue_map: DataFrame, rsid_dim: DataFrame,
     tissue = F.translate(F.col("tissue"), "\"'", "")
     d = d.withColumn("_tissue", tissue)
     d = _join_rsid(d, rsid_dim)
-    m = tissue_map.select(F.col("key").alias("_k"), F.col("value").alias("_ctx"))
-    d = d.join(F.broadcast(m), F.col("_tissue") == m["_k"])
+    d = lookup_join(d, tissue_map, F.col("_tissue"), out_col="_ctx")
     d = d.filter(genomic_window(F.col("__chr"), F.col("__pos"), F.col("__pos"),
                                 chr, start, end))
     typed = d.select(F.col("rsid").alias("id"),
@@ -82,13 +80,11 @@ def roadmap_nodes(lines: DataFrame, tissue_map: DataFrame, rsid_dim: DataFrame,
                      F.col("__pos").alias("end"), F.col("cell"),
                      F.col("_ctx").alias("biological_context"),
                      F.col("datatype").alias("biochemical_activity"))
-    props: list[Prop] = []
-    if write_properties:
-        props = [
-            Prop("cell", F.col("cell"), "str"),
-            Prop("biological_context", F.col("_ctx"), "str"),
-            Prop("biochemical_activity", F.col("datatype"), "str"),
-        ] + provenance_props(*ROADMAP_SOURCE, write_properties, add_provenance)
+    props = [
+        Prop("cell", F.col("cell"), "str"),
+        Prop("biological_context", F.col("_ctx"), "str"),
+        Prop("biochemical_activity", F.col("datatype"), "str"),
+    ] + provenance_props(*ROADMAP_SOURCE)
     atoms = atoms_df(d, node_def_out("regulatory_region", F.col("rsid")), props)
     return typed, atoms
 
@@ -103,19 +99,15 @@ ABC_COLS = {"rsid": 0, "chromosome": 1, "target_gene": 10, "abc_score": 24,
 
 def abc_nodes(lines: DataFrame, tissue_map: DataFrame, rsid_dim: DataFrame,
               chr: str | None = None, start: int | None = None,
-              end: int | None = None,
-              write_properties: bool = True, add_provenance: bool = True,
-              ) -> tuple[DataFrame, DataFrame]:
+              end: int | None = None) -> tuple[DataFrame, DataFrame]:
     """ABC regulatory_region nodes (abc_adapter.py:42-62). Quirk parity:
-    props are emitted unconditionally (no write_properties guard in the
-    reference), the window uses the dbsnp pos but the FILE's chromosome
-    column, and a tissue-map miss drops the row (KeyError inside the
-    try)."""
+    no provenance (the reference builds its own props dict), the window
+    uses the dbsnp pos but the FILE's chromosome column, and a tissue-map
+    miss drops the row (KeyError inside the try)."""
     d = quoted_csv_cols(lines, 29, ABC_COLS, ",")
     d = d.filter(F.col("rsid") != "rsid")
     d = _join_rsid(d, rsid_dim)
-    m = tissue_map.select(F.col("key").alias("_k"), F.col("value").alias("_ctx"))
-    d = d.join(F.broadcast(m), F.col("cell_type") == m["_k"])
+    d = lookup_join(d, tissue_map, F.col("cell_type"), out_col="_ctx")
     d = d.filter(genomic_window(F.col("chromosome"), F.col("__pos"), F.col("__pos"),
                                 chr, start, end))
     typed = d.select(F.col("rsid").alias("id"),
@@ -137,9 +129,7 @@ def abc_nodes(lines: DataFrame, tissue_map: DataFrame, rsid_dim: DataFrame,
 def abc_edges(lines: DataFrame, hgnc2ensembl: DataFrame, tissue_map: DataFrame,
               rsid_dim: DataFrame, registry,
               chr: str | None = None, start: int | None = None,
-              end: int | None = None,
-              write_properties: bool = True, add_provenance: bool = True,
-              ) -> tuple[DataFrame, DataFrame]:
+              end: int | None = None) -> tuple[DataFrame, DataFrame]:
     """regulatory_region_gene edges (abc_adapter.py:66-90). Quirks: the
     window check receives the rsid-map VALUE (a dict in the reference) —
     only exercised when no window is set, so we join the dim for the
@@ -154,11 +144,8 @@ def abc_edges(lines: DataFrame, hgnc2ensembl: DataFrame, tissue_map: DataFrame,
         # the usable semantics are pos-window filtering
         d = d.filter(genomic_window(F.col("chromosome"), F.col("__pos"),
                                     F.col("__pos"), chr, start, end))
-    g = hgnc2ensembl.select(F.col("key").alias("_g"), F.col("value").alias("tgt"))
-    d = d.withColumn("_sym", F.trim(F.col("target_gene")))
-    d = d.join(F.broadcast(g), F.col("_sym") == g["_g"])
-    m = tissue_map.select(F.col("key").alias("_k"), F.col("value").alias("_ctx"))
-    d = d.join(F.broadcast(m), F.col("cell_type") == m["_k"])
+    d = lookup_join(d, hgnc2ensembl, F.trim(F.col("target_gene")), out_col="tgt")
+    d = lookup_join(d, tissue_map, F.col("cell_type"), out_col="_ctx")
     typed = d.select(F.col("rsid").alias("src"), F.col("tgt"),
                      F.lit("regulatory_region_gene").alias("label"),
                      F.col("abc_score").alias("score"),
@@ -182,9 +169,7 @@ CADD_COLS = {"rsid": 0, "chromosome": 1, "position": 2, "ref": 3, "alt": 4,
 
 def cadd_nodes(lines: DataFrame, rsid_dim: DataFrame,
                chr: str | None = None, start: int | None = None,
-               end: int | None = None,
-               write_properties: bool = True, add_provenance: bool = True,
-               ) -> tuple[DataFrame, DataFrame]:
+               end: int | None = None) -> tuple[DataFrame, DataFrame]:
     """sequence_variant nodes (cadd_adapter.py:35-65): pos from the dbsnp
     dim (not the file), float CADD scores."""
     d = quoted_csv_cols(lines, 7, CADD_COLS, ",")
@@ -200,18 +185,16 @@ def cadd_nodes(lines: DataFrame, rsid_dim: DataFrame,
                      F.col("__pos").alias("start"), F.col("__pos").alias("end"),
                      "ref", "alt", raw.alias("raw_cadd_score"),
                      phred.alias("phred_score"))
-    props: list[Prop] = []
-    if write_properties:
-        props = [
-            Prop("chr", F.col("chromosome"), "str"),
-            Prop("start", F.col("__pos"), "int"),
-            Prop("end", F.col("__pos"), "int"),
-            Prop("rsid", F.col("rsid"), "str"),
-            Prop("ref", F.col("ref"), "str"),
-            Prop("alt", F.col("alt"), "str"),
-            Prop("raw_cadd_score", raw, "float"),
-            Prop("phred_score", phred, "float"),
-        ] + provenance_props(*CADD_SOURCE, write_properties, add_provenance)
+    props = [
+        Prop("chr", F.col("chromosome"), "str"),
+        Prop("start", F.col("__pos"), "int"),
+        Prop("end", F.col("__pos"), "int"),
+        Prop("rsid", F.col("rsid"), "str"),
+        Prop("ref", F.col("ref"), "str"),
+        Prop("alt", F.col("alt"), "str"),
+        Prop("raw_cadd_score", raw, "float"),
+        Prop("phred_score", phred, "float"),
+    ] + provenance_props(*CADD_SOURCE)
     atoms = atoms_df(d, node_def_out("sequence_variant", F.col("rsid")), props)
     return typed, atoms
 
@@ -227,8 +210,6 @@ def refseq_closest_gene_edges(lines: DataFrame, hgnc2ensembl: DataFrame,
                               rsid_dim: DataFrame, registry,
                               chr: str | None = None, start: int | None = None,
                               end: int | None = None,
-                              write_properties: bool = True,
-                              add_provenance: bool = True,
                               ) -> tuple[DataFrame, DataFrame]:
     """closest_gene edges (refseq_closest_gene_adapter.py:36-66):
     distance = gene_start + 1 - pos (pos from the dbsnp dim)."""
@@ -237,20 +218,17 @@ def refseq_closest_gene_edges(lines: DataFrame, hgnc2ensembl: DataFrame,
     d = _join_rsid(d, rsid_dim)
     d = d.filter(genomic_window(F.col("chromosome"), F.col("__pos"), F.col("__pos"),
                                 chr, start, end))
-    g = hgnc2ensembl.select(F.col("key").alias("_g"), F.col("value").alias("tgt"))
-    d = d.join(F.broadcast(g), F.trim(F.col("gene_symbol")) == g["_g"])
+    d = lookup_join(d, hgnc2ensembl, F.trim(F.col("gene_symbol")), out_col="tgt")
     dist = (F.col("gene_start").cast("long") + 1 - F.col("__pos"))
     typed = d.select(F.col("rsid").alias("src"), F.col("tgt"),
                      F.lit("closest_gene").alias("label"),
                      F.col("chromosome").alias("chr"),
                      F.col("__pos").alias("pos"), dist.alias("distance"))
-    props: list[Prop] = []
-    if write_properties:
-        props = [
-            Prop("chr", F.col("chromosome"), "str"),
-            Prop("pos", F.col("__pos"), "int"),
-            Prop("distance", dist, "int"),
-        ] + provenance_props(*REFSEQ_SOURCE, write_properties, add_provenance)
+    props = [
+        Prop("chr", F.col("chromosome"), "str"),
+        Prop("pos", F.col("__pos"), "int"),
+        Prop("distance", dist, "int"),
+    ] + provenance_props(*REFSEQ_SOURCE)
     atoms = atoms_df(d, edge_def_out("closest_gene", registry,
                                      F.col("rsid"), F.col("tgt")), props)
     return typed, atoms
@@ -266,9 +244,7 @@ TOPLD_COLS = {"snp1": 0, "snp2": 1, "r2": 4, "dprime": 5, "corr": 6}
 def topld_edges(lines: DataFrame, pos_rsid_dim: DataFrame, chr: str,
                 ancestry: str, registry,
                 start: int | None = None, end: int | None = None,
-                cutoff: float = 0.5,
-                write_properties: bool = True, add_provenance: bool = True,
-                ) -> tuple[DataFrame, DataFrame]:
+                cutoff: float = 0.5) -> tuple[DataFrame, DataFrame]:
     """in_ld_with edges (topld_adapter.py:35-70): both SNP positions must
     resolve to rsids via the '{chr}_{pos}' dimension (J6 double join);
     signed r2 from the corr column; |r2| < cutoff dropped.
@@ -285,24 +261,19 @@ def topld_edges(lines: DataFrame, pos_rsid_dim: DataFrame, chr: str,
                  & genomic_window(F.lit(chr), F.col("_p2"), F.col("_p2"), chr, start, end))
     k1 = F.concat_ws("_", F.lit(chr), F.col("_p1").cast("string"))
     k2 = F.concat_ws("_", F.lit(chr), F.col("_p2").cast("string"))
-    m1 = pos_rsid_dim.select(F.col("key").alias("_k1"), F.col("value").alias("src"))
-    m2 = pos_rsid_dim.select(F.col("key").alias("_k2"), F.col("value").alias("tgt"))
-    d = (d.withColumn("_key1", k1).withColumn("_key2", k2)
-         .join(F.broadcast(m1), F.col("_key1") == F.col("_k1"))
-         .join(F.broadcast(m2), F.col("_key2") == F.col("_k2")))
+    d = lookup_join(d, pos_rsid_dim, k1, out_col="src")
+    d = lookup_join(d, pos_rsid_dim, k2, out_col="tgt")
     r2 = to_float_col(F.concat(F.col("corr"), F.col("r2")))
     d = d.withColumn("_r2", r2).filter(F.abs(F.col("_r2")) >= cutoff)
     dprime = F.col("dprime").cast("double")
     typed = d.select("src", "tgt", F.lit("in_ld_with").alias("label"),
                      F.col("_r2").alias("r2"), dprime.alias("d_prime"),
                      F.lit(ancestry).alias("ancestry"))
-    props: list[Prop] = []
-    if write_properties:
-        props = [
-            Prop("r2", F.col("_r2"), "float"),
-            Prop("d_prime", dprime, "float"),
-            Prop("ancestry", F.lit(ancestry), "str"),
-        ] + provenance_props(*TOPLD_SOURCE, write_properties, add_provenance)
+    props = [
+        Prop("r2", F.col("_r2"), "float"),
+        Prop("d_prime", dprime, "float"),
+        Prop("ancestry", F.lit(ancestry), "str"),
+    ] + provenance_props(*TOPLD_SOURCE)
     atoms = atoms_df(d, edge_def_out("in_ld_with", registry,
                                      F.col("src"), F.col("tgt")), props)
     return typed, atoms
@@ -314,11 +285,8 @@ def topld_edges(lines: DataFrame, pos_rsid_dim: DataFrame, chr: str,
 
 
 def gtex_eqtl_edges(lines: DataFrame, tissue_map: DataFrame, registry,
-                    tissue_col: str = "tissue",
                     chr: str | None = None, start: int | None = None,
-                    end: int | None = None,
-                    write_properties: bool = True, add_provenance: bool = True,
-                    ) -> tuple[DataFrame, DataFrame]:
+                    end: int | None = None) -> tuple[DataFrame, DataFrame]:
     """gtex_variant_gene edges (gtex_eqtl_adapter.py:57-95): variant_id
     'chr_pos_ref_alt_b38' parsed for the window; rs_id column is the
     source; maf/slope/p/q as clamped floats; tissue (from filename, S9)
@@ -336,8 +304,7 @@ def gtex_eqtl_edges(lines: DataFrame, tissue_map: DataFrame, registry,
          .filter(F.col("_asm") == "b38"))
     d = d.filter(genomic_window(F.col("_vchr"), F.col("_vpos"), F.col("_vpos"),
                                 chr, start, end))
-    m = tissue_map.select(F.col("key").alias("_k"), F.col("value").alias("_ctx"))
-    d = d.join(F.broadcast(m), F.col(tissue_col) == m["_k"])
+    d = lookup_join(d, tissue_map, F.col("tissue"), out_col="_ctx")
     tgt = F.split(F.col("gene_id"), r"\.").getItem(0)
     # projected once: each rendered float reads its value several times
     d = d.withColumns({"_tgt": tgt,
@@ -351,15 +318,13 @@ def gtex_eqtl_edges(lines: DataFrame, tissue_map: DataFrame, registry,
                      maf.alias("maf"), slope.alias("slope"),
                      pv.alias("p_value"), qv.alias("q_value"),
                      F.col("_ctx").alias("biological_context"))
-    props: list[Prop] = []
-    if write_properties:
-        props = [
-            Prop("maf", maf, "float"),
-            Prop("slope", slope, "float"),
-            Prop("p_value", pv, "float"),
-            Prop("q_value", qv, "float"),
-            Prop("biological_context", F.col("_ctx"), "str"),
-        ] + provenance_props(*GTEX_SOURCE, write_properties, add_provenance)
+    props = [
+        Prop("maf", maf, "float"),
+        Prop("slope", slope, "float"),
+        Prop("p_value", pv, "float"),
+        Prop("q_value", qv, "float"),
+        Prop("biological_context", F.col("_ctx"), "str"),
+    ] + provenance_props(*GTEX_SOURCE)
     atoms = atoms_df(d, edge_def_out("gtex_variant_gene", registry,
                                      F.col("rs_id"), F.col("_tgt")), props)
     return typed, atoms

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from biocypher_metta_spark.adapters import provenance_props
+from biocypher_metta_spark.dims import lookup_join
 from biocypher_metta_spark.functions.genomic import genomic_window
 from biocypher_metta_spark.serializer import Prop, atoms_df, node_def_out, edge_def_out
 from biocypher_metta_spark.sources.gtf import strip_version
@@ -100,9 +101,7 @@ def gene_alias_dim(df: DataFrame) -> DataFrame:
 
 def gene_nodes(gtf: DataFrame, alias_df: DataFrame | None = None,
                chr: str | None = None, start: int | None = None,
-               end: int | None = None,
-               write_properties: bool = True, add_provenance: bool = True,
-               ) -> tuple[DataFrame, DataFrame]:
+               end: int | None = None) -> tuple[DataFrame, DataFrame]:
     """(typed nodes DF, atoms DF). gtf = parse_gtf(...) output with
     GENE_KEYS attribute columns."""
     g = gtf.filter(F.col("type") == "gene").filter(F.col("gene_id").isNotNull())
@@ -112,23 +111,14 @@ def gene_nodes(gtf: DataFrame, alias_df: DataFrame | None = None,
     g = g.withColumn("_id", strip_version(F.col("gene_id"))).withColumn("_base", base)
     g = g.filter(genomic_window(F.col("chr"), F.col("start"), F.col("end"),
                                 chr, start, end))
-    if write_properties:
-        # reference: KeyError on gene_type/gene_name -> row skipped (:113-117)
-        g = g.filter(F.col("gene_type").isNotNull() & F.col("gene_name").isNotNull())
+    # reference: KeyError on gene_type/gene_name -> row skipped (:113-117)
+    g = g.filter(F.col("gene_type").isNotNull() & F.col("gene_name").isNotNull())
     if alias_df is not None:
-        a1 = alias_df.select(F.col("alias_key").alias("_k1"),
-                             F.col("synonyms").alias("_syn1"))
-        a2 = alias_df.select(F.col("alias_key").alias("_k2"),
-                             F.col("synonyms").alias("_syn2"))
-        g = (
-            g.join(F.broadcast(a1), g["_base"] == a1["_k1"], "left")
-            .join(F.broadcast(a2), F.col("hgnc_id") == a2["_k2"], "left")
-            .withColumn(
-                "synonyms",
-                # fallback only when the ensembl lookup missed (:96-100)
-                F.coalesce(F.col("_syn1"), F.col("_syn2")),
-            )
-        )
+        for on, out in ((F.col("_base"), "_syn1"), (F.col("hgnc_id"), "_syn2")):
+            g = lookup_join(g, alias_df, on, key_col="alias_key", val_col="synonyms",
+                            out_col=out, how="left")
+        # fallback only when the ensembl lookup missed (:96-100)
+        g = g.withColumn("synonyms", F.coalesce(F.col("_syn1"), F.col("_syn2")))
     else:
         g = g.withColumn("synonyms", F.lit(None).cast("array<string>"))
 
@@ -136,16 +126,14 @@ def gene_nodes(gtf: DataFrame, alias_df: DataFrame | None = None,
         F.col("_id").alias("id"), F.lit("gene").alias("label"),
         "chr", "start", "end", "gene_type", "gene_name", "synonyms",
     )
-    props: list[Prop] = []
-    if write_properties:
-        props = [
-            Prop("gene_type", F.col("gene_type"), "str"),
-            Prop("chr", F.col("chr"), "str"),
-            Prop("start", F.col("start"), "int"),
-            Prop("end", F.col("end"), "int"),
-            Prop("gene_name", F.col("gene_name"), "str"),
-            Prop("synonyms", F.col("synonyms"), "str_list"),
-        ] + provenance_props(SOURCE, SOURCE_URL, write_properties, add_provenance)
+    props = [
+        Prop("gene_type", F.col("gene_type"), "str"),
+        Prop("chr", F.col("chr"), "str"),
+        Prop("start", F.col("start"), "int"),
+        Prop("end", F.col("end"), "int"),
+        Prop("gene_name", F.col("gene_name"), "str"),
+        Prop("synonyms", F.col("synonyms"), "str_list"),
+    ] + provenance_props(SOURCE, SOURCE_URL)
     atoms = atoms_df(g, node_def_out("gene", F.col("_id")), props)
     return typed, atoms
 
@@ -157,34 +145,29 @@ def gene_nodes(gtf: DataFrame, alias_df: DataFrame | None = None,
 
 def transcript_nodes(gtf: DataFrame,
                      chr: str | None = None, start: int | None = None,
-                     end: int | None = None,
-                     write_properties: bool = True, add_provenance: bool = True,
-                     ) -> tuple[DataFrame, DataFrame]:
+                     end: int | None = None) -> tuple[DataFrame, DataFrame]:
     t = gtf.filter(F.col("type") == "transcript").filter(F.col("transcript_id").isNotNull())
     t = t.filter(F.col("start").isNotNull() & F.col("end").isNotNull())
     t = t.withColumn("_id", strip_version(F.col("transcript_id")))
     t = t.filter(genomic_window(F.col("chr"), F.col("start"), F.col("end"),
                                 chr, start, end))
-    if write_properties:
-        t = t.filter(F.col("transcript_name").isNotNull()
-                     & F.col("transcript_type").isNotNull()
-                     & F.col("gene_name").isNotNull())
+    t = t.filter(F.col("transcript_name").isNotNull()
+                 & F.col("transcript_type").isNotNull()
+                 & F.col("gene_name").isNotNull())
     typed = t.select(
         F.col("_id").alias("id"), F.lit("transcript").alias("label"),
         "chr", "start", "end", "transcript_id", "transcript_name",
         "transcript_type", "gene_name",
     )
-    props: list[Prop] = []
-    if write_properties:
-        props = [
-            Prop("transcript_id", F.col("transcript_id"), "str"),
-            Prop("transcript_name", F.col("transcript_name"), "str"),
-            Prop("transcript_type", F.col("transcript_type"), "str"),
-            Prop("chr", F.col("chr"), "str"),
-            Prop("start", F.col("start"), "int"),
-            Prop("end", F.col("end"), "int"),
-            Prop("gene_name", F.col("gene_name"), "str"),
-        ] + provenance_props(SOURCE, SOURCE_URL, write_properties, add_provenance)
+    props = [
+        Prop("transcript_id", F.col("transcript_id"), "str"),
+        Prop("transcript_name", F.col("transcript_name"), "str"),
+        Prop("transcript_type", F.col("transcript_type"), "str"),
+        Prop("chr", F.col("chr"), "str"),
+        Prop("start", F.col("start"), "int"),
+        Prop("end", F.col("end"), "int"),
+        Prop("gene_name", F.col("gene_name"), "str"),
+    ] + provenance_props(SOURCE, SOURCE_URL)
     atoms = atoms_df(t, node_def_out("transcript", F.col("_id")), props)
     return typed, atoms
 
@@ -196,7 +179,6 @@ def transcript_nodes(gtf: DataFrame,
 
 
 def transcribed_edges(gtf: DataFrame, registry, direction: str = "to",
-                      write_properties: bool = True, add_provenance: bool = True,
                       ) -> tuple[DataFrame, DataFrame]:
     t = gtf.filter(F.col("type") == "transcript").filter(
         F.col("transcript_id").isNotNull() & F.col("gene_id").isNotNull()
@@ -209,7 +191,7 @@ def transcribed_edges(gtf: DataFrame, registry, direction: str = "to",
         label, src, tgt = "transcribed_from", tx_key, gene_key
     e = t.select(src.alias("src"), tgt.alias("tgt"))
     typed = e.select(F.col("src"), F.col("tgt"), F.lit(label).alias("label"))
-    props = provenance_props(SOURCE, SOURCE_URL, write_properties, add_provenance)
+    props = provenance_props(SOURCE, SOURCE_URL)
     atoms = atoms_df(e, edge_def_out(label, registry, F.col("src"), F.col("tgt")), props)
     return typed, atoms
 
@@ -221,9 +203,7 @@ def transcribed_edges(gtf: DataFrame, registry, direction: str = "to",
 
 def exon_nodes(gtf: DataFrame,
                chr: str | None = None, start: int | None = None,
-               end: int | None = None,
-               write_properties: bool = True, add_provenance: bool = True,
-               ) -> tuple[DataFrame, DataFrame]:
+               end: int | None = None) -> tuple[DataFrame, DataFrame]:
     x = gtf.filter(F.col("type") == "exon").filter(
         F.col("exon_id").isNotNull() & F.col("gene_id").isNotNull()
         & F.col("transcript_id").isNotNull()
@@ -241,16 +221,14 @@ def exon_nodes(gtf: DataFrame,
         gene_plain.alias("gene_id"), tx_plain.alias("transcript_id"),
         exon_number.alias("exon_number"),
     )
-    props: list[Prop] = []
-    if write_properties:
-        props = [
-            Prop("gene_id", gene_plain, "str"),
-            Prop("transcript_id", tx_plain, "str"),
-            Prop("chr", F.col("chr"), "str"),
-            Prop("start", F.col("start"), "int"),
-            Prop("end", F.col("end"), "int"),
-            Prop("exon_number", exon_number, "int"),
-            Prop("exon_id", F.col("_id"), "str"),
-        ] + provenance_props(SOURCE, SOURCE_URL, write_properties, add_provenance)
+    props = [
+        Prop("gene_id", gene_plain, "str"),
+        Prop("transcript_id", tx_plain, "str"),
+        Prop("chr", F.col("chr"), "str"),
+        Prop("start", F.col("start"), "int"),
+        Prop("end", F.col("end"), "int"),
+        Prop("exon_number", exon_number, "int"),
+        Prop("exon_id", F.col("_id"), "str"),
+    ] + provenance_props(SOURCE, SOURCE_URL)
     atoms = atoms_df(x, node_def_out("exon", F.col("_id")), props)
     return typed, atoms

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from biocypher_metta_spark.adapters import provenance_props
+from biocypher_metta_spark.dims import lookup_join
 from biocypher_metta_spark.serializer import Prop, atoms_df, edge_def_out
 from biocypher_metta_spark.sources.tabular import split_cols
 
@@ -19,28 +20,25 @@ TFLINK_SOURCE = ("TFLink", "tflink.net")
 COXPRESDB_SOURCE = ("CoXPresdb", "https://coxpresdb.jp/")
 
 
+def _both_ends(d: DataFrame, id_map: DataFrame, src_key, tgt_key) -> DataFrame:
+    """Both endpoints through one id map (J2/J3 double broadcast inner)."""
+    d = lookup_join(d, id_map, src_key, out_col="src")
+    return lookup_join(d, id_map, tgt_key, out_col="tgt")
+
+
 def string_ppi_edges(lines: DataFrame, ens2uniprot: DataFrame, registry,
-                     skip_header: bool = True,
-                     write_properties: bool = True, add_provenance: bool = True,
                      ) -> tuple[DataFrame, DataFrame]:
-    """protein-protein interacts_with: strip the '9606.' taxon prefix,
-    require BOTH endpoints in the ensembl->uniprot dimension (J3 double
-    broadcast inner), score = combined/1000 (float)."""
+    """protein-protein interacts_with: skip the header, strip the '9606.'
+    taxon prefix, require BOTH endpoints in the ensembl->uniprot
+    dimension, score = combined/1000 (float)."""
     d = split_cols(lines, {"p1": 0, "p2": 1, "score": 2}, " ")
-    if skip_header:
-        d = d.filter(F.col("p1") != "protein1")
+    d = d.filter(F.col("p1") != "protein1")
     d = d.select(F.split(F.col("p1"), r"\.").getItem(1).alias("e1"),
                  F.split(F.col("p2"), r"\.").getItem(1).alias("e2"),
                  (F.col("score").cast("double") / 1000).alias("score"))
-    m1 = ens2uniprot.select(F.col("key").alias("_k1"), F.col("value").alias("src"))
-    m2 = ens2uniprot.select(F.col("key").alias("_k2"), F.col("value").alias("tgt"))
-    d = (d.join(F.broadcast(m1), d["e1"] == m1["_k1"])
-         .join(F.broadcast(m2), d["e2"] == m2["_k2"]))
+    d = _both_ends(d, ens2uniprot, F.col("e1"), F.col("e2"))
     typed = d.select("src", "tgt", F.lit("interacts_with").alias("label"), "score")
-    props: list[Prop] = []
-    if write_properties:
-        props = [Prop("score", F.col("score"), "float")]
-        props += provenance_props(*STRING_SOURCE, write_properties, add_provenance)
+    props = [Prop("score", F.col("score"), "float")] + provenance_props(*STRING_SOURCE)
     atoms = atoms_df(d, edge_def_out("interacts_with", registry,
                                      F.col("src"), F.col("tgt")), props)
     return typed, atoms
@@ -51,17 +49,13 @@ TFLINK_COLS = {"tf_entrez": 2, "target_entrez": 3, "detection_method": 6,
 
 
 def tflink_edges(lines: DataFrame, entrez2ensembl: DataFrame, registry,
-                 write_properties: bool = True, add_provenance: bool = True,
                  ) -> tuple[DataFrame, DataFrame]:
     """tf_gene edges (J2 double inner): entrez->ensembl on both ends;
     the header row drops out naturally because its 'NCBI.GeneID.TF' key
     misses the dimension (the reference never skips it either,
     tflink_adapter.py:38-42)."""
     d = split_cols(lines, TFLINK_COLS, "\t")
-    m1 = entrez2ensembl.select(F.col("key").alias("_k1"), F.col("value").alias("src"))
-    m2 = entrez2ensembl.select(F.col("key").alias("_k2"), F.col("value").alias("tgt"))
-    d = (d.join(F.broadcast(m1), d["tf_entrez"] == m1["_k1"])
-         .join(F.broadcast(m2), d["target_entrez"] == m2["_k2"]))
+    d = _both_ends(d, entrez2ensembl, F.col("tf_entrez"), F.col("target_entrez"))
     evidence = F.transform(F.split(F.col("pubmed"), ";"),
                            lambda p: F.concat(F.lit("pubmed:"), p))
     databases = F.split(F.col("databases"), ";")
@@ -72,39 +66,29 @@ def tflink_edges(lines: DataFrame, entrez2ensembl: DataFrame, registry,
                      evidence.alias("evidence"), databases.alias("databases"),
                      ev_type.alias("evidence_type"),
                      F.col("detection_method"))
-    props: list[Prop] = []
-    if write_properties:
-        props = [
-            Prop("evidence", evidence, "str_list"),
-            Prop("databases", databases, "str_list"),
-            Prop("evidence_type", ev_type, "str"),
-            Prop("detection_method", F.col("detection_method"), "str"),
-        ] + provenance_props(*TFLINK_SOURCE, write_properties, add_provenance)
+    props = [
+        Prop("evidence", evidence, "str_list"),
+        Prop("databases", databases, "str_list"),
+        Prop("evidence_type", ev_type, "str"),
+        Prop("detection_method", F.col("detection_method"), "str"),
+    ] + provenance_props(*TFLINK_SOURCE)
     atoms = atoms_df(d, edge_def_out("tf_gene", registry,
                                      F.col("src"), F.col("tgt")), props)
     return typed, atoms
 
 
 def coxpresdb_edges(lines: DataFrame, entrez2ensembl: DataFrame, registry,
-                    entrez_col: str = "file_entrez",
-                    write_properties: bool = True, add_provenance: bool = True,
                     ) -> tuple[DataFrame, DataFrame]:
     """coexpressed_with (coxpresdb_adapter.py:38-57): the directory fan-in
-    S9 pattern — `lines` must carry the per-file entrez id (from
-    input_file_name or the span kind); both endpoints resolve via the
-    dimension (inner)."""
+    S9 pattern — `lines` carries the per-file entrez id as `file_entrez`
+    (the span kind's key); both endpoints resolve via the dimension
+    (inner)."""
     d = split_cols(lines, {"co_entrez": 0, "score": 1}, r"\s+")
-    m1 = entrez2ensembl.select(F.col("key").alias("_k1"), F.col("value").alias("src"))
-    m2 = entrez2ensembl.select(F.col("key").alias("_k2"), F.col("value").alias("tgt"))
-    d = (d.join(F.broadcast(m1), F.col(entrez_col) == m1["_k1"])
-         .join(F.broadcast(m2), F.col("co_entrez") == m2["_k2"]))
+    d = _both_ends(d, entrez2ensembl, F.col("file_entrez"), F.col("co_entrez"))
     score = F.col("score").cast("double")
     typed = d.select("src", "tgt", F.lit("coexpressed_with").alias("label"),
                      score.alias("score"))
-    props: list[Prop] = []
-    if write_properties:
-        props = [Prop("score", score, "float")]
-        props += provenance_props(*COXPRESDB_SOURCE, write_properties, add_provenance)
+    props = [Prop("score", score, "float")] + provenance_props(*COXPRESDB_SOURCE)
     atoms = atoms_df(d, edge_def_out("coexpressed_with", registry,
                                      F.col("src"), F.col("tgt")), props)
     return typed, atoms

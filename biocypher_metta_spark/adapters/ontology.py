@@ -81,9 +81,7 @@ def _collect_prop(triples: DataFrame, predicate: str, name: str) -> DataFrame:
 
 
 def ontology_nodes(triples: DataFrame, label: str, ontology: str = "go",
-                   dry_run: bool = False,
-                   write_properties: bool = True, add_provenance: bool = True,
-                   ) -> tuple[DataFrame, DataFrame]:
+                   dry_run: bool = False) -> tuple[DataFrame, DataFrame]:
     """Ontology term nodes (ontologies_adapter.py:55-86): one node per
     non-blank URI subject; term_name/description joined, synonyms =
     related + exact collections. For GO, the `subontology` property is
@@ -119,23 +117,19 @@ def ontology_nodes(triples: DataFrame, label: str, ontology: str = "go",
                      description.alias("description"),
                      synonyms.alias("synonyms"), *sub_cols)
     src, url = SOURCES.get(ontology, ("Ontology", ""))
-    props: list[Prop] = []
-    if write_properties:
-        props = [
-            Prop("term_name", term_name, "str"),
-            Prop("description", description, "str"),
-            Prop("synonyms", synonyms, "str_list"),
-        ] + provenance_props(src, url, write_properties, add_provenance)
-        if ontology == "go":
-            props.append(Prop("subontology",
-                              F.element_at(F.col("namespaces"), -1), "str"))
+    props = [
+        Prop("term_name", term_name, "str"),
+        Prop("description", description, "str"),
+        Prop("synonyms", synonyms, "str_list"),
+    ] + provenance_props(src, url)
+    if ontology == "go":
+        props.append(Prop("subontology", subontology, "str"))
     atoms = atoms_df(n, node_def_out(label, F.col("_id")), props)
     return typed, atoms
 
 
 def ontology_edges(triples: DataFrame, label: str, registry,
                    ontology: str = "go", dry_run: bool = False,
-                   write_properties: bool = True, add_provenance: bool = True,
                    ) -> tuple[DataFrame, DataFrame]:
     """subclass/dbxref edges with restriction-block resolution
     (ontologies_adapter.py:88-147, J12): blank-object subClassOf edges are
@@ -188,9 +182,6 @@ def ontology_edges(triples: DataFrame, label: str, registry,
     typed = e.select(F.col("_src").alias("src"), F.col("_tgt").alias("tgt"),
                      F.lit(label).alias("label"), F.col("_rel").alias("rel_type"))
     src, url = SOURCES.get(ontology, ("Ontology", ""))
-    props: list[Prop] = []
-    if write_properties:
-        props = [Prop("rel_type", F.col("_rel"), "str")]
-        props += provenance_props(src, url, write_properties, add_provenance)
+    props = [Prop("rel_type", F.col("_rel"), "str")] + provenance_props(src, url)
     atoms = atoms_df(e, edge_def_out(label, registry, F.col("_src"), F.col("_tgt")), props)
     return typed, atoms

@@ -22,7 +22,6 @@ SOURCE = ("REACTOME", "https://reactome.org")
 
 
 def pathway_nodes(lines: DataFrame, pubmed_lines: DataFrame,
-                  write_properties: bool = True, add_provenance: bool = True,
                   ) -> tuple[DataFrame, DataFrame]:
     """Homo sapiens pathways. Quirk parity (reference bugs preserved):
     * the pubmed map stores the PATHWAY id as its own value
@@ -39,38 +38,30 @@ def pathway_nodes(lines: DataFrame, pubmed_lines: DataFrame,
     typed = p.select(F.col("id"), F.lit("pathway").alias("label"),
                      F.col("name").alias("pathway_name"),
                      F.col("pm_id").alias("pubmed_id"))
-    props: list[Prop] = []
-    if write_properties:
-        evidence_raw = F.when(
-            F.col("pm_id").isNotNull(),
-            F.concat(F.lit("('https://pubmed.ncbi.nlm.nih.gov/"),
-                     F.col("pm_id"), F.lit("',)")),
-        )
-        props = [
-            Prop("pathway_name", F.col("name"), "str"),
-            Prop("evidence", evidence_raw, "raw"),
-        ] + provenance_props(*SOURCE, write_properties, add_provenance)
+    evidence_raw = F.when(
+        F.col("pm_id").isNotNull(),
+        F.concat(F.lit("('https://pubmed.ncbi.nlm.nih.gov/"),
+                 F.col("pm_id"), F.lit("',)")),
+    )
+    props = [
+        Prop("pathway_name", F.col("name"), "str"),
+        Prop("evidence", evidence_raw, "raw"),
+    ] + provenance_props(*SOURCE)
     atoms = atoms_df(p, node_def_out("pathway", F.col("id")), props)
     return typed, atoms
 
 
-def genes_pathways_edges(lines: DataFrame, registry,
-                         write_properties: bool = True,
-                         add_provenance: bool = True,
-                         ) -> tuple[DataFrame, DataFrame]:
+def genes_pathways_edges(lines: DataFrame, registry) -> tuple[DataFrame, DataFrame]:
     """gene -> pathway edges, R-HSA only, ENSG version-stripped
     (reactome_adapter.py:54-62)."""
     d = split_cols(lines, {"g": 0, "pathway": 1}, "\t")
     d = d.filter(F.col("pathway").startswith("R-HSA"))
     d = d.select(F.split(F.col("g"), r"\.").getItem(0).alias("src"),
                  F.col("pathway").alias("tgt"))
-    return _reactome_edges(d, "genes_pathways", registry,
-                           write_properties, add_provenance)
+    return _reactome_edges(d, "genes_pathways", registry)
 
 
 def pathway_rel_edges(lines: DataFrame, registry, label: str,
-                      write_properties: bool = True,
-                      add_provenance: bool = True,
                       ) -> tuple[DataFrame, DataFrame]:
     """parent_pathway_of / child_pathway_of from the relation file,
     R-HSA parents only (reactome_adapter.py:63-76)."""
@@ -82,12 +73,11 @@ def pathway_rel_edges(lines: DataFrame, registry, label: str,
         d = d.select(F.col("child").alias("src"), F.col("parent").alias("tgt"))
     else:
         raise ValueError(label)
-    return _reactome_edges(d, label, registry, write_properties, add_provenance)
+    return _reactome_edges(d, label, registry)
 
 
-def _reactome_edges(d: DataFrame, label: str, registry,
-                    write_properties: bool, add_provenance: bool):
+def _reactome_edges(d: DataFrame, label: str, registry):
     typed = d.select("src", "tgt", F.lit(label).alias("label"))
-    props = provenance_props(*SOURCE, write_properties, add_provenance)
+    props = provenance_props(*SOURCE)
     atoms = atoms_df(d, edge_def_out(label, registry, F.col("src"), F.col("tgt")), props)
     return typed, atoms

@@ -2,6 +2,10 @@
 TADMap domains, dbSUPER super-enhancers (liftover path), PEREGRINE
 enhancers (multi-file join).
 
+The dbSUPER node and edge functions both read `dbsuper_lifted`, the
+scan lifted to hg38 and windowed once; the pipeline caches it per
+window. Symbol and tissue maps join through `dims.lookup_join`.
+
 Reference: epd_adapter.py:34-76, enhancer_atlas_adapter.py:51-105,
 tadmap_adapter.py:43-79, dbsuper_adapter.py:39-94,
 peregrine_adapter.py:59-146.
@@ -13,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from biocypher_metta_spark.adapters import provenance_props
+from biocypher_metta_spark.dims import lookup_join
 from biocypher_metta_spark.functions.genomic import genomic_window
 from biocypher_metta_spark.functions.ids import build_regulatory_region_id
 from biocypher_metta_spark.functions.liftover import lift
@@ -38,9 +43,8 @@ PEREGRINE_SOURCE = ("PEREGRINE", "https://www.peregrineproj.org/")
 EPD_COLS = {"chr": 0, "coord_start": 1, "coord_end": 2, "gene_id": 3}
 
 
-def _epd_base(lines: DataFrame, delimiter: str,
-              chr, start, end) -> DataFrame:
-    d = split_cols(lines, EPD_COLS, delimiter)
+def _epd_base(lines: DataFrame, chr, start, end) -> DataFrame:
+    d = split_cols(lines, EPD_COLS, " ")
     s = F.col("coord_start").try_cast("long") + 1
     e = F.col("coord_end").try_cast("long") + 1
     d = (d.withColumn("_s", s).withColumn("_e", e)
@@ -51,43 +55,33 @@ def _epd_base(lines: DataFrame, delimiter: str,
 
 
 def epd_promoter_nodes(lines: DataFrame, label: str = "promoter",
-                       delimiter: str = " ",
                        chr: str | None = None, start: int | None = None,
-                       end: int | None = None,
-                       write_properties: bool = True, add_provenance: bool = True,
-                       ) -> tuple[DataFrame, DataFrame]:
-    d = _epd_base(lines, delimiter, chr, start, end)
+                       end: int | None = None) -> tuple[DataFrame, DataFrame]:
+    d = _epd_base(lines, chr, start, end)
     typed = d.select(F.col("_id").alias("id"), F.lit(label).alias("label"),
                      "chr", F.col("_s").alias("start"), F.col("_e").alias("end"))
-    props: list[Prop] = []
-    if write_properties:
-        props = [
-            Prop("chr", F.col("chr"), "str"),
-            Prop("start", F.col("_s"), "int"),
-            Prop("end", F.col("_e"), "int"),
-        ] + provenance_props(*EPD_SOURCE, write_properties, add_provenance)
+    props = [
+        Prop("chr", F.col("chr"), "str"),
+        Prop("start", F.col("_s"), "int"),
+        Prop("end", F.col("_e"), "int"),
+    ] + provenance_props(*EPD_SOURCE)
     atoms = atoms_df(d, node_def_out(label, F.col("_id")), props)
     return typed, atoms
 
 
 def epd_promoter_gene_edges(lines: DataFrame, hgnc2ensembl: DataFrame,
                             registry, label: str = "promoter_gene",
-                            delimiter: str = " ",
                             chr: str | None = None, start: int | None = None,
-                            end: int | None = None,
-                            write_properties: bool = True,
-                            add_provenance: bool = True,
-                            ) -> tuple[DataFrame, DataFrame]:
+                            end: int | None = None) -> tuple[DataFrame, DataFrame]:
     """promoter -> gene: symbol from the BED name field ('NOC2L_1' ->
     'NOC2L'), resolved through the hgnc symbol dimension (inner = skip on
     miss, epd_adapter.py:63-66)."""
-    d = _epd_base(lines, delimiter, chr, start, end)
+    d = _epd_base(lines, chr, start, end)
     sym = F.split(F.col("gene_id"), "_").getItem(0)
-    m = hgnc2ensembl.select(F.col("key").alias("_k"), F.col("value").alias("tgt"))
-    d = d.withColumn("_sym", sym).join(F.broadcast(m), F.col("_sym") == m["_k"])
+    d = lookup_join(d, hgnc2ensembl, sym, out_col="tgt")
     typed = d.select(F.col("_id").alias("src"), F.col("tgt"),
                      F.lit(label).alias("label"))
-    props = provenance_props(*EPD_SOURCE, write_properties, add_provenance)
+    props = provenance_props(*EPD_SOURCE)
     atoms = atoms_df(d, edge_def_out(label, registry, F.col("_id"), F.col("tgt")), props)
     return typed, atoms
 
@@ -99,10 +93,7 @@ def epd_promoter_gene_edges(lines: DataFrame, hgnc2ensembl: DataFrame,
 
 def enhancer_atlas_nodes(lines: DataFrame, label: str = "enhancer",
                          chr: str | None = None, start: int | None = None,
-                         end: int | None = None,
-                         write_properties: bool = True,
-                         add_provenance: bool = True,
-                         ) -> tuple[DataFrame, DataFrame]:
+                         end: int | None = None) -> tuple[DataFrame, DataFrame]:
     d = split_cols(lines, {"chr": 0, "coord_start": 1, "coord_end": 2}, "\t")
     s = F.col("coord_start").try_cast("long") + 1
     e = F.col("coord_end").try_cast("long") + 1
@@ -112,25 +103,19 @@ def enhancer_atlas_nodes(lines: DataFrame, label: str = "enhancer",
     d = d.filter(genomic_window(F.col("chr"), F.col("_s"), F.col("_e"), chr, start, end))
     typed = d.select(F.col("_id").alias("id"), F.lit(label).alias("label"),
                      "chr", F.col("_s").alias("start"), F.col("_e").alias("end"))
-    props: list[Prop] = []
-    if write_properties:
-        props = [
-            Prop("chr", F.col("chr"), "str"),
-            Prop("start", F.col("_s"), "int"),
-            Prop("end", F.col("_e"), "int"),
-        ] + provenance_props(*EA_SOURCE, write_properties, add_provenance)
+    props = [
+        Prop("chr", F.col("chr"), "str"),
+        Prop("start", F.col("_s"), "int"),
+        Prop("end", F.col("_e"), "int"),
+    ] + provenance_props(*EA_SOURCE)
     atoms = atoms_df(d, node_def_out(label, F.col("_id")), props)
     return typed, atoms
 
 
 def enhancer_atlas_edges(lines: DataFrame, tissue_map: DataFrame, registry,
                          label: str = "enhancer_gene",
-                         tissue_col: str = "tissue",
                          chr: str | None = None, start: int | None = None,
-                         end: int | None = None,
-                         write_properties: bool = True,
-                         add_provenance: bool = True,
-                         ) -> tuple[DataFrame, DataFrame]:
+                         end: int | None = None) -> tuple[DataFrame, DataFrame]:
     """enhancer -> gene from the per-tissue *_EP.txt files (S9 fan-in:
     `lines` carries the tissue key). Compound field parse
     'chr1:874840-876520_ENSG...$SYM$...' (enhancer_atlas_adapter.py:51-57),
@@ -145,20 +130,17 @@ def enhancer_atlas_edges(lines: DataFrame, tissue_map: DataFrame, registry,
     d = (d.withColumn("_chr", chrom).withColumn("_s", s).withColumn("_e", e)
          .withColumn("_gene", gene)
          .filter(F.col("_s").isNotNull() & F.col("_e").isNotNull()))
-    m = tissue_map.select(F.col("key").alias("_k"), F.col("value").alias("_ctx"))
-    d = d.join(F.broadcast(m), F.col(tissue_col) == m["_k"])
+    d = lookup_join(d, tissue_map, F.col("tissue"), out_col="_ctx")
     d = d.filter(genomic_window(F.col("_chr"), F.col("_s"), F.col("_e"), chr, start, end))
     d = d.withColumn("_id", build_regulatory_region_id(F.col("_chr"), F.col("_s"), F.col("_e")))
     score = F.col("score").cast("double")
     typed = d.select(F.col("_id").alias("src"), F.col("_gene").alias("tgt"),
                      F.lit(label).alias("label"), F.col("_ctx").alias("biological_context"),
                      score.alias("score"))
-    props: list[Prop] = []
-    if write_properties:
-        props = [
-            Prop("biological_context", F.col("_ctx"), "str"),
-            Prop("score", score, "float"),
-        ] + provenance_props(*EA_SOURCE, write_properties, add_provenance)
+    props = [
+        Prop("biological_context", F.col("_ctx"), "str"),
+        Prop("score", score, "float"),
+    ] + provenance_props(*EA_SOURCE)
     atoms = atoms_df(d, edge_def_out(label, registry, F.col("_id"), F.col("_gene")), props)
     return typed, atoms
 
@@ -168,10 +150,8 @@ def enhancer_atlas_edges(lines: DataFrame, tissue_map: DataFrame, registry,
 # --------------------------------------------------------------------------
 
 
-def tadmap_nodes(lines: DataFrame, skip_header: bool = True,
-                 chr: str | None = None, start: int | None = None,
-                 end: int | None = None,
-                 write_properties: bool = True, add_provenance: bool = True,
+def tadmap_nodes(lines: DataFrame, chr: str | None = None,
+                 start: int | None = None, end: int | None = None,
                  ) -> tuple[DataFrame, DataFrame]:
     """TAD nodes (tadmap_adapter.py:43-79): 'id|chr|start|end' location
     key, ';'-joined gene list -> Ensembl ids (index-error entries skipped).
@@ -200,14 +180,12 @@ def tadmap_nodes(lines: DataFrame, skip_header: bool = True,
     typed = d.select(F.col("_id").alias("id"), F.lit("tad").alias("label"),
                      F.col("_chr").alias("chr"), F.col("_s").alias("start"),
                      F.col("_e").alias("end"), F.col("_genes").alias("genes"))
-    props: list[Prop] = []
-    if write_properties:
-        props = [
-            Prop("chr", F.col("_chr"), "str"),
-            Prop("start", F.col("_s"), "int"),
-            Prop("end", F.col("_e"), "int"),
-            Prop("genes", F.col("_genes"), "str_list"),
-        ] + provenance_props(*TAD_SOURCE, write_properties, add_provenance)
+    props = [
+        Prop("chr", F.col("_chr"), "str"),
+        Prop("start", F.col("_s"), "int"),
+        Prop("end", F.col("_e"), "int"),
+        Prop("genes", F.col("_genes"), "str_list"),
+    ] + provenance_props(*TAD_SOURCE)
     atoms = atoms_df(d, node_def_out("tad", F.col("_id")), props)
     return typed, atoms
 
@@ -220,10 +198,12 @@ DBSUPER_COLS = {"chr": 0, "coord_start": 1, "coord_end": 2, "se_id": 3,
                 "gene_id": 4, "cell_name": 5}
 
 
-def _dbsuper_base(lines: DataFrame, blocks: DataFrame, chr, start, end) -> DataFrame:
-    """Shared scan: 0-based hg19 -> +1 -> lifted hg38 through the chain
-    `blocks` (functions/liftover.py); rows whose start or end fails to
-    lift are dropped (dbsuper_adapter.py:46-52)."""
+def dbsuper_lifted(lines: DataFrame, blocks: DataFrame, chr: str | None = None,
+                   start: int | None = None, end: int | None = None) -> DataFrame:
+    """The scan both dbSUPER outputs read: 0-based hg19 -> +1 -> lifted
+    hg38 through the chain `blocks` (functions/liftover.py); rows whose
+    start or end fails to lift are dropped (dbsuper_adapter.py:46-52),
+    then the window applies to the lifted coordinates."""
     d = split_cols(lines, DBSUPER_COLS, "\t")
     d = d.filter(F.col("chr") != "chrom")
     s19 = F.col("coord_start").try_cast("long") + 1
@@ -238,51 +218,35 @@ def _dbsuper_base(lines: DataFrame, blocks: DataFrame, chr, start, end) -> DataF
                                    chr, start, end))
 
 
-def dbsuper_nodes(lines: DataFrame, blocks: DataFrame, label: str = "super_enhancer",
-                  chr: str | None = None, start: int | None = None,
-                  end: int | None = None,
-                  write_properties: bool = True, add_provenance: bool = True,
-                  base: DataFrame | None = None,
+def dbsuper_nodes(lifted: DataFrame, label: str = "super_enhancer",
                   ) -> tuple[DataFrame, DataFrame]:
-    d = base if base is not None else _dbsuper_base(lines, blocks, chr, start, end)
-    typed = d.select(F.col("_id").alias("id"), F.lit(label).alias("label"),
-                     "chr", F.col("_s").alias("start"), F.col("_e").alias("end"),
-                     F.col("se_id"))
-    props: list[Prop] = []
-    if write_properties:
-        props = [
-            Prop("id", F.col("se_id"), "str"),
-            Prop("chr", F.col("chr"), "str"),
-            Prop("start", F.col("_s"), "int"),
-            Prop("end", F.col("_e"), "int"),
-        ] + provenance_props(*DBSUPER_SOURCE, write_properties, add_provenance)
-    atoms = atoms_df(d, node_def_out(label, F.col("_id")), props)
+    """super_enhancer nodes over `dbsuper_lifted` (dbsuper_adapter.py:39-66)."""
+    typed = lifted.select(F.col("_id").alias("id"), F.lit(label).alias("label"),
+                          "chr", F.col("_s").alias("start"), F.col("_e").alias("end"),
+                          F.col("se_id"))
+    props = [
+        Prop("id", F.col("se_id"), "str"),
+        Prop("chr", F.col("chr"), "str"),
+        Prop("start", F.col("_s"), "int"),
+        Prop("end", F.col("_e"), "int"),
+    ] + provenance_props(*DBSUPER_SOURCE)
+    atoms = atoms_df(lifted, node_def_out(label, F.col("_id")), props)
     return typed, atoms
 
 
-def dbsuper_edges(lines: DataFrame, blocks: DataFrame, hgnc2ensembl: DataFrame,
-                  tissue_map: DataFrame, registry,
-                  label: str = "super_enhancer_gene",
-                  chr: str | None = None, start: int | None = None,
-                  end: int | None = None,
-                  write_properties: bool = True, add_provenance: bool = True,
-                  base: DataFrame | None = None,
+def dbsuper_edges(lifted: DataFrame, hgnc2ensembl: DataFrame, tissue_map: DataFrame,
+                  registry, label: str = "super_enhancer_gene",
                   ) -> tuple[DataFrame, DataFrame]:
-    """super_enhancer -> gene (dbsuper_adapter.py:68-94). Note the
-    reference KeyErrors (crashes) on a tissue-map miss at :81 — sample
-    data always hits, so an inner join is behavior-equivalent."""
-    d = base if base is not None else _dbsuper_base(lines, blocks, chr, start, end)
-    g = hgnc2ensembl.select(F.col("key").alias("_g"), F.col("value").alias("tgt"))
-    d = d.join(F.broadcast(g), F.col("gene_id") == g["_g"])
-    m = tissue_map.select(F.col("key").alias("_k"), F.col("value").alias("_ctx"))
-    d = d.join(F.broadcast(m), F.col("cell_name") == m["_k"])
+    """super_enhancer -> gene over `dbsuper_lifted` (dbsuper_adapter.py:68-94).
+    Note the reference KeyErrors (crashes) on a tissue-map miss at :81 —
+    sample data always hits, so an inner join is behavior-equivalent."""
+    d = lookup_join(lifted, hgnc2ensembl, F.col("gene_id"), out_col="tgt")
+    d = lookup_join(d, tissue_map, F.col("cell_name"), out_col="_ctx")
     typed = d.select(F.col("_id").alias("src"), F.col("tgt"),
                      F.lit(label).alias("label"),
                      F.col("_ctx").alias("biological_context"))
-    props: list[Prop] = []
-    if write_properties:
-        props = [Prop("biological_context", F.col("_ctx"), "str")]
-        props += provenance_props(*DBSUPER_SOURCE, write_properties, add_provenance)
+    props = [Prop("biological_context", F.col("_ctx"), "str")] \
+        + provenance_props(*DBSUPER_SOURCE)
     atoms = atoms_df(d, edge_def_out(label, registry, F.col("_id"), F.col("tgt")), props)
     return typed, atoms
 
@@ -294,9 +258,7 @@ def dbsuper_edges(lines: DataFrame, blocks: DataFrame, hgnc2ensembl: DataFrame,
 def peregrine_nodes(enhancer_lines: DataFrame, source_lines: DataFrame,
                     label: str = "enhancer",
                     chr: str | None = None, start: int | None = None,
-                    end: int | None = None,
-                    write_properties: bool = True, add_provenance: bool = True,
-                    ) -> tuple[DataFrame, DataFrame]:
+                    end: int | None = None) -> tuple[DataFrame, DataFrame]:
     """enhancer nodes (peregrine_adapter.py:64-101): enhancers file joined
     with the datasource file on enhancer_id (the reference KeyErrors on a
     missing source => inner join)."""
@@ -320,15 +282,13 @@ def peregrine_nodes(enhancer_lines: DataFrame, source_lines: DataFrame,
     typed = e.select(F.col("_id").alias("id"), F.lit(label).alias("label"),
                      "chr", F.col("_s").alias("start"), F.col("_e").alias("end"),
                      F.col("enh_id"), F.col("data_source"))
-    props: list[Prop] = []
-    if write_properties:
-        props = [
-            Prop("id", F.col("enh_id"), "str"),
-            Prop("chr", F.col("chr"), "str"),
-            Prop("start", F.col("_s"), "int"),
-            Prop("end", F.col("_e"), "int"),
-            Prop("data_source", F.col("data_source"), "str"),
-        ] + provenance_props(*PEREGRINE_SOURCE, write_properties, add_provenance)
+    props = [
+        Prop("id", F.col("enh_id"), "str"),
+        Prop("chr", F.col("chr"), "str"),
+        Prop("start", F.col("_s"), "int"),
+        Prop("end", F.col("_e"), "int"),
+        Prop("data_source", F.col("data_source"), "str"),
+    ] + provenance_props(*PEREGRINE_SOURCE)
     atoms = atoms_df(e, node_def_out(label, F.col("_id")), props)
     return typed, atoms
 
@@ -337,9 +297,7 @@ def peregrine_edges(enhancer_lines: DataFrame, link_lines: DataFrame,
                     hgnc_ensembl_map: DataFrame, tissue_map: DataFrame,
                     registry, label: str = "enhancer_gene",
                     chr: str | None = None, start: int | None = None,
-                    end: int | None = None,
-                    write_properties: bool = True, add_provenance: bool = True,
-                    ) -> tuple[DataFrame, DataFrame]:
+                    end: int | None = None) -> tuple[DataFrame, DataFrame]:
     """enhancer -> gene links (peregrine_adapter.py:103-146): enhancer id
     -> region id (window-filtered), gene 'HUMAN|HGNC=..|..' -> 'HGNC:..'
     -> ensembl (skip on miss), tissue -> ontology (skip on miss; the map
@@ -362,22 +320,17 @@ def peregrine_edges(enhancer_lines: DataFrame, link_lines: DataFrame,
     l = l.filter(F.col("enhancer") != "enhancer")
     l = l.join(F.broadcast(e), l["enhancer"] == e["_eid"])
     hgnc = F.regexp_replace(F.get(F.split(F.col("gene"), r"\|"), 1), "=", ":")
-    l = l.withColumn("_hgnc", hgnc)
-    g = hgnc_ensembl_map.select(F.col("key").alias("_g"), F.col("value").alias("tgt"))
-    l = l.join(F.broadcast(g), F.col("_hgnc") == g["_g"])
-    m = tissue_map.select(F.col("key").alias("_k"), F.col("value").alias("_ctx"))
-    l = l.join(F.broadcast(m), F.col("tissue") == m["_k"])
+    l = lookup_join(l, hgnc_ensembl_map, hgnc, out_col="tgt")
+    l = lookup_join(l, tissue_map, F.col("tissue"), out_col="_ctx")
     score = F.when((F.col("score").isNotNull()) & (F.col("score") != ""),
                    F.col("score"))
     typed = l.select(F.col("_region").alias("src"), F.col("tgt"),
                      F.lit(label).alias("label"),
                      F.col("_ctx").alias("biological_context"),
                      score.alias("score"))
-    props: list[Prop] = []
-    if write_properties:
-        props = [
-            Prop("biological_context", F.col("_ctx"), "str"),
-            Prop("score", score, "str"),
-        ] + provenance_props(*PEREGRINE_SOURCE, write_properties, add_provenance)
+    props = [
+        Prop("biological_context", F.col("_ctx"), "str"),
+        Prop("score", score, "str"),
+    ] + provenance_props(*PEREGRINE_SOURCE)
     atoms = atoms_df(l, edge_def_out(label, registry, F.col("_region"), F.col("tgt")), props)
     return typed, atoms

@@ -20,8 +20,10 @@ from biocypher_metta_spark.serializer import (
     Prop,
     atoms_df,
     node_def_out,
+    num_or_str_fragments,
+    prop_atom,
 )
-from biocypher_metta_spark.sources.tabular import split_cols
+from biocypher_metta_spark.sources.tabular import quoted_csv_cols, split_cols
 from biocypher_metta_spark.sources.vcf import info_multi, info_value, parse_vcf
 
 DBSNP_SOURCE = ("dbSNP", "https://ftp.ncbi.nih.gov/snp/organisms/human_9606_b151_GRCh38p7/VCF/")
@@ -32,7 +34,6 @@ FAVOR_SOURCE = ("FAVOR", "http://favor.genohub.org/")
 
 def dbsnp_nodes(lines: DataFrame, chr: str | None = None,
                 start: int | None = None, end: int | None = None,
-                write_properties: bool = True, add_provenance: bool = True,
                 ) -> tuple[DataFrame, DataFrame]:
     """snp nodes (dbsnp_adapter.py:38-67). Note: the window compares the
     UNPREFIXED VCF chrom to the chr arg (quirk preserved); the emitted
@@ -48,18 +49,16 @@ def dbsnp_nodes(lines: DataFrame, chr: str | None = None,
         F.col("pos").alias("start"), F.col("pos").alias("end"),
         "ref", "alt", "_caf_ref", "_caf_alt",
     )
-    props: list[Prop] = []
-    if write_properties:
-        props = [
-            Prop("chr", F.concat(F.lit("chr"), F.col("chrom")), "str"),
-            Prop("start", F.col("pos"), "int"),
-            Prop("end", F.col("pos"), "int"),
-            Prop("ref", F.col("ref"), "str"),
-            Prop("alt", F.col("alt"), "str"),
-            # caf_ref/caf_alt only when CAF present, kept as raw strings
-            Prop("caf_ref", F.col("_caf_ref"), "str"),
-            Prop("caf_alt", F.col("_caf_alt"), "str"),
-        ] + provenance_props(*DBSNP_SOURCE, write_properties, add_provenance)
+    props = [
+        Prop("chr", F.concat(F.lit("chr"), F.col("chrom")), "str"),
+        Prop("start", F.col("pos"), "int"),
+        Prop("end", F.col("pos"), "int"),
+        Prop("ref", F.col("ref"), "str"),
+        Prop("alt", F.col("alt"), "str"),
+        # caf_ref/caf_alt only when CAF present, kept as raw strings
+        Prop("caf_ref", F.col("_caf_ref"), "str"),
+        Prop("caf_alt", F.col("_caf_alt"), "str"),
+    ] + provenance_props(*DBSNP_SOURCE)
     atoms = atoms_df(v, node_def_out("snp", F.col("id")), props)
     return typed, atoms
 
@@ -81,9 +80,7 @@ DBVAR_TYPES = {"<CNV>": "copy number variation", "<DEL>": "deletion",
 
 def dbvar_nodes(lines: DataFrame, label: str = "structural_variant",
                 chr: str | None = None, start: int | None = None,
-                end: int | None = None,
-                write_properties: bool = True, add_provenance: bool = True,
-                ) -> tuple[DataFrame, DataFrame]:
+                end: int | None = None) -> tuple[DataFrame, DataFrame]:
     """structural_variant nodes (dbvar_adapter.py:30-64): type-mapped ALT,
     END from INFO (default = start), 'chr'-prefixed chrom."""
     v = parse_vcf(lines).filter(F.col("pos").isNotNull())
@@ -100,14 +97,12 @@ def dbvar_nodes(lines: DataFrame, label: str = "structural_variant",
         F.col("_chr").alias("chr"), F.col("pos").alias("start"),
         F.col("_end").alias("end"), F.col("_vt").alias("variant_type"),
     )
-    props: list[Prop] = []
-    if write_properties:
-        props = [
-            Prop("chr", F.col("_chr"), "str"),
-            Prop("start", F.col("pos"), "int"),
-            Prop("end", F.col("_end"), "int"),
-            Prop("variant_type", F.col("_vt"), "str"),
-        ] + provenance_props(*DBVAR_SOURCE, write_properties, add_provenance)
+    props = [
+        Prop("chr", F.col("_chr"), "str"),
+        Prop("start", F.col("pos"), "int"),
+        Prop("end", F.col("_end"), "int"),
+        Prop("variant_type", F.col("_vt"), "str"),
+    ] + provenance_props(*DBVAR_SOURCE)
     atoms = atoms_df(v, node_def_out(label, F.col("id")), props)
     return typed, atoms
 
@@ -118,14 +113,12 @@ DGV_COLS = {"variant_accession": 0, "chr": 1, "coord_start": 2,
 
 def dgv_nodes(lines: DataFrame, label: str = "structural_variant",
               chr: str | None = None, start: int | None = None,
-              end: int | None = None, skip_header: bool = True,
-              write_properties: bool = True, add_provenance: bool = True,
-              ) -> tuple[DataFrame, DataFrame]:
-    """DGV structural variants (dgv_variant_adapter.py:29-58): 0-based ->
-    +1, id = positional region id, accession kept as 'id' property."""
+              end: int | None = None) -> tuple[DataFrame, DataFrame]:
+    """DGV structural variants (dgv_variant_adapter.py:29-58): header
+    skipped, 0-based -> +1, id = positional region id, accession kept as
+    'id' property."""
     d = split_cols(lines, DGV_COLS, "\t")
-    if skip_header:
-        d = d.filter(F.col("variant_accession") != "variantaccession")
+    d = d.filter(F.col("variant_accession") != "variantaccession")
     chrom = F.concat(F.lit("chr"), F.col("chr"))
     s = (F.col("coord_start").try_cast("long") + 1)
     e = (F.col("coord_end").try_cast("long") + 1)
@@ -139,16 +132,14 @@ def dgv_nodes(lines: DataFrame, label: str = "structural_variant",
         F.col("_e").alias("end"), F.col("type").alias("variant_type"),
         F.col("variant_accession").alias("accession"),
     )
-    props: list[Prop] = []
-    if write_properties:
-        props = [
-            Prop("id", F.col("variant_accession"), "str"),
-            Prop("chr", F.col("_chr"), "str"),
-            Prop("start", F.col("_s"), "int"),
-            Prop("end", F.col("_e"), "int"),
-            Prop("variant_type", F.col("type"), "str"),
-            Prop("evidence", F.concat(F.lit("pubmed:"), F.col("pubmedid")), "str"),
-        ] + provenance_props(*DGV_SOURCE, write_properties, add_provenance)
+    props = [
+        Prop("id", F.col("variant_accession"), "str"),
+        Prop("chr", F.col("_chr"), "str"),
+        Prop("start", F.col("_s"), "int"),
+        Prop("end", F.col("_e"), "int"),
+        Prop("variant_type", F.col("type"), "str"),
+        Prop("evidence", F.concat(F.lit("pubmed:"), F.col("pubmedid")), "str"),
+    ] + provenance_props(*DGV_SOURCE)
     atoms = atoms_df(d, node_def_out(label, F.col("_id")), props)
     return typed, atoms
 
@@ -192,17 +183,13 @@ _FAVOR_KEY_FIELDS = {"chromosome", "start_position", "ref_vcf", "alt_vcf"}
 
 def favor_nodes(lines: DataFrame, chr: str | None = None,
                 start: int | None = None, end: int | None = None,
-                skip_header: bool = True,
-                write_properties: bool = True, add_provenance: bool = True,
                 ) -> tuple[DataFrame, DataFrame]:
     """FAVOR sequence_variant nodes (favor_adapter.py:96-131): wide CSV
-    projection, composite variant id, nested `annotation` dict with the
-    '.'->0 / to_float / passthrough coercion per field (P10)."""
-    from biocypher_metta_spark.sources.tabular import quoted_csv_cols
-
+    projection (header skipped), composite variant id, nested `annotation`
+    dict with the '.'->0 / to_float / passthrough coercion per field
+    (P10)."""
     d = quoted_csv_cols(lines, 190, FAVOR_FIELDS, ",")
-    if skip_header:
-        d = d.filter(F.col("chromosome") != "chromosome")
+    d = d.filter(F.col("chromosome") != "chromosome")
     chrom = F.concat(F.lit("chr"), F.col("chromosome"))
     pos = F.col("start_position").try_cast("long")
     d = d.withColumn("_chr", chrom).withColumn("_pos", pos)
@@ -215,44 +202,28 @@ def favor_nodes(lines: DataFrame, chr: str | None = None,
                      F.lit("sequence_variant").alias("label"),
                      F.col("_chr").alias("chr"), F.col("_pos").alias("start"),
                      F.col("_pos").alias("end"), "ref_vcf", "alt_vcf")
-    props: list[Prop] = []
-    extra = None
-    if write_properties:
-        props = [
-            Prop("chr", F.col("_chr"), "str"),
-            Prop("start", F.col("_pos"), "int"),
-            Prop("end", F.col("_pos"), "int"),
-            Prop("ref", F.col("ref_vcf"), "str"),
-            Prop("alt", F.col("alt_vcf"), "str"),
-        ]
-        def_out = node_def_out("sequence_variant", F.col("_id"))
-        # the ~80 annotation fields render as ONE transform over an
-        # array<string>, projected once as a column: the plan holds one
-        # num_or_str kernel, not one per field or per field reference
-        from biocypher_metta_spark.serializer import num_or_str_fragments
-
-        ann_keys = [k for k in FAVOR_FIELDS if k not in _FAVOR_KEY_FIELDS]
-        d = d.withColumn("_ann", num_or_str_fragments(
-            F.array(*[F.col(k) for k in ann_keys])))
-        head = F.concat(F.lit("(annotation "), def_out, F.lit(")"))
-        extra = [head]
-        for i, k in enumerate(ann_keys):
-            frag = F.get(F.col("_ann"), i)
-            extra.append(F.when(frag.isNull(), F.lit(None)).otherwise(
-                F.concat(F.lit(f"({k} "), head, F.lit(" "), frag, F.lit(")"))))
-        extra += [p_atom for p_atom in
-                  (_prov_atoms(def_out, write_properties, add_provenance))]
-    atoms = atoms_df(d, node_def_out("sequence_variant", F.col("_id")),
-                     props, extra_atoms=extra)
+    props = [
+        Prop("chr", F.col("_chr"), "str"),
+        Prop("start", F.col("_pos"), "int"),
+        Prop("end", F.col("_pos"), "int"),
+        Prop("ref", F.col("ref_vcf"), "str"),
+        Prop("alt", F.col("alt_vcf"), "str"),
+    ]
+    def_out = node_def_out("sequence_variant", F.col("_id"))
+    # the ~80 annotation fields render as ONE transform over an
+    # array<string>, projected once as a column: the plan holds one
+    # num_or_str kernel, not one per field or per field reference
+    ann_keys = [k for k in FAVOR_FIELDS if k not in _FAVOR_KEY_FIELDS]
+    d = d.withColumn("_ann", num_or_str_fragments(
+        F.array(*[F.col(k) for k in ann_keys])))
+    head = F.concat(F.lit("(annotation "), def_out, F.lit(")"))
+    extra = [head]
+    for i, k in enumerate(ann_keys):
+        frag = F.get(F.col("_ann"), i)
+        extra.append(F.when(frag.isNull(), F.lit(None)).otherwise(
+            F.concat(F.lit(f"({k} "), head, F.lit(" "), frag, F.lit(")"))))
+    # provenance atoms come AFTER the annotation dict (the reference
+    # inserts 'annotation' before source/source_url, favor_adapter.py:113-126)
+    extra += [prop_atom(def_out, p) for p in provenance_props(*FAVOR_SOURCE)]
+    atoms = atoms_df(d, def_out, props, extra_atoms=extra)
     return typed, atoms
-
-
-def _prov_atoms(def_out, write_properties, add_provenance):
-    """Provenance atoms appended AFTER the annotation dict (reference
-    inserts 'annotation' before source/source_url, favor_adapter.py:113-126)."""
-    from biocypher_metta_spark.serializer import prop_atom
-
-    out = []
-    for p in provenance_props(*FAVOR_SOURCE, write_properties, add_provenance):
-        out.append(prop_atom(def_out, p))
-    return out

@@ -318,12 +318,13 @@ WHERE {_DUCK['chrom']} = 'chr16'
 
 def kg_gtf_gene_atoms(spark, sf_dir):
     """MeTTa rendering of the windowed gene nodes (serializer parity in
-    the driver gate): one atom string per row."""
+    the driver gate): one atom string per row, without the constant
+    provenance atoms."""
     docs = _kg_docs(spark, sf_dir)
     gtf = parse_gtf(span_lines(docs, "gtf"), keys=GENE_KEYS)
-    _, atoms = gencode.gene_nodes(gtf, alias_df=None, **KG_WINDOW,
-                                  add_provenance=False)
-    return atoms
+    _, atoms = gencode.gene_nodes(gtf, alias_df=None, **KG_WINDOW)
+    return atoms.filter(~F.col("atom").startswith("(source ")
+                        & ~F.col("atom").startswith("(source_url "))
 
 
 KG_GTF_GENE_ATOMS_SQL = f"""

@@ -72,17 +72,17 @@ class PipelineContext:
     dims: dict[str, DataFrame] = field(default_factory=dict)
     _cache: dict = field(default_factory=dict)
 
-    def gtf(self, kind: str = "gtf", keys=None) -> DataFrame:
-        """Parsed GTF lines for a span kind — cached so gene/transcript/
-        exon/edge outputs share ONE scan and ONE parse (the reference
-        re-reads the file per config entry; SURVEY §4). Every kind is
-        parsed with GTF_KEYS; `keys` names the attribute columns the
-        caller needs, and one outside that set is a KeyError."""
+    def gtf(self, keys=None) -> DataFrame:
+        """Parsed 'gtf' span lines — cached so gene/transcript/exon/edge
+        outputs share ONE scan and ONE parse (the reference re-reads the
+        file per config entry; SURVEY §4). The parse extracts GTF_KEYS;
+        `keys` names the attribute columns the caller needs, and one
+        outside that set is a KeyError."""
         missing = [k for k in keys or () if k not in GTF_KEYS]
         if missing:
             raise KeyError(f"GTF keys {missing} are not parsed; parsed: {GTF_KEYS}")
-        return self.cached(("gtf", kind), lambda: parse_gtf(
-            span_lines(self.docs, kind), keys=GTF_KEYS))
+        return self.cached("gtf", lambda: parse_gtf(
+            span_lines(self.docs, "gtf"), keys=GTF_KEYS))
 
     def lines(self, kind: str) -> DataFrame:
         return span_lines(self.docs, kind)
@@ -105,11 +105,11 @@ class PipelineContext:
         return self._cache[key]
 
 
-def _dbsuper_lifted(ctx: PipelineContext, chr=None, start=None, end=None, **_):
+def _dbsuper_lifted(ctx: PipelineContext, chr=None, start=None, end=None):
     """The lifted dbSUPER scan, cached per window: the node and edge
     entries share one liftover join against the chain blocks."""
     window = (chr, start, end)
-    return ctx.cached(("dbsuper_base", window), lambda: reg._dbsuper_base(
+    return ctx.cached(("dbsuper_lifted", window), lambda: reg.dbsuper_lifted(
         ctx.lines("dbsuper"), ctx.dims["liftover"], *window))
 
 
@@ -169,11 +169,11 @@ _CALLS = {
     "enhancer_atlas_gene": lambda ctx, **a: reg.enhancer_atlas_edges(
         ctx.lines_keyed("ea_gene", "tissue"), ctx.dims["ea_tissues"], ctx.registry, **a),
     "tadmap": lambda ctx, **a: reg.tadmap_nodes(ctx.lines("tadmap"), **a),
-    "dbsuper": lambda ctx, **a: reg.dbsuper_nodes(
-        None, ctx.dims["liftover"], base=_dbsuper_lifted(ctx, **a), **a),
-    "dbsuper_gene": lambda ctx, **a: reg.dbsuper_edges(
-        None, ctx.dims["liftover"], ctx.dims["hgnc_to_ensembl"],
-        ctx.dims["dbsuper_tissues"], ctx.registry, base=_dbsuper_lifted(ctx, **a), **a),
+    "dbsuper": lambda ctx, chr=None, start=None, end=None, **a: reg.dbsuper_nodes(
+        _dbsuper_lifted(ctx, chr, start, end), **a),
+    "dbsuper_gene": lambda ctx, chr=None, start=None, end=None, **a: reg.dbsuper_edges(
+        _dbsuper_lifted(ctx, chr, start, end), ctx.dims["hgnc_to_ensembl"],
+        ctx.dims["dbsuper_tissues"], ctx.registry, **a),
     "peregrine": lambda ctx, **a: reg.peregrine_nodes(
         ctx.lines("peregrine_enhancers"), ctx.lines("peregrine_sources"), **a),
     "peregrine_gene": lambda ctx, **a: reg.peregrine_edges(

@@ -252,9 +252,10 @@ def test_dbsuper_nodes_parity(spark):
                              dbsuper_tissues_map=f"{AUX}/dbsuper_tissues_map.pkl",
                              write_properties=True, add_provenance=True)
     golden = golden_node_atoms(ref.get_nodes())
-    blocks = chain_blocks(spark, lift_chain())
-    _, atoms = reg.dbsuper_nodes(
-        lines_of(spark, f"{S}/dbSUPER_SuperEnhancers_hg19.tsv.gz"), blocks)
+    lifted = reg.dbsuper_lifted(
+        lines_of(spark, f"{S}/dbSUPER_SuperEnhancers_hg19.tsv.gz"),
+        chain_blocks(spark, lift_chain()))
+    _, atoms = reg.dbsuper_nodes(lifted)
     assert_pr(spark_atoms(atoms), golden, 1.0, "dbsuper nodes")
 
 
@@ -267,12 +268,12 @@ def test_dbsuper_edges_parity(spark):
                              label="super_enhancer_gene",
                              write_properties=True, add_provenance=True)
     golden = golden_edge_atoms(ref.get_edges())
-    blocks = chain_blocks(spark, lift_chain())
+    lifted = reg.dbsuper_lifted(
+        lines_of(spark, f"{S}/dbSUPER_SuperEnhancers_hg19.tsv.gz"),
+        chain_blocks(spark, lift_chain()))
     hgnc = dims.dim_from_pickle(spark, f"{AUX}/hgnc_to_ensembl.pkl")
     tissue = dims.dim_from_pickle(spark, f"{AUX}/dbsuper_tissues_map.pkl")
-    _, atoms = reg.dbsuper_edges(
-        lines_of(spark, f"{S}/dbSUPER_SuperEnhancers_hg19.tsv.gz"),
-        blocks, hgnc, tissue, REGISTRY)
+    _, atoms = reg.dbsuper_edges(lifted, hgnc, tissue, REGISTRY)
     assert_pr(spark_atoms(atoms), golden, 1.0, "dbsuper edges")
 
 

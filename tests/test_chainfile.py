@@ -249,7 +249,7 @@ def test_dbsuper_drops_rows_lifting_into_a_gap(spark):
             ("chr1", 1200, 1400, "SE_end_past_chain", "G1", "c1")]
     lines = local_frame(spark, {"value": ["\t".join(map(str, r)) for r in rows]},
                         "value string")
-    typed, _atoms = reg.dbsuper_nodes(lines, chain_blocks(spark, lf))
+    typed, _atoms = reg.dbsuper_nodes(reg.dbsuper_lifted(lines, chain_blocks(spark, lf)))
     got = {r.se_id: (r.chr, r.start, r.end) for r in typed.collect()}
 
     def lifted(pos):
@@ -289,7 +289,7 @@ def test_dbsuper_nodes_real_chain_kernel(spark):
     finally:
         ref_helpers._lifters.pop("hg19_hg38", None)
 
-    _, atoms = reg.dbsuper_nodes(
+    _, atoms = reg.dbsuper_nodes(reg.dbsuper_lifted(
         lines_of(spark, f"{S}/dbSUPER_SuperEnhancers_hg19.tsv.gz"),
-        chain_blocks(spark, lf))
+        chain_blocks(spark, lf)))
     assert_pr(spark_atoms(atoms), golden, 1.0, "dbsuper nodes (chain kernel)")

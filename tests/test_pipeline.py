@@ -369,6 +369,38 @@ def test_no_entry_plan_runs_python(spark):
     assert found == {}
 
 
+# defaulted parameters the `_CALLS` entries set themselves
+CALL_SET_ARGS = {"direction", "alias_df", "rnacentral_map"}
+
+
+def test_adapter_options_are_set_by_a_caller():
+    """Every defaulted parameter of an adapter function that `pipeline`
+    calls is one a config can set (`_PASSTHROUGH_ARGS`) or one the
+    entries set themselves: an option no caller sets is dead code."""
+    import ast
+    import inspect
+
+    tree = ast.parse(inspect.getsource(pipeline))
+    called = {(node.func.value.id, node.func.attr) for node in ast.walk(tree)
+              if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+              and isinstance(node.func.value, ast.Name)}
+    allowed = pipeline._PASSTHROUGH_ARGS | CALL_SET_ARGS
+    unset, checked = {}, 0
+    for mod_name, attr in sorted(called):
+        mod = getattr(pipeline, mod_name, None)
+        if not inspect.ismodule(mod) or not mod.__name__.startswith(
+                "biocypher_metta_spark.adapters"):
+            continue
+        checked += 1
+        params = inspect.signature(getattr(mod, attr)).parameters.values()
+        extra = [p.name for p in params
+                 if p.default is not p.empty and p.name not in allowed]
+        if extra:
+            unset[f"{mod.__name__}.{attr}"] = extra
+    assert checked >= 38  # the adapter functions and their dimension parsers
+    assert unset == {}
+
+
 def test_dedup_nodes_keeps_one_row_in_either_order(spark):
     """Two rows for one (label, id) keep the same row whichever partition
     holds which; the columns keep their order."""
