@@ -36,7 +36,6 @@ ROADMAP_SOURCE = ("Roadmap Epigenomics Project",
                    "https://forgedb.cancer.gov/api/forge2.erc2-H3-all/v1.0/forge2.erc2-H3-all.{"
                    "0-9}.forgedb.csv.gz",
                    "https://forgedb.cancer.gov/api/forge2.erc2-DHS/v1.0/forge2.erc2-DHS.forgedb.csv.gz"])
-ABC_SOURCE = ("ABC", "https://forgedb.cancer.gov/api/abc/v1.0/abc.forgedb.csv.gz")
 CADD_SOURCE = ("CADD", "https://forgedb.cancer.gov/api/cadd/v1.0/cadd.forgedb.csv.gz")
 REFSEQ_SOURCE = ("RefSeq Closest Gene",
                  "https://forgedb.cancer.gov/api/closest_gene/v1.0/closest_gene.forgedb.csv.gz")

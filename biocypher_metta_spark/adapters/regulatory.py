@@ -210,7 +210,7 @@ def dbsuper_lifted(lines: DataFrame, blocks: DataFrame, chr: str | None = None,
     e19 = F.col("coord_end").try_cast("long") + 1
     d = (d.withColumn("_s19", s19).withColumn("_e19", e19)
          .filter(F.col("_s19").isNotNull() & F.col("_e19").isNotNull()))
-    d = lift(lift(d, "chr", "_s19", blocks, "_s"), "chr", "_e19", blocks, "_e")
+    d = lift(d, "chr", {"_s": "_s19", "_e": "_e19"}, blocks)
     d = d.filter(F.col("_s").isNotNull() & F.col("_e").isNotNull())
     d = d.withColumn("_id", build_regulatory_region_id(
         F.col("chr"), F.col("_s"), F.col("_e")))

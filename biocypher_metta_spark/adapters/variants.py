@@ -63,16 +63,6 @@ def dbsnp_nodes(lines: DataFrame, chr: str | None = None,
     return typed, atoms
 
 
-def dbsnp_rsid_dim(lines: DataFrame) -> DataFrame:
-    """(rsid, chr, pos) dimension — the dbsnp_rsid_map/pos_map twin
-    (create_knowledge_graph.py:29-31). At production scale this is ~38M
-    rows: a real table for sort-merge/AQE joins, not a broadcast dict."""
-    v = parse_vcf(lines).filter(F.col("pos").isNotNull())
-    return v.select(F.col("id").alias("rsid"),
-                    F.col("chrom").alias("chr"),
-                    F.col("pos").alias("pos")).dropDuplicates(["rsid"])
-
-
 DBVAR_TYPES = {"<CNV>": "copy number variation", "<DEL>": "deletion",
                "<DUP>": "duplication", "<INS>": "insertion",
                "<INV>": "inversion"}

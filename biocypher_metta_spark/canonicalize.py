@@ -80,31 +80,28 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
         "label-propagation rounds (one hop per round); raise max_iter")
 
 
-def canonical_id_map(alias_edges: DataFrame, max_iter: int = 10) -> DataFrame:
+def canonical_id_map(alias_edges: DataFrame) -> DataFrame:
     """(id, canonical_id): lexicographic-min member per alias component,
     which is the component label itself."""
-    return (connected_components(alias_edges, max_iter=max_iter)
+    return (connected_components(alias_edges)
             .select("id", F.col("component").alias("canonical_id")))
 
 
-def dedup_nodes(nodes: DataFrame, id_col: str = "id",
-                label_col: str = "label") -> DataFrame:
+def dedup_nodes(nodes: DataFrame) -> DataFrame:
     """skip_duplicate_nodes semantics (A5): one row per (label, id).
 
     The reference keeps the first row it meets; here the kept row is
     the least of the other columns, compared as one struct in column
     order, so the result does not depend on the input's row order."""
-    rest = [c for c in nodes.columns if c not in (label_col, id_col)]
+    rest = [c for c in nodes.columns if c not in ("label", "id")]
     if not rest:
-        return nodes.dropDuplicates([label_col, id_col])
-    kept = nodes.groupBy(label_col, id_col).agg(F.min(F.struct(*rest)).alias("_row"))
-    return kept.select(*[c if c in (label_col, id_col) else F.col("_row")[c].alias(c)
+        return nodes.dropDuplicates(["label", "id"])
+    kept = nodes.groupBy("label", "id").agg(F.min(F.struct(*rest)).alias("_row"))
+    return kept.select(*[c if c in ("label", "id") else F.col("_row")[c].alias(c)
                          for c in nodes.columns])
 
 
-def canonicalize_nodes(nodes: DataFrame, id_map: DataFrame,
-                       id_col: str = "id",
-                       label_col: str = "label") -> DataFrame:
+def canonicalize_nodes(nodes: DataFrame, id_map: DataFrame) -> DataFrame:
     """Rewrite node ids to their canonical representative, then dedup.
 
     A hub id needs no salting here: the dedup's map-side partial
@@ -113,19 +110,18 @@ def canonicalize_nodes(nodes: DataFrame, id_map: DataFrame,
     """
     m = id_map.select(F.col("id").alias("_aid"),
                       F.col("canonical_id").alias("_cid"))
-    out = (nodes.join(m, nodes[id_col] == m["_aid"], "left")
-           .withColumn(id_col, F.coalesce(F.col("_cid"), F.col(id_col)))
+    out = (nodes.join(m, nodes["id"] == m["_aid"], "left")
+           .withColumn("id", F.coalesce(F.col("_cid"), F.col("id")))
            .drop("_aid", "_cid"))
-    return dedup_nodes(out, id_col, label_col)
+    return dedup_nodes(out)
 
 
-def transitive_closure(edges: DataFrame, src: str = "src",
-                       dst: str = "dst",
-                       max_iter: int = 20) -> DataFrame:
-    """Directed reachability: edges -> distinct (src, dst) pairs where
-    dst is reachable from src — the distributed form of the KG ancestor
-    query (Biolink is_a chains, ontology subsumption; the reference
-    walks these driver-side per class, schema_config YAML semantics).
+def transitive_closure(edges: DataFrame, max_iter: int = 20) -> DataFrame:
+    """Directed reachability: (src, dst) edges -> distinct (src, dst)
+    pairs where dst is reachable from src — the distributed form of the
+    KG ancestor query (Biolink is_a chains, ontology subsumption; the
+    reference walks these driver-side per class, schema_config YAML
+    semantics).
 
     Path doubling, not single-step expansion: each round joins the
     CURRENT closure with itself (paths of length <= 2^k after k rounds),
@@ -140,7 +136,7 @@ def transitive_closure(edges: DataFrame, src: str = "src",
     O(sum of ancestor-set sizes); a deep linear chain is quadratic in
     its length. Ontology DAGs are log-depth with small ancestor sets —
     the intended domain."""
-    cur = (edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+    cur = (edges.select(F.col("src").alias("s"), F.col("dst").alias("d"))
            .filter(F.col("s") != F.col("d"))
            .distinct())
     cur = _ckcut(cur)
@@ -171,15 +167,13 @@ def transitive_closure(edges: DataFrame, src: str = "src",
             f"transitive_closure did not reach a fixed point within "
             f"{max_iter} path-doubling rounds (covers diameter 2^{max_iter}); "
             "raise max_iter")
-    return cur.select(F.col("s").alias(src), F.col("d").alias(dst))
+    return cur.select(F.col("s").alias("src"), F.col("d").alias("dst"))
 
 
-def strongly_connected(edges: DataFrame, src: str = "src",
-                       dst: str = "dst",
-                       max_iter: int = 20) -> DataFrame:
+def strongly_connected(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     """SCC labels from mutual reachability: scc(u) = min(u, min{v :
-    u ->* v AND v ->* u}) — every node of the edge set gets a row
-    (node, scc); a node on no cycle labels itself (trivial SCC).
+    u ->* v AND v ->* u}) — every node of the (src, dst) edge set gets a
+    row (node, scc); a node on no cycle labels itself (trivial SCC).
 
     The KG use case is CYCLE DETECTION in supposed-DAG hierarchies
     (is_a/subClassOf loops are data-quality errors the reference's
@@ -195,15 +189,14 @@ def strongly_connected(edges: DataFrame, src: str = "src",
     the intended domain is sparse near-DAGs where cycles are small
     anomalies, exactly where closure size stays near-linear.
     """
-    c = transitive_closure(edges, src, dst, max_iter)
+    c = transitive_closure(edges, max_iter)
     mutual = (c.alias("a")
               .join(c.alias("b"),
-                    (F.col("a." + src) == F.col("b." + dst))
-                    & (F.col("a." + dst) == F.col("b." + src)))
-              .select(F.col("a." + src).alias("n"),
-                      F.col("a." + dst).alias("m")))
-    nodes = (edges.select(F.col(src).alias("n"))
-             .unionByName(edges.select(F.col(dst).alias("n")))
+                    (F.col("a.src") == F.col("b.dst"))
+                    & (F.col("a.dst") == F.col("b.src")))
+              .select(F.col("a.src").alias("n"), F.col("a.dst").alias("m")))
+    nodes = (edges.select(F.col("src").alias("n"))
+             .unionByName(edges.select(F.col("dst").alias("n")))
              .distinct())
     return (nodes.join(mutual, "n", "left")
             .groupBy("n")
@@ -212,15 +205,15 @@ def strongly_connected(edges: DataFrame, src: str = "src",
             .select(F.col("n").alias("node"), "scc"))
 
 
-def strongly_connected_sql(edges_sql: str, src: str = "src",
-                           dst: str = "dst") -> str:
-    """DuckDB twin of strongly_connected: recursive-CTE closure
-    (semi-naive iteration — a different strategy than the engine's
-    path doubling; UNION's dedup is the fixed point, so cycles
-    terminate), the same mutual self-join, the same node-min label."""
+def strongly_connected_sql(edges_sql: str) -> str:
+    """DuckDB twin of strongly_connected over (src, dst) edges:
+    recursive-CTE closure (semi-naive iteration — a different strategy
+    than the engine's path doubling; UNION's dedup is the fixed point,
+    so cycles terminate), the same mutual self-join, the same node-min
+    label."""
     return f"""WITH RECURSIVE scc_e AS (
-  SELECT {src} AS s, {dst} AS d FROM ({edges_sql.strip()}) AS scc_in
-  WHERE {src} <> {dst}
+  SELECT src AS s, dst AS d FROM ({edges_sql.strip()}) AS scc_in
+  WHERE src <> dst
 ), scc_r AS (
   SELECT s, d FROM scc_e
   UNION
@@ -230,9 +223,9 @@ def strongly_connected_sql(edges_sql: str, src: str = "src",
   SELECT a.s AS n, a.d AS m
   FROM scc_r AS a JOIN scc_r AS b ON a.s = b.d AND a.d = b.s
 ), scc_n AS (
-  SELECT {src} AS n FROM ({edges_sql.strip()}) AS scc_in1
+  SELECT src AS n FROM ({edges_sql.strip()}) AS scc_in1
   UNION
-  SELECT {dst} AS n FROM ({edges_sql.strip()}) AS scc_in2
+  SELECT dst AS n FROM ({edges_sql.strip()}) AS scc_in2
 )
 SELECT scc_n.n AS node,
        least(scc_n.n, coalesce(min(scc_m.m), scc_n.n)) AS scc

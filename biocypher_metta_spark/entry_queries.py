@@ -2110,7 +2110,7 @@ def kg_liftover(spark, sf_dir):
         F.concat(F.lit("chr"), ((F.col("i") % 3) + 1).cast("string"))
         .alias("chrom"),
         (F.lit(80) + (F.col("i") * 7) % 300).cast("long").alias("pos"))
-    return (lift(src, "chrom", "pos", chain_blocks(spark, _GATE_LIFTER), "lifted")
+    return (lift(src, "chrom", {"lifted": "pos"}, chain_blocks(spark, _GATE_LIFTER))
             .filter(F.col("lifted").isNotNull())
             .select("i", "chrom", "pos", "lifted"))
 

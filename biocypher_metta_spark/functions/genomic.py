@@ -72,12 +72,10 @@ def interval_point_join(intervals, points, bucket: int = 10_000,
             .drop("_bkt"))
 
 
-def interval_overlap_join(left, right, bucket: int = 10_000,
-                          chrom: str = "chrom",
-                          l_start: str = "l_start", l_end: str = "l_end",
-                          r_start: str = "r_start", r_end: str = "r_end"):
-    """Interval-overlap range join: pairs where [l_start, l_end) and
-    [r_start, r_end) intersect on the same chrom. Both sides explode to
+def interval_overlap_join(left, right, bucket: int = 10_000):
+    """Interval-overlap range join: pairs where `left`'s [l_start, l_end)
+    and `right`'s [r_start, r_end) intersect on the same `chrom` (the
+    join key both sides carry). Both sides explode to
     covered buckets and equi-join on (chrom, bucket); a pair spanning
     k shared buckets would surface k times, so it is emitted ONLY from
     its canonical bucket — the bucket of max(l_start, r_start) — which
@@ -87,19 +85,19 @@ def interval_overlap_join(left, right, bucket: int = 10_000,
 
     lv = left.withColumn(
         "_bkt",
-        F.explode(F.sequence(F.floor(F.col(l_start) / bucket).cast("long"),
-                             F.floor((F.col(l_end) - 1) / bucket)
+        F.explode(F.sequence(F.floor(F.col("l_start") / bucket).cast("long"),
+                             F.floor((F.col("l_end") - 1) / bucket)
                              .cast("long"))))
     rv = right.withColumn(
         "_bkt",
-        F.explode(F.sequence(F.floor(F.col(r_start) / bucket).cast("long"),
-                             F.floor((F.col(r_end) - 1) / bucket)
+        F.explode(F.sequence(F.floor(F.col("r_start") / bucket).cast("long"),
+                             F.floor((F.col("r_end") - 1) / bucket)
                              .cast("long"))))
-    joined = lv.join(rv, [chrom, "_bkt"])
-    overlap = (F.col(l_start) < F.col(r_end)) \
-        & (F.col(r_start) < F.col(l_end))
+    joined = lv.join(rv, ["chrom", "_bkt"])
+    overlap = (F.col("l_start") < F.col("r_end")) \
+        & (F.col("r_start") < F.col("l_end"))
     canonical = F.floor(
-        F.greatest(F.col(l_start), F.col(r_start)) / bucket
+        F.greatest(F.col("l_start"), F.col("r_start")) / bucket
     ).cast("long") == F.col("_bkt")
     return joined.filter(overlap & canonical).drop("_bkt")
 

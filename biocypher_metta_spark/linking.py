@@ -27,8 +27,11 @@ from pyspark.sql import functions as F
 from biocypher_metta_spark.dims import local_frame
 
 
+MIN_SCORE = 0.5  # links scoring below this are dropped
+
+
 def build_mention_join(spark: SparkSession, dictionary: dict[str, str],
-                       max_ngram: int = 3, min_score: float = 0.5):
+                       max_ngram: int = 3):
     """Mention linking in the JVM: token n-grams exploded with built-in
     expressions + broadcast joins against the dictionary as two small
     DataFrames (exact + casefolded surfaces) — no Python at all, so the
@@ -40,10 +43,10 @@ def build_mention_join(spark: SparkSession, dictionary: dict[str, str],
     a dictionary surface scores 1.0; otherwise one whose lower() equals a
     surface's casefold() scores 0.8 (lower() equals casefold on ASCII).
     The score is then multiplied by min(1, 0.5 + 0.25n) for an n-token
-    mention, rounded to 4 places, and rows below `min_score` are dropped.
+    mention, rounded to 4 places, and rows below MIN_SCORE are dropped.
 
-    Returns link(lines_df, text_col='value') -> DataFrame
-    (doc_id, mention, entity, score >= min_score).
+    Returns link(lines_df) -> DataFrame (doc_id, mention, entity,
+    score >= MIN_SCORE) over the lines' `value` texts.
     """
     exact = dict(dictionary)
     folded: dict[str, str] = {}
@@ -64,8 +67,8 @@ def build_mention_join(spark: SparkSession, dictionary: dict[str, str],
             f"j -> array_join(slice(_toks, j, {n}), ' ')) "
             f"ELSE array() END"))
 
-    def link(lines: DataFrame, text_col: str = "value") -> DataFrame:
-        toks = F.regexp_extract_all(F.col(text_col),
+    def link(lines: DataFrame) -> DataFrame:
+        toks = F.regexp_extract_all(F.col("value"),
                                     F.lit(r"[A-Za-z0-9:_.\-]+"), 0)
         # per-row mention dedup stays INSIDE the row via array_distinct —
         # no dedup shuffle over every token n-gram of the corpus (measured
@@ -93,7 +96,7 @@ def build_mention_join(spark: SparkSession, dictionary: dict[str, str],
                     * F.least(F.lit(1.0), F.lit(0.5) + F.lit(0.25) * n_toks),
                     4))
             .select("doc_id", "mention", "entity", "score")
-            .filter(F.col("score") >= min_score)
+            .filter(F.col("score") >= MIN_SCORE)
         )
         return scored
 

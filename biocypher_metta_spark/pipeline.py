@@ -134,7 +134,7 @@ _CALLS = {
     "gencode_gene": lambda ctx, **a: gencode.gene_nodes(
         ctx.gtf(), alias_df=ctx.dims.get("gene_alias"), **a),
     "gencode_transcript": lambda ctx, **a: gencode.transcript_nodes(ctx.gtf(), **a),
-    "gencode_exon": lambda ctx, **a: gencode.exon_nodes(ctx.gtf(keys=GTF_KEYS), **a),
+    "gencode_exon": lambda ctx, **a: gencode.exon_nodes(ctx.gtf(), **a),
     "transcribed_to": lambda ctx, **a: gencode.transcribed_edges(
         ctx.gtf(), ctx.registry, "to", **a),
     "transcribed_from": lambda ctx, **a: gencode.transcribed_edges(
@@ -423,6 +423,12 @@ _REF_CLS_MAP = {
 # args carried over from the reference config into our adapter kwargs
 _PASSTHROUGH_ARGS = {"chr", "start", "end", "label", "ancestry", "cutoff",
                      "gaf_type", "ontology", "dry_run"}
+# entries whose adapter takes no genomic window: a config's chr/start/end
+# on them is dropped
+_WINDOWLESS = {"transcribed_to", "transcribed_from", "pathway", "genes_pathways",
+               "parent_pathway_of", "child_pathway_of", "string", "tflink",
+               "coexpression", "rna_central_go", "hocomoco", "gaf", "uniprot_protein",
+               "uniprot_translates", "ontology_nodes", "ontology_edges"}
 
 
 def translate_reference_config(path: str | Path) -> list[dict]:
@@ -451,7 +457,8 @@ def translate_reference_config(path: str | Path) -> list[dict]:
         if name is None:
             raise KeyError(f"no registry mapping for {module}.{cls} ({disc})")
         kwargs = {k: v for k, v in args.items()
-                  if k in _PASSTHROUGH_ARGS and v is not None}
+                  if k in _PASSTHROUGH_ARGS and v is not None
+                  and not (name in _WINDOWLESS and k in ("chr", "start", "end"))}
         if name in ("uniprot_translates",) and args.get("type"):
             kwargs["direction"] = args["type"].replace(" ", "_")
             kwargs.pop("label", None)

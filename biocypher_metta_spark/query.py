@@ -24,11 +24,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def node_prop_triples(nodes: DataFrame,
-                      prop_cols: list[str] | None = None) -> DataFrame:
+def node_prop_triples(nodes: DataFrame) -> DataFrame:
     """Melt a typed nodes table into (subj, pred, obj) property triples:
-    subj = '(label id)' head, one row per non-null property."""
-    cols = prop_cols or [c for c in nodes.columns if c not in ("id", "label")]
+    subj = '(label id)' head, one row per non-null property column."""
+    cols = [c for c in nodes.columns if c not in ("id", "label")]
     subj = F.concat(F.lit("("), F.col("label"), F.lit(" "), F.col("id"), F.lit(")"))
     stack_expr = ", ".join(f"'{c}', cast(`{c}` as string)" for c in cols)
     melted = nodes.select(
@@ -44,12 +43,11 @@ def fetch_node_properties(nodes: DataFrame, label: str, node_id: str) -> DataFra
     return node_prop_triples(hit)
 
 
-def genes_in_window(nodes: DataFrame, chr: str, start: int, end: int,
-                    label: str = "gene") -> DataFrame:
+def genes_in_window(nodes: DataFrame, chr: str, start: int, end: int) -> DataFrame:
     """Probe 2: genes on `chr` with start > s and end < e
     (metta_space_import.py:82-90 semantics: strict inequalities)."""
     return nodes.filter(
-        (F.col("label") == label) & (F.col("chr") == chr)
+        (F.col("label") == "gene") & (F.col("chr") == chr)
         & (F.col("start") > start) & (F.col("end") < end)
     ).select("id", "chr", "start", "end")
 

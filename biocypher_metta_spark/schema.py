@@ -13,8 +13,6 @@ library (reference: biocypher_metta/metta_writer.py:47-88
   Remaining documented divergence: the reference also dumps one line for
   every OTHER class of the full Biolink model (nodes its constructors
   never reference), and iterates in graph insertion order vs sorted here.
-* per-label property type map (str/int/float/str[]/float[]/obj) driving
-  Spark column types.
 
 Without the schema YAML, ``load_default_registry`` falls back to what is
 embedded here: the compiled edge registry (FALLBACK_EDGE_TYPES), the
@@ -35,17 +33,6 @@ from dataclasses import dataclass, field
 from pathlib import Path
 
 import yaml
-
-# Property type names in the YAML -> Spark type names (informational).
-PROP_SPARK_TYPES = {
-    "str": "string",
-    "int": "long",
-    "float": "double",
-    "str[]": "array<string>",
-    "float[]": "array<double>",
-    "int[]": "array<long>",
-    "obj": "map<string,string>",
-}
 
 
 def _norm(label: str) -> str:
@@ -97,12 +84,11 @@ class EdgeTypeInfo:
 
 @dataclass
 class SchemaRegistry:
-    """Compiled schema: edge endpoint registry + hierarchy + property types."""
+    """Compiled schema: edge endpoint registry + hierarchy."""
 
     edge_node_types: dict[str, EdgeTypeInfo] = field(default_factory=dict)
     node_labels: dict[str, str] = field(default_factory=dict)  # input_label -> type key
     parents: dict[str, str] = field(default_factory=dict)  # type key -> is_a parent
-    properties: dict[str, dict[str, str]] = field(default_factory=dict)
 
     @classmethod
     def from_yaml(cls, schema_path: str | Path) -> "SchemaRegistry":
@@ -118,7 +104,6 @@ class SchemaRegistry:
                 is_a = is_a[0]
             if is_a:
                 reg.parents[type_key] = _norm(str(is_a))
-            props = v.get("properties") or {}
             if v["represented_as"] == "edge":
                 src = v.get("source")
                 tgt = v.get("target")
@@ -135,14 +120,12 @@ class SchemaRegistry:
                     output_label=out_label.lower() if out_label is not None else None,
                     edge_type=type_key,
                 )
-                reg.properties[label] = {k: str(t) for k, t in props.items()}
             else:
                 labels = v["input_label"]
                 if not isinstance(labels, list):
                     labels = [labels]
                 for l in labels:
                     reg.node_labels[_norm(l)] = type_key
-                    reg.properties[_norm(l)] = {k: str(t) for k, t in props.items()}
         reg.graft_biolink()
         return reg
 
@@ -164,14 +147,6 @@ class SchemaRegistry:
     # ------------------------------------------------------------------
     # type_defs.metta (metta_writer.py:28-88)
     # ------------------------------------------------------------------
-    def root_of(self, type_key: str) -> str:
-        seen = set()
-        cur = type_key
-        while cur in self.parents and cur not in seen:
-            seen.add(cur)
-            cur = self.parents[cur]
-        return cur
-
     def ref_ancestor(self, type_key: str) -> str:
         """The ancestor the reference emits per type: metta_writer.py:34
         takes ``list(nx.dfs_preorder_nodes(G, node, depth_limit=2))[-1]``

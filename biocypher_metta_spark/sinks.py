@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from biocypher_metta_spark.lineage import write_partitioned
 from biocypher_metta_spark.schema import SchemaRegistry
 from biocypher_metta_spark.serializer import escape_str
 
@@ -32,10 +33,11 @@ def write_metta_text(atoms: DataFrame, path: str) -> None:
 
 
 def write_triple_table(nodes: DataFrame | None, edges: DataFrame | None,
-                       path: str, mode: str = "overwrite") -> None:
-    """Unified queryable triple table, partitioned by kind+label —
-    partition pruning serves both probe patterns (subject-centric fetch
-    and label+range scans, scripts/metta_space_import.py:73-92)."""
+                       path: str) -> None:
+    """Unified queryable triple table, partitioned by kind+label and
+    written with dynamic partition overwrite — partition pruning serves
+    both probe patterns (subject-centric fetch and label+range scans,
+    scripts/metta_space_import.py:73-92)."""
     parts = []
     if nodes is not None:
         parts.append(nodes.select(
@@ -48,8 +50,7 @@ def write_triple_table(nodes: DataFrame | None, edges: DataFrame | None,
     df = parts[0]
     for p in parts[1:]:
         df = df.unionByName(p)
-    (df.write.mode(mode).option("partitionOverwriteMode", "dynamic")
-     .partitionBy("kind", "label").parquet(path))
+    write_partitioned(df, path, ["kind", "label"])
 
 
 # ---------------------------------------------------------------------------
@@ -174,6 +175,5 @@ def ntriples_edge_lines(edges: DataFrame, src_label: str,
                                  obj, F.lit(" .")).alias("line"))
 
 
-def write_ntriples(lines: DataFrame, path: str,
-                   mode: str = "overwrite") -> None:
-    lines.write.mode(mode).text(path)
+def write_ntriples(lines: DataFrame, path: str) -> None:
+    lines.write.mode("overwrite").text(path)

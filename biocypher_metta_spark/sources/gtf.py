@@ -19,10 +19,6 @@ from pyspark.sql import functions as F
 
 GENE_KEYS = ["gene_id", "gene_type", "gene_name",
              "transcript_id", "transcript_type", "transcript_name", "hgnc_id"]
-TRANSCRIPT_KEYS = ["gene_id", "gene_type", "gene_name",
-                   "transcript_id", "transcript_type", "transcript_name"]
-EXON_KEYS = ["gene_id", "transcript_id", "transcript_type",
-             "transcript_name", "exon_number", "exon_id"]
 
 
 def attr(line_col, key: str):
@@ -48,9 +44,8 @@ def attr_from_tokens(toks, key: str):
         .otherwise(F.translate(v, '";', ""))
 
 
-def parse_gtf(lines: DataFrame, text_col: str = "value",
-              keys: list[str] | None = None) -> DataFrame:
-    """lines -> chr, type, start, end + one column per attribute key.
+def parse_gtf(lines: DataFrame, keys: list[str] | None = None) -> DataFrame:
+    """`value` lines -> chr, type, start, end + one column per attribute key.
 
     Keeps every non-comment row; callers filter on `type` (P2) — Catalyst
     reorders/pushes those filters into the scan. The line is split ONCE;
@@ -58,7 +53,7 @@ def parse_gtf(lines: DataFrame, text_col: str = "value",
     token array across every fixed column and attribute key.
     """
     keys = keys or GENE_KEYS
-    c = F.col(text_col)
+    c = F.col("value")
     toks = F.split(F.trim(c), r"\s+")
     out = lines.filter(~c.startswith("#") & (F.trim(c) != ""))
     # F.get (not getItem) tolerates short token lists: a malformed line
@@ -72,7 +67,7 @@ def parse_gtf(lines: DataFrame, text_col: str = "value",
         F.get(toks, 3).try_cast("long").alias("start"),
         F.get(toks, 4).try_cast("long").alias("end"),
     ]
-    passthrough = [f for f in lines.columns if f != text_col]
+    passthrough = [f for f in lines.columns if f != "value"]
     cols = [F.col(f) for f in passthrough] + cols
     for k in keys:
         cols.append(attr_from_tokens(toks, k).alias(k))

@@ -22,11 +22,11 @@ from pyspark.sql import functions as F
 _NT_RE = r'^\s*(<[^>]*>|_:\S+)\s+<([^>]*)>\s+(<[^>]*>|_:\S+|"(?:[^"\\]|\\.)*"(?:\^\^<[^>]*>|@[A-Za-z\-]+)?)\s*\.\s*$'
 
 
-def parse_ntriples(lines: DataFrame, text_col: str = "value") -> DataFrame:
-    """lines -> (subject, predicate, object, subj_blank, obj_blank,
+def parse_ntriples(lines: DataFrame) -> DataFrame:
+    """`value` lines -> (subject, predicate, object, subj_blank, obj_blank,
     obj_literal) — the adapters/ontology.py input schema. Malformed and
     comment lines drop out (regex no-match => empty capture)."""
-    c = F.col(text_col)
+    c = F.col("value")
     s_raw = F.regexp_extract(c, _NT_RE, 1)
     p_raw = F.regexp_extract(c, _NT_RE, 2)
     o_raw = F.regexp_extract(c, _NT_RE, 3)

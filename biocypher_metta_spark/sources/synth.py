@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from biocypher_metta_spark.sources.documents import DOCUMENTS_SCHEMA
 
 MEDIA_EVERY = 7  # every 7th span slot carries a media ref, no text
+LINES_PER_DOC = 50  # fixture lines per document
 
 
 def _read_lines(path: str | Path) -> list[str]:
@@ -38,17 +39,17 @@ def _read_lines(path: str | Path) -> list[str]:
         return [l.rstrip("\n") for l in f]
 
 
-def spans_from_files(spark: SparkSession, kind_to_path: dict[str, str | Path],
-                     lines_per_doc: int = 50) -> DataFrame:
-    """Fixture wrapper: every `lines_per_doc` lines of each file become one
+def spans_from_files(spark: SparkSession,
+                     kind_to_path: dict[str, str | Path]) -> DataFrame:
+    """Fixture wrapper: every LINES_PER_DOC lines of each file become one
     document; offsets are the original line numbers so span order is the
     file order; a media span is interleaved every MEDIA_EVERY slots."""
     rows = []
     for kind, path in sorted(kind_to_path.items()):
         lines = _read_lines(path)
-        for start in range(0, len(lines), lines_per_doc):
-            chunk = lines[start:start + lines_per_doc]
-            doc_id = f"{kind}-{start // lines_per_doc:06d}"
+        for start in range(0, len(lines), LINES_PER_DOC):
+            chunk = lines[start:start + LINES_PER_DOC]
+            doc_id = f"{kind}-{start // LINES_PER_DOC:06d}"
             spans = []
             for i, line in enumerate(chunk):
                 offset = start + i
@@ -143,7 +144,7 @@ def synth_gtf_documents(spark: SparkSession, n_docs: int,
     return _gtf_spans_from_i(rng.select(F.col("id").alias("i")))
 
 
-def synth_gtf_documents_from_ids(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Same corpus but keyed off an existing integer id column (e.g. the
+def synth_gtf_documents_from_ids(ids_df: DataFrame) -> DataFrame:
+    """Same corpus but keyed off an existing integer `doc_id` column (the
     driver testdata documents.doc_id) so DuckDB oracles can reproduce it."""
-    return _gtf_spans_from_i(ids_df.select(F.col(id_col).cast("long").alias("i")))
+    return _gtf_spans_from_i(ids_df.select(F.col("doc_id").cast("long").alias("i")))

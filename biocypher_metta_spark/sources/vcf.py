@@ -11,13 +11,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def parse_vcf(lines: DataFrame, text_col: str = "value") -> DataFrame:
-    """lines -> chrom, pos, id, ref, alt, info (raw) + info_map."""
-    c = F.col(text_col)
+def parse_vcf(lines: DataFrame) -> DataFrame:
+    """`value` lines -> chrom, pos, id, ref, alt, info (raw) + info_map."""
+    c = F.col("value")
     out = lines.filter(~c.startswith("#") & (F.trim(c) != ""))
     t = F.split(c, "\t")
     return out.select(
-        *[F.col(f) for f in lines.columns if f != text_col],
+        *[F.col(f) for f in lines.columns if f != "value"],
         F.get(t, 0).alias("chrom"),
         F.get(t, 1).try_cast("long").alias("pos"),
         F.get(t, 2).alias("id"),

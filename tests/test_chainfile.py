@@ -147,7 +147,7 @@ def lift_positions(spark, lf, chroms, poss):
     """lift() over (chrom, pos) rows -> the lifted position per row."""
     df = local_frame(spark, {"i": list(range(len(poss))), "c": chroms, "p": poss},
                      "i long, c string, p long").repartition(3)
-    out = lift(df, "c", "p", chain_blocks(spark, lf), "lifted").collect()
+    out = lift(df, "c", {"lifted": "p"}, chain_blocks(spark, lf)).collect()
     assert len(out) == len(poss)
     got = {r.i: r.lifted for r in out}
     return [got[i] for i in range(len(poss))]
@@ -293,3 +293,30 @@ def test_dbsuper_nodes_real_chain_kernel(spark):
         lines_of(spark, f"{S}/dbSUPER_SuperEnhancers_hg19.tsv.gz"),
         chain_blocks(spark, lf)))
     assert_pr(spark_atoms(atoms), golden, 1.0, "dbsuper nodes (chain kernel)")
+
+
+def test_dbsuper_lifted_scans_the_documents_twice(spark, tmp_path):
+    """Start and end lift from one points frame, so the executed plan of
+    `dbsuper_lifted` over a parquet documents table reads it twice (the
+    points and the rows they join back to), not once more per lifted
+    column; the rows are those of one lift per column."""
+    from biocypher_metta_spark.adapters import regulatory as reg
+    from biocypher_metta_spark.sources.documents import (
+        DOCUMENTS_SCHEMA, read_documents, span_lines)
+
+    lf = ChainLifter.from_text(GAP_CHAIN)
+    lines = ["chrom\tstart\tstop\tse_id\tgene\tcell",
+             "chr1\t1000\t1050\tSE_keep1\tG1\tc1",
+             "chr1\t1149\t1250\tSE_keep2\tG1\tc1",
+             "chr1\t1120\t1200\tSE_start_in_gap\tG1\tc1"]
+    path = str(tmp_path / "docs")
+    spark.createDataFrame([("d0", [("dbsuper", line, None, i) for i, line in enumerate(lines)])],
+                          DOCUMENTS_SCHEMA).write.parquet(path)
+    lifted = reg.dbsuper_lifted(span_lines(read_documents(spark, path), "dbsuper"),
+                                chain_blocks(spark, lf))
+    got = {r.se_id: (r._s, r._e) for r in lifted.collect()}
+    assert got == {se: (lf.query("chr1", s + 1)[0][1], lf.query("chr1", e + 1)[0][1])
+                   for se, s, e in (("SE_keep1", 1000, 1050), ("SE_keep2", 1149, 1250))}
+    plan = lifted._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("FileScan parquet") <= 2, final

@@ -9,6 +9,11 @@ every entry at least one row carries every property the format allows.
 The schema registry is the embedded one, so the goldens do not depend
 on a reference checkout.
 
+Two more goldens pin what `materialize` writes beside the atoms: the
+embedded fallback registry's `type_defs.metta`, and the sorted (table,
+partition, n_rows, content_hash) manifest rows of one `materialize` of
+that build.
+
 Rewrite the golden files (only when a change to the KG bytes is meant):
 
     python -m tests.test_entry_goldens
@@ -16,11 +21,14 @@ Rewrite the golden files (only when a change to the KG bytes is meant):
 
 from __future__ import annotations
 
+import tempfile
+import warnings
 from pathlib import Path
+from unittest import mock
 
 from pyspark.sql import functions as F
 
-from biocypher_metta_spark import dims, pipeline
+from biocypher_metta_spark import dims, lineage, pipeline, schema
 from biocypher_metta_spark.functions.chainfile import ChainLifter, compose_chain
 from biocypher_metta_spark.functions.liftover import chain_blocks
 from biocypher_metta_spark.schema import (
@@ -36,6 +44,8 @@ GOLDEN = Path(__file__).resolve().parent / "golden"
 ATOMS_FILE = GOLDEN / "entry_atoms.tsv"
 NODES_FILE = GOLDEN / "build_nodes.tsv"
 EDGES_FILE = GOLDEN / "build_edges.tsv"
+TYPE_DEFS_FILE = GOLDEN / "type_defs.metta"
+MANIFESTS_FILE = GOLDEN / "manifests.tsv"
 
 _GO = "http://purl.obolibrary.org/obo/"
 _OIO = "http://www.geneontology.org/formats/oboInOwl#"
@@ -310,6 +320,30 @@ def build_row_lines(spark) -> tuple[list[str], list[str]]:
             sorted(_row_line(r) for r in edges.collect()))
 
 
+def fallback_type_defs() -> str:
+    """`type_defs.metta` of the registry `load_default_registry` falls
+    back to when the schema YAML is absent."""
+    with mock.patch.object(schema, "DEFAULT_SCHEMA_PATH", GOLDEN / "absent.yaml"), \
+            warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        return schema.load_default_registry().type_defs_text()
+
+
+def manifest_lines(spark, out_dir: Path) -> list[str]:
+    """Sorted 'table<TAB>partition<TAB>n_rows<TAB>content_hash' lines of the
+    lineage manifests one `materialize` of the build over every entry
+    writes (their `run_id`/`written_at` left out)."""
+    result = pipeline.build(_context(spark), list(ENTRIES.values()))
+    tables = pipeline.materialize(result, str(out_dir), _registry())
+    lines = []
+    for table in tables:
+        for row in lineage.read_manifest(str(out_dir / f"_lineage/{table}.json"))["partitions"]:
+            part = ",".join(f"{k}={v}" for k, v in sorted(row.items())
+                            if k not in ("n_rows", "content_hash"))
+            lines.append(_row_line((table, part, row["n_rows"], row["content_hash"])))
+    return sorted(lines)
+
+
 def _read(path: Path) -> list[str]:
     return path.read_text().splitlines()
 
@@ -326,16 +360,29 @@ def test_build_rows_match_golden(spark):
     assert edges == _read(EDGES_FILE)
 
 
+def test_type_defs_match_golden():
+    assert fallback_type_defs() == TYPE_DEFS_FILE.read_text()
+
+
+def test_manifests_match_golden(spark, tmp_path):
+    assert manifest_lines(spark, tmp_path) == _read(MANIFESTS_FILE)
+
+
 def _write_goldens():
     from biocypher_metta_spark.session import get_spark
 
     spark = get_spark("entry-goldens", master="local[2]")
     GOLDEN.mkdir(exist_ok=True)
     nodes, edges = build_row_lines(spark)
+    with tempfile.TemporaryDirectory() as out_dir:
+        manifests = manifest_lines(spark, Path(out_dir))
     for path, lines in ((ATOMS_FILE, entry_atom_lines(spark)),
-                        (NODES_FILE, nodes), (EDGES_FILE, edges)):
+                        (NODES_FILE, nodes), (EDGES_FILE, edges),
+                        (MANIFESTS_FILE, manifests)):
         path.write_text("".join(line + "\n" for line in lines))
         print(f"{path}: {len(lines)} lines")
+    TYPE_DEFS_FILE.write_text(fallback_type_defs())
+    print(f"{TYPE_DEFS_FILE}: {len(_read(TYPE_DEFS_FILE))} lines")
     spark.stop()
 
 

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import ast
+import inspect
 import json
 import subprocess
 import sys
@@ -107,6 +109,41 @@ def test_reference_config_translation():
     assert names <= set(pipeline.PIPELINE_REGISTRY)
     topld = [c for c in cfg if c["adapter"] == "topld"][0]
     assert topld["args"]["chr"] == "chr16" and topld["args"]["ancestry"] == "EUR"
+
+
+WINDOW = {"chr": "chr1", "start": 1, "end": 2}
+
+
+def test_reference_config_with_a_window_builds(spark, tmp_path):
+    """A reference config that sets a window on every entry translates
+    into entries that all build: the window reaches each adapter that
+    takes one and is dropped for `_WINDOWLESS`, which are exactly the
+    entries whose adapter refuses it."""
+    import yaml
+
+    cfg = {}
+    for i, ((module, cls, *disc), name) in enumerate(pipeline._REF_CLS_MAP.items()):
+        args = {**REQUIRED_ARGS.get(name, {}), **WINDOW}
+        if disc:
+            args["type"] = disc[0]
+        cfg[f"entry_{i}"] = {"adapter": {"module": f"biocypher_metta.adapters.{module}",
+                                         "cls": cls, "args": args}}
+    path = tmp_path / "adapters_config.yaml"
+    path.write_text(yaml.safe_dump(cfg, sort_keys=False))
+    translated = pipeline.translate_reference_config(path)
+    assert [c["adapter"] for c in translated] == list(pipeline._REF_CLS_MAP.values())
+    ctx = _empty_context(spark)
+    for entry in translated:
+        typed, atoms, _ = pipeline.PIPELINE_REGISTRY[entry["adapter"]](ctx, **entry["args"])
+        assert atoms.columns == ["atom"], entry
+    refused = set()
+    for name, run in pipeline.PIPELINE_REGISTRY.items():
+        try:
+            run(ctx, **{**REQUIRED_ARGS.get(name, {}), **WINDOW})
+        except TypeError as err:
+            assert "unexpected keyword argument" in str(err), (name, err)
+            refused.add(name)
+    assert refused == pipeline._WINDOWLESS
 
 
 def test_streaming_stateful_dedup(spark, tmp_path):
@@ -307,17 +344,22 @@ def _rsid_dim(spark, rows: list[tuple]):
                             "rsid string, chr string, pos long")
 
 
-def test_every_registry_entry_builds_on_empty_input(spark, monkeypatch):
-    """All 40 entries build over empty documents and dimensions: each
-    returns the frame shape `build` selects from, and their union renders
-    no atom. Entries are recorded as `build` calls them, so each plan is
-    built once."""
+def _empty_context(spark) -> pipeline.PipelineContext:
+    """Empty documents, and every dimension an entry reads, empty."""
     docs = _documents(spark, {})
     dim_frames = {name: _key_value(spark, {}) for name in KEY_VALUE_DIMS}
     dim_frames["dbsnp_rsid"] = _rsid_dim(spark, [])
     dim_frames["ontology_triples"] = parse_ntriples(span_lines(docs, "ontology"))
     dim_frames["liftover"] = chain_blocks(spark, ChainLifter([]))
-    ctx = pipeline.PipelineContext(spark, docs, REGISTRY, dims=dim_frames)
+    return pipeline.PipelineContext(spark, docs, REGISTRY, dims=dim_frames)
+
+
+def test_every_registry_entry_builds_on_empty_input(spark, monkeypatch):
+    """All 40 entries build over empty documents and dimensions: each
+    returns the frame shape `build` selects from, and their union renders
+    no atom. Entries are recorded as `build` calls them, so each plan is
+    built once."""
+    ctx = _empty_context(spark)
     assert len(pipeline.PIPELINE_REGISTRY) == 40
     built = {}
 
@@ -373,17 +415,27 @@ def test_no_entry_plan_runs_python(spark):
 CALL_SET_ARGS = {"direction", "alias_df", "rnacentral_map"}
 
 
+def _calls(tree: ast.AST):
+    """(qualifier, name, call) for every call `name(...)` or
+    `qualifier.name(...)` in `tree`; qualifier is the plain name before
+    the dot, else None."""
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        func = node.func
+        if isinstance(func, ast.Name):
+            yield None, func.id, node
+        elif isinstance(func, ast.Attribute):
+            qualifier = func.value.id if isinstance(func.value, ast.Name) else None
+            yield qualifier, func.attr, node
+
+
 def test_adapter_options_are_set_by_a_caller():
     """Every defaulted parameter of an adapter function that `pipeline`
     calls is one a config can set (`_PASSTHROUGH_ARGS`) or one the
     entries set themselves: an option no caller sets is dead code."""
-    import ast
-    import inspect
-
     tree = ast.parse(inspect.getsource(pipeline))
-    called = {(node.func.value.id, node.func.attr) for node in ast.walk(tree)
-              if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
-              and isinstance(node.func.value, ast.Name)}
+    called = {(qualifier, name) for qualifier, name, _ in _calls(tree) if qualifier}
     allowed = pipeline._PASSTHROUGH_ARGS | CALL_SET_ARGS
     unset, checked = {}, 0
     for mod_name, attr in sorted(called):
@@ -442,9 +494,7 @@ def test_forgedb_edges_render_with_context_registry(spark):
 
 
 # Imports everything the KG build path uses, in a fresh interpreter so no
-# other test's imports leak in, then prints every loaded module that lies
-# outside that path: the operator library, the driver gate registry and
-# pandas (the KG path runs no Python worker).
+# other test's imports leak in, then prints every loaded module.
 _KG_PATH_IMPORTS = """
 import importlib, importlib.util, pkgutil, sys
 sys.path.insert(0, sys.argv[1])
@@ -458,18 +508,125 @@ for sub in ("adapters", "sources", "functions"):
 for name in ("pipeline", "sinks", "serializer", "lineage", "canonicalize",
              "linking", "dims", "query"):
     importlib.import_module("biocypher_metta_spark." + name)
-print("\\n".join(m for m in sorted(sys.modules)
-                if m.startswith("biocypher_metta_spark.operators")
-                or "entry_queries" in m or m == "pandas"))
+print("\\n".join(sorted(sys.modules)))
 """
 
 
-def test_kg_path_loads_no_operator_or_gate_module():
-    repo = Path(__file__).resolve().parent.parent
+REPO = Path(__file__).resolve().parent.parent
+
+
+def _kg_path_modules() -> list[str]:
     out = subprocess.run(
-        [sys.executable, "-c", _KG_PATH_IMPORTS, str(repo)],
+        [sys.executable, "-c", _KG_PATH_IMPORTS, str(REPO)],
         capture_output=True, text=True, check=True, timeout=300)
-    assert out.stdout.split() == []
+    return out.stdout.split()
+
+
+def test_kg_path_loads_no_operator_or_gate_module():
+    """Nothing outside the KG path loads with it: not the operator
+    library, the driver gate registry or pandas (the KG path runs no
+    Python worker)."""
+    assert [m for m in _kg_path_modules()
+            if m.startswith("biocypher_metta_spark.operators")
+            or "entry_queries" in m or m == "pandas"] == []
+
+
+def _positional(fn) -> list[str]:
+    """Parameter names of a `def` a call can pass by position, without
+    a method's self/cls."""
+    names = [a.arg for a in fn.args.posonlyargs + fn.args.args]
+    return names[1:] if names[:1] in (["self"], ["cls"]) else names
+
+
+def _call_sites(paths) -> dict:
+    """callee name -> its call sites in `paths`, each (number of
+    positional arguments, keywords, forwards). A call with `*args` or
+    `**kwargs` counts as passing every parameter. `forwards` maps the
+    position or keyword of an argument that is the calling function's
+    own defaulted parameter to (calling function, parameter, position):
+    such an argument sets the callee's option only where a caller sets
+    the calling function's."""
+    sites = {}
+    for path in paths:
+        tree = ast.parse(path.read_text())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            pos = _positional(fn)
+            params = fn.args.posonlyargs + fn.args.args
+            defaulted = {a.arg for a in params[len(params) - len(fn.args.defaults):]} | {
+                a.arg for a, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults) if d}
+            for _, name, call in _calls(fn):
+                forwards = {}
+                for key, arg in [*enumerate(call.args), *((k.arg, k.value) for k in call.keywords)]:
+                    if isinstance(arg, ast.Name) and arg.id in defaulted:
+                        forwards[key] = (fn.name, arg.id, pos.index(arg.id) if arg.id in pos else None)
+                sites.setdefault(id(call), (name, call, forwards))
+        for _, name, call in _calls(tree):
+            sites.setdefault(id(call), (name, call, {}))
+    by_name = {}
+    for name, call, forwards in sites.values():
+        star = any(isinstance(a, ast.Starred) for a in call.args)
+        kws = {k.arg for k in call.keywords}
+        n_pos = float("inf") if star else len(call.args)
+        if None in kws:
+            n_pos, kws = float("inf"), kws | {"*"}
+        by_name.setdefault(name, []).append((n_pos, kws, forwards))
+    return by_name
+
+
+def _is_set(sites: dict, name: str, param: str, index, seen=frozenset()) -> bool:
+    """Whether some call of `name` passes `param` (at `index` when it
+    can go by position), following forwarded arguments to their callers."""
+    if (name, param) in seen:
+        return False
+    for n_pos, kws, forwards in sites.get(name, []):
+        if param in kws or "*" in kws:
+            key = param
+        elif index is not None and index < n_pos:
+            key = index
+        else:
+            continue
+        if key not in forwards or _is_set(sites, *forwards[key], seen | {(name, param)}):
+            return True
+    return False
+
+
+def test_kg_path_options_are_set_by_a_caller():
+    """Every defaulted parameter of a public function or method of the
+    modules the KG path loads (the adapters aside, which the test above
+    covers) is passed, by keyword or by position, by some call in the
+    repository's Python files: an option no caller sets is dead code.
+    An argument that only forwards the calling function's own option
+    counts where that option is set."""
+    import importlib
+
+    modules = [importlib.import_module(m) for m in _kg_path_modules()
+               if m.startswith("biocypher_metta_spark")
+               and not m.startswith("biocypher_metta_spark.adapters")]
+    sites = _call_sites(p for p in REPO.rglob("*.py")
+                        if not any(part.startswith(".") for part in p.relative_to(REPO).parts))
+    unset, checked = [], 0
+    for mod in modules:
+        for name, obj in vars(mod).items():
+            if name.startswith("_") or getattr(obj, "__module__", None) != mod.__name__:
+                continue
+            funcs = [(name, obj)] if inspect.isfunction(obj) else [
+                (m, inspect.unwrap(getattr(obj, m))) for m in vars(obj)
+                if not m.startswith("_") and inspect.isroutine(getattr(obj, m))
+            ] if inspect.isclass(obj) else []
+            for fname, fn in funcs:
+                checked += 1
+                params = [p for p in inspect.signature(fn).parameters.values()
+                          if p.name not in ("self", "cls")]
+                pos = [p.name for p in params
+                       if p.kind in (p.POSITIONAL_ONLY, p.POSITIONAL_OR_KEYWORD)]
+                for p in params:
+                    if p.default is not p.empty and not _is_set(
+                            sites, fname, p.name, pos.index(p.name) if p.name in pos else None):
+                        unset.append(f"{mod.__name__}.{fname}({p.name})")
+    assert checked >= 100
+    assert unset == [], "\n".join(unset)
 
 
 def test_lines_keyed_reads_spans_without_media_ref(spark, tmp_path):
